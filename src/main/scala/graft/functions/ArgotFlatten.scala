@@ -30,6 +30,12 @@ import org.apache.spark.sql.functions.udf
   *
   * Output is `Map[String, Array[String]]` — the shape Solr dynamic
   * fields expect and what the chunked sink serializes back to NDJSON.
+  *
+  * Pipelines parse each record once: [[parseFlatten]] returns the
+  * failure reason and the flat map from one Jackson parse, so the
+  * reindex job can cache that struct and serve both the sink and its
+  * soft-error count from it.  [[flattenArgot]] and [[parseError]] are
+  * the single-purpose column forms.
   */
 object ArgotFlatten {
 
@@ -43,8 +49,8 @@ object ArgotFlatten {
     else "_t"
 
   /** Pure flatten: JSON text → flat multi-valued map.  Invalid JSON or
-    * non-object roots yield an empty map (soft error — callers count
-    * them via [[flattenCounted]] / ErrorCollector if they care).
+    * non-object roots yield an empty map; callers that must count such
+    * soft errors use [[flattenEither]] or [[parseFlatten]].
     */
   def flatten(json: String): Map[String, Seq[String]] =
     flattenEither(json).getOrElse(Map.empty)
@@ -94,10 +100,7 @@ object ArgotFlatten {
 
   /** Column form for DataFrame pipelines:
     * `df.withColumn("flat", ArgotFlatten.flattenArgot($"content"))`.
-    * A Scala UDF (not codegen'd) — acceptable because the transform is
-    * once-per-record CPU work dominated by JSON parsing either way; a
-    * Catalyst Expression promotion is the flagged follow-up if bench
-    * demands (SURVEY.md §4.2).
+    * A Scala UDF (not codegen'd): the cost is the JSON parse either way.
     */
   val flattenArgot: Column => Column = {
     val f = udf((s: String) => flatten(s))
@@ -113,6 +116,23 @@ object ArgotFlatten {
     */
   val parseError: Column => Column = {
     val f = udf((s: String) => flattenEither(s).left.toOption.orNull)
+    (c: Column) => f(c)
+  }
+
+  /** Result of one parse: exactly one of the fields is null. */
+  final case class Parsed(err: String, flat: Map[String, Seq[String]])
+
+  /** Both of the above from one parse:
+    * `struct<err: string, flat: map<string, array<string>>>`.
+    * Split the struct only after a plan boundary (a persist): a
+    * projection of `p.err` and `p.flat` collapsed onto the UDF call
+    * would evaluate the UDF once per extracted field.
+    */
+  val parseFlatten: Column => Column = {
+    val f = udf((s: String) => flattenEither(s) match {
+      case Left(err) => Parsed(err, null)
+      case Right(flat) => Parsed(null, flat)
+    })
     (c: Column) => f(c)
   }
 }

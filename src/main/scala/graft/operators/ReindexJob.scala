@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * table in SURVEY.md §3.1):
   *
   *   preflight(source, sink) → lockfile → scan → filter/resume →
-  *   flatten+suffix → chunked idempotent sink → checkpoint → release
+  *   flatten+suffix → enrich → persist → chunked idempotent sink +
+  *   soft-error count → checkpoint → release
   *
   * What the thread/process choreography becomes (SURVEY §3.1): the
   * bounded file channel and worker pool are Spark task scheduling; the
@@ -64,46 +65,45 @@ object ReindexJob {
       return Left(Seq(s"another reindex holds ${lock.path}" +
         lock.holderPid.map(p => s" (pid $p)").getOrElse("")))
     try {
-      // scan → (source applies NOT-deleted + resume) → flatten+suffix.
-      // Records whose content fails to flatten are SKIPPED (not
-      // indexed) and exactly counted — shipping an empty flat map to
-      // the sink would plant broken documents in the index.  The
-      // flattened map rides along as a column so the sink's NDJSON
-      // serialization carries the Solr dynamic fields.
-      val docs = source.load(spark)
-        .withColumn("err", ArgotFlatten.parseError(col("content")))
-      val clean = docs.filter(col("err").isNull).drop("err")
-        .withColumn("flat", ArgotFlatten.flattenArgot(col("content")))
-      // authority enrichment (O8) between flatten and sink — the
-      // reference's `argot ingest -a --redis-url` step.  The enriched
-      // frame is persisted so the sink's range-partition SAMPLING pass
-      // reads the cache instead of re-running the mapPartitions
-      // lookups — without it every reindex run doubles the mget load
-      // on the external store (a scan of local cache is cheaper than a
-      // second full round-trip sweep of a KV cluster).
-      val toSink = store.map(_.enrich(clean).persist()).getOrElse(clean)
-      val written =
-        try sink.write(toSink)
-        finally if (store.isDefined) { toSink.unpersist(); () }
-      // Exact soft-error surfacing (fixes reference B10): parse
-      // failures are counted with a dedicated aggregation — an
-      // accumulator inside the flatten would over-count whenever the
-      // sink's range-partition sampling evaluates the plan twice.
-      val errDf = docs.filter(col("err").isNotNull).select(col("id"), col("err"))
-        .persist() // count + sample below: one scan/parse, not two
-      val (parseErrors, parseSamples) =
-        try {
-          val n = errDf.count()
-          val samples =
-            if (n == 0) Seq.empty[String]
-            else errDf.orderBy(col("id")).limit(5).collect()
-              .map(r => s"doc ${r.getString(0)}: ${r.getString(1)}").toSeq
-          (n, samples)
-        } finally { errDf.unpersist(); () }
-      val sinkErrCount = sinkErrors.map(_.count).getOrElse(0L)
-      val sinkSamples = sinkErrors.map(_.report).getOrElse(Seq.empty)
-      Right(Result(written, parseErrors + sinkErrCount,
-        parseSamples ++ sinkSamples, sink.checkpoint()))
+      // scan → (source applies NOT-deleted + resume) → one parse per
+      // doc: `p` carries the failure reason and the flattened map
+      // (Solr dynamic fields) from a single flatten.  Authority
+      // enrichment (O8, the reference's `argot ingest -a
+      // --redis-url` step) runs on that frame when a store is wired.
+      //
+      // The frame is persisted once and serves every later job: the
+      // sink's range-partition sampling pass materializes it, the
+      // write and the soft-error count read the cache.  So each doc is
+      // scanned once, parsed once and looked up in the store once.
+      // The struct is split only above the cache; split below it, the
+      // projection could collapse onto the UDF and parse twice.
+      val loaded = source.load(spark)
+      val parsed = loaded.withColumn("p", ArgotFlatten.parseFlatten(col("content")))
+      val cached = store.map(_.enrich(parsed)).getOrElse(parsed).persist()
+      try {
+        // Records whose content fails to flatten are SKIPPED (not
+        // indexed): shipping an empty flat map would plant broken
+        // documents in the index.  Columns reach the sink in the
+        // order source, flat, enrichment.
+        val added = cached.columns.filterNot((loaded.columns :+ "p").contains)
+        val toSink = cached.filter(col("p.err").isNull)
+          .select(loaded.columns.map(col) ++ (col("p.flat").as("flat") +: added.map(col)): _*)
+        val written = sink.write(toSink)
+        // Exact soft-error surfacing (fixes reference B10): an ordinary
+        // count over the cache, not an accumulator inside the flatten,
+        // which would over-count whenever the sink's sampling pass
+        // evaluates the plan twice.
+        val errDf = cached.filter(col("p.err").isNotNull).select(col("id"), col("p.err"))
+        val parseErrors = errDf.count()
+        val parseSamples =
+          if (parseErrors == 0) Seq.empty[String]
+          else errDf.orderBy(col("id")).limit(5).collect()
+            .map(r => s"doc ${r.getString(0)}: ${r.getString(1)}").toSeq
+        val sinkErrCount = sinkErrors.map(_.count).getOrElse(0L)
+        val sinkSamples = sinkErrors.map(_.report).getOrElse(Seq.empty)
+        Right(Result(written, parseErrors + sinkErrCount,
+          parseSamples ++ sinkSamples, sink.checkpoint()))
+      } finally { cached.unpersist(); () }
     } finally lock.release()
   }
 }

@@ -21,7 +21,10 @@ final class ErrorCollector private (
     val samples: CollectionAccumulator[String],
     maxSamples: Int) extends Serializable {
 
-  /** Record a soft error from inside a task. */
+  /** Record a soft error from inside a task.  The sample check sees
+    * only this task's copy of the accumulator, so it bounds each task;
+    * [[report]] applies the cap to the merged samples.
+    */
   def record(context: String, e: Throwable): Unit = {
     errorCount.add(1L)
     if (samples.value.size < maxSamples)
@@ -36,7 +39,7 @@ final class ErrorCollector private (
   def count: Long = errorCount.value
   def report: Seq[String] = {
     import scala.jdk.CollectionConverters._
-    samples.value.asScala.toSeq
+    samples.value.asScala.take(maxSamples).toSeq
   }
 }
 

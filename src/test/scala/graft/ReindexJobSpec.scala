@@ -1,12 +1,15 @@
 package graft
 
 import graft.config.ReindexConfig
+import graft.functions.ArgotFlatten
 import graft.operators.{ReindexJob, SkewJoin, Similarity}
 import graft.sinks.NdjsonDirSink
-import graft.sources.{DocSource, JdbcDocSource, ParquetDocSource}
+import graft.sources.{DocSource, InMemoryKvTransport, JdbcDocSource, KvAuthorityStore, ParquetDocSource}
 import graft.util.Lockfile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicLong
 
 /** The composed pipeline (SURVEY §3.1 lifecycle) plus the remaining
   * source/scale utilities.
@@ -27,6 +30,98 @@ class ReindexJobSpec extends SparkSuite {
     (0 until 500).map(i => (i.toString, s"src${i % 5}", s"""{"title":"doc $i","n":$i}"""))
       .toDF("doc_id", "source", "text").write.parquet(dir)
     dir
+  }
+
+  /** 2000 docs in 4 files, ids "0".."1999", 5 owners; every 97th doc
+    * is malformed (truncated JSON, or a non-object root).
+    */
+  private lazy val mixedCorpus: String = {
+    val dir = Files.createTempDirectory("graft-mixed").toString + "/docs.parquet"
+    (0 until 2000).map { i =>
+      val text =
+        if (i % 97 == 5) s"""{"title":"doc $i""""
+        else if (i % 97 == 50) s"[$i]"
+        else s"""{"title":"doc $i","n":$i,"tags":["a$i",${i % 7}],"x":{"ok":${i % 2 == 0}}}"""
+      (i.toString, s"src${i % 5}", text)
+    }.toDF("doc_id", "source", "text").repartition(4).write.parquet(dir)
+    dir
+  }
+  private def mixedBad: Seq[String] =
+    (0 until 2000).filter(i => i % 97 == 5 || i % 97 == 50).map(_.toString)
+
+  /** src4 has no authority record: its docs are enriched with NULL. */
+  private def kvStore = new KvAuthorityStore(
+    new InMemoryKvTransport((0 until 4).map(o => s"src$o" -> s"auth:src$o").toMap), batchSize = 64)
+
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    ()
+  }
+
+  /** Every NDJSON line a chunked sink wrote, in chunk order (part files
+    * are named by range partition, so the order is the global id order).
+    */
+  private def sinkBytes(dir: Path): String = {
+    val files = new java.io.File(dir.toString).listFiles()
+      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+    files.map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
+  }
+
+  test("one scan per run: the source is read once, with authorities and soft errors") {
+    val out = Files.createTempDirectory("graft-scan")
+    val scanned = spark.read.parquet(mixedCorpus).count()
+    val recordsRead, tasks = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+          tasks.incrementAndGet()
+          ()
+        }
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    val r =
+      try ReindexJob.run(spark, conf.copy(authorities = true), new ParquetDocSource(mixedCorpus),
+          new NdjsonDirSink(out.toString + "/docs", chunkSize = 300),
+          Lockfile.default(out.toString), authorityStore = Some(kvStore))
+      finally { drainListenerBus(); spark.sparkContext.removeSparkListener(listener) }
+    val res = r.toOption.get
+    // a read of the cache counts one record per cached column batch, at
+    // most one per task here (every partition is smaller than a batch);
+    // a second scan of the source would add `scanned` more
+    val fromCache = recordsRead.get - scanned
+    assert(fromCache >= 0 && fromCache <= tasks.get,
+      s"records read ${recordsRead.get} for $scanned scanned rows over ${tasks.get} tasks")
+    assert(res.docsWritten + res.softErrors == scanned)
+    assert(res.softErrors == mixedBad.size)
+    val lowest = mixedBad.sorted.take(5)
+    assert(res.errorSamples.map(_.takeWhile(_ != ':')) == lowest.map(id => s"doc $id"), res.errorSamples)
+  }
+
+  test("sink output is byte-identical to the flatten-then-enrich frame, with and without a kv store") {
+    for (withStore <- Seq(false, true)) {
+      val out = Files.createTempDirectory("graft-bytes")
+      val source = new ParquetDocSource(mixedCorpus)
+      val store = Option.when(withStore)(kvStore)
+      val r = ReindexJob.run(spark, conf.copy(authorities = withStore), source,
+        new NdjsonDirSink(out.toString + "/job", chunkSize = 300),
+        Lockfile.default(out.toString), authorityStore = store)
+      assert(r.toOption.get.docsWritten == 2000 - mixedBad.size)
+      // the columns in the order id, txn_id, owner, content, flat[, authority]
+      val flat = source.load(spark)
+        .filter(ArgotFlatten.parseError(col("content")).isNull)
+        .withColumn("flat", ArgotFlatten.flattenArgot(col("content")))
+      new NdjsonDirSink(out.toString + "/ref", chunkSize = 300)
+        .write(store.map(_.enrich(flat)).getOrElse(flat))
+      val got = sinkBytes(out.resolve("job"))
+      assert(got == sinkBytes(out.resolve("ref")), s"withStore=$withStore")
+      val keys = "\"([a-z_]+)\":".r.findAllMatchIn(got.linesIterator.next()).map(_.group(1)).toSeq
+      val order = Seq("id", "txn_id", "owner", "content", "flat") ++ Option.when(withStore)("authority")
+      assert(keys.filter(order.contains).distinct == order, keys)
+    }
   }
 
   test("e2e: parquet source → flatten → chunked ndjson sink → checkpoint") {

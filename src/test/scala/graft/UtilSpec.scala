@@ -290,4 +290,13 @@ class ErrorCollectorSpec extends SparkSuite {
     assert(ec.report.head.contains("IllegalStateException"))
   }
 
+  test("the sample cap holds per job, not per task") {
+    val ec = ErrorCollector(spark.sparkContext, maxSamples = 3)
+    spark.sparkContext.parallelize(0 until 40, 4).foreach { i =>
+      ec.record(s"rec $i", new IllegalStateException(s"bad $i"))
+    }
+    assert(ec.count == 40)
+    assert(ec.report.size == 3, ec.report)
+  }
+
 }
