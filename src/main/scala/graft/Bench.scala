@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Harness
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
@@ -68,19 +69,6 @@ object Bench {
       }
     }
   }
-
-  /** Drain the async listener bus so each query's task-end events are
-    * attributed to it, not the next one. `listenerBus` and
-    * `waitUntilEmpty` are private[spark], so go through reflection;
-    * fall back to a fixed sleep if the internals move.
-    */
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      ()
-    } catch { case _: Throwable => Thread.sleep(50) }
 
   /** Per-query seconds from the newest usable committed
     * `BENCH_r{N}.json` in the working directory, keyed by the short
@@ -213,13 +201,7 @@ object Bench {
         case c => c.toString
       } + "\""
 
-    // Warm up the JVM (codegen compiler, parquet reader, shuffle
-    // machinery) so per-query timings measure the query, not first-run
-    // JIT: without this the first query absorbs ~7s of fixed startup.
-    try {
-      spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-      Tables.lineitem(spark, sfDir).limit(1000).write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    Harness.warmUp(spark, sfDir)
 
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
@@ -253,7 +235,7 @@ object Bench {
         // across the suite until a GC-driven ContextCleaner sweep
         spark.catalog.clearCache()
         graft.util.Pins.releaseAll(spark)
-        drainListenerBus(spark)
+        Harness.drainListenerBus(spark)
         ioStats ::= (name, (io.recordsRead.get - r0, io.shuffleBytes.get - s0))
         if (ok) sec else -1.0
       }.takeWhile(_ >= 0).toSeq // a failing rep records the error and stops
@@ -277,7 +259,7 @@ object Bench {
         catch { case _: Throwable => () }
         spark.catalog.clearCache()
         graft.util.Pins.releaseAll(spark)
-        drainListenerBus(spark) // keep warm-up task events out of rep 1's I/O delta
+        Harness.drainListenerBus(spark) // keep warm-up task events out of rep 1's I/O delta
       }
       val times = runReps(name, fn)
       name -> (if (times.length < reps) -1.0 else times.min)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Harness
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -36,28 +37,14 @@ object PlanDump {
         tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
       }
     })
-    def drain(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        ()
-      } catch { case _: Throwable => Thread.sleep(100) }
-
-    // warm-up (same rationale as Bench)
-    try {
-      spark.range(1000000).selectExpr("sum(id)")
-        .write.format("noop").mode("overwrite").save()
-      Tables.lineitem(spark, sfDir).limit(1000)
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    Harness.warmUp(spark, sfDir)
 
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"PROF $name UNKNOWN")
         case Some(fn) =>
           try {
-            drain()
+            Harness.drainListenerBus(spark)
             val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
             val t = System.nanoTime()
             val df = fn(spark, sfDir)
@@ -73,7 +60,7 @@ object PlanDump {
             val sec = (System.nanoTime() - t) / 1e9
             spark.catalog.clearCache()
             graft.util.Pins.releaseAll(spark)
-            drain()
+            Harness.drainListenerBus(spark)
             println(f"PROF $name%-28s sec=$sec%7.2f jobs=${jobs.get - j0}%3d " +
               s"stages=${stages.get - s0} tasks=${tasks.get - t0}")
           } catch {

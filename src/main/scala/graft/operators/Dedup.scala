@@ -1606,13 +1606,7 @@ object Dedup {
   }
 
   /** Positional k-grams keyed by their 60-bit content hash — one row
-    * per (doc, position), exposed unexecuted for the q296 plan pin.
-    */
-  def positionalGrams(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    positionalGramsFrom(Tables.documents(spark, dir), k)
-
-  /** Same over an arbitrary (doc_id, text) frame — the entry the
-    * crafted-corpus property spec drives.
+    * per (doc, position), over an arbitrary (doc_id, text) frame.
     */
   def positionalGramsFrom(docs: DataFrame, k: Int): DataFrame =
     positionalGramsFromTokens(

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: `chunked` computes its global ranks with the two-pass
   * range-partition + offset pattern (no single-partition window); the
-  * production write path in NdjsonDirSink reaches the same chunk
-  * contract with repartitionByRange + sortWithinPartitions +
-  * maxRecordsPerFile — no rank materialization at all (SURVEY.md §7.3).
+  * production write path reaches the same chunk contract without any
+  * rank: both sinks (NdjsonDirSink, BatchedUpsertSink) write through
+  * one repartitionByRange + sortWithinPartitions path and cut each
+  * id-ordered partition into ≤ chunkSize chunks (SURVEY.md §7.3).
   */
 object Reindex {
 

@@ -32,90 +32,54 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // base table is answered from the rename-published MV artifact
     // (plan substitution with exprId-preserving aliases)
     e.injectOptimizerRule(_ => RewriteToMv)
-    e.injectFunction((
-      FunctionIdentifier("graft_token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "graft_token_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_token_count(string)")
-        TokenCount(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_dot(arrayFloat, arrayFloat)")
-        DotProduct(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_norm"),
-      new ExpressionInfo(classOf[VecNorm].getName, "graft_norm"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_norm(arrayFloat)")
-        VecNorm(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_winnow(text, k, w)")
-        WinnowFingerprints(args.head, GraftExtensions.intLit(args(1)), GraftExtensions.intLit(args(2)))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhashes"),
-      new ExpressionInfo(classOf[MinHashes].getName, "graft_minhashes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_minhashes(text, shingleN, numHashes)")
-        MinHashes(args.head, GraftExtensions.intLit(args(1)), GraftExtensions.intLit(args(2)))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_ln"),
-      new ExpressionInfo(classOf[GraftLn].getName, "graft_ln"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_ln(double)")
-        GraftLn(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_repetition"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "graft_repetition"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_repetition(text)")
-        RepetitionStats(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_jw"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jw"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_jw(string, string)")
-        JaroWinkler(args.head, args(1))
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+  }
+}
+
+object GraftExtensions {
+  /** The engine's SQL functions as (name, expression class, builder):
+    * the one table both `GraftExtensions` (new sessions) and
+    * `RegisterFunctions` (existing sessions) register.  Every builder
+    * checks its arity and names the signature when it fails.
+    */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    fn("graft_token_count", classOf[TokenCount], 1, "graft_token_count(string)") { a =>
+      TokenCount(a.head) },
+    fn("graft_dot", classOf[DotProduct], 2, "graft_dot(arrayFloat, arrayFloat)") { a =>
+      DotProduct(a(0), a(1)) },
+    fn("graft_norm", classOf[VecNorm], 1, "graft_norm(arrayFloat)") { a =>
+      VecNorm(a.head) },
+    fn("graft_winnow", classOf[WinnowFingerprints], 3, "graft_winnow(text, k, w)") { a =>
+      WinnowFingerprints(a.head, intLit(a(1)), intLit(a(2))) },
+    fn("graft_minhashes", classOf[MinHashes], 3, "graft_minhashes(text, shingleN, numHashes)") { a =>
+      MinHashes(a.head, intLit(a(1)), intLit(a(2))) },
+    fn("graft_ln", classOf[GraftLn], 1, "graft_ln(double)") { a =>
+      GraftLn(a.head) },
+    fn("graft_repetition", classOf[RepetitionStats], 1, "graft_repetition(text)") { a =>
+      RepetitionStats(a.head) },
+    fn("graft_jw", classOf[JaroWinkler], 2, "graft_jw(string, string)") { a =>
+      JaroWinkler(a(0), a(1)) },
     // Spark ships a distributed bloom-filter aggregate + membership
     // probe for its own runtime join filters but leaves them out of the
     // public registry; exposing them gives SQL the classic at-scale
     // prefilter (build once over the small side, broadcast the bitmap
     // via a scalar subquery, drop definite-misses before any join).
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_bloom_agg(longCol, estItems, numBits)")
-        new BloomFilterAggregate(args.head,
-          Literal(GraftExtensions.longLit(args(1))), Literal(GraftExtensions.longLit(args(2))))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_might_contain(bloomBinary, longCol)")
-        BloomFilterMightContain(args.head, args(1))
-      }))
-  }
-}
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate], 3, "graft_bloom_agg(longCol, estItems, numBits)") { a =>
+      new BloomFilterAggregate(a.head, Literal(longLit(a(1))), Literal(longLit(a(2)))) },
+    fn("graft_might_contain", classOf[BloomFilterMightContain], 2, "graft_might_contain(bloomBinary, longCol)") { a =>
+      BloomFilterMightContain(a.head, a(1)) })
 
-object GraftExtensions {
+  /** A table row whose builder requires `arity` arguments. */
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): (String, Class[_], Seq[Expression] => Expression) =
+    (name, cls, (args: Seq[Expression]) => { require(args.length == arity, usage); build(args) })
+
   /** Resolve a literal int argument at registration time (k/w/n are
     * plan-shaping constants, not data).
     */
-  private[plans] def intLit(e: Expression): Int = {
+  private def intLit(e: Expression): Int = {
     require(e.foldable, s"expected a literal int, got $e")
     e.eval() match {
       case i: Int => i
@@ -128,7 +92,7 @@ object GraftExtensions {
     * literal always reaches BloomFilterAggregate's type check as
     * LongType regardless of how the SQL parser typed the number.
     */
-  private[plans] def longLit(e: Expression): Long = {
+  private def longLit(e: Expression): Long = {
     require(e.foldable, s"expected a literal long, got $e")
     e.eval() match {
       case i: Int => i.toLong

@@ -1,49 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Registration helper for sessions that already exist (tests, REPLs —
-  * `withExtensions` only applies at session construction).
+  * `withExtensions` only applies at session construction).  Registers
+  * the same table as [[GraftExtensions]].
   */
 object RegisterFunctions {
-  def apply(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_norm", (args: Seq[Expression]) => VecNorm(args.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", (args: Seq[Expression]) =>
-        WinnowFingerprints(args.head, GraftExtensions.intLit(args(1)), GraftExtensions.intLit(args(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhashes", (args: Seq[Expression]) =>
-        MinHashes(args.head, GraftExtensions.intLit(args(1)), GraftExtensions.intLit(args(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ln", (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_ln(double)")
-        GraftLn(args.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition", (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_repetition(text)")
-        RepetitionStats(args.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jw", (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_jw(string, string)")
-        JaroWinkler(args(0), args(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_bloom_agg(longCol, estItems, numBits)")
-        new BloomFilterAggregate(args.head,
-          Literal(GraftExtensions.longLit(args(1))), Literal(GraftExtensions.longLit(args(2))))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain", (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_might_contain(bloomBinary, longCol)")
-        BloomFilterMightContain(args.head, args(1))
-      }, "built-in")
-  }
+  def apply(spark: SparkSession): Unit =
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

@@ -1,13 +1,14 @@
 package graft.sinks
 
 import graft.util.{ErrorCollector, HealthCheck}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Document sinks (reference O9/O6): chunked, idempotent-by-id,
   * checkpoint-friendly.  Two impls — an NDJSON directory sink (test /
   * zero-egress) and a Solr-style batched upsert sink with a pluggable
-  * transport — sharing the chunking and resume contract:
+  * transport — that write through one ordering and accounting path
+  * ([[IdOrder]]) and so share the chunking and resume contract:
   *
   *  - ≤ chunkSize records per emitted chunk (reference driver.go:199-206);
   *  - no empty trailing chunk when the row count is an exact multiple
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    resume checkpoint (reference README.md:80-88, B4 semantics).
   */
 trait DocSink extends HealthCheck {
-  /** Write the 4-column document frame; returns the number of rows
-    * written (driver-visible, from sink-side accounting).
+  /** Write the document frame; returns the number of rows written
+    * (from sink-side accounting).
     */
   def write(df: DataFrame): Long
 
@@ -38,45 +39,50 @@ trait DocSink extends HealthCheck {
   def writeBatch(df: DataFrame, batchId: Long): Long = write(df)
 }
 
-/** Shared machinery for chunked directory sinks.  Spark-native
+/** The one ordering and accounting path of both sinks.  Spark-native
   * chunking: repartitionByRange on id (range partitioner ⇒
-  * id-contiguous partitions, no global sort barrier) +
-  * sortWithinPartitions + `maxRecordsPerFile` ⇒ every output file
-  * holds ≤ chunkSize id-ordered records, and Spark never creates an
-  * empty file (B8 impossible by construction).
+  * id-contiguous partitions, no global sort barrier, one partition per
+  * core via defaultParallelism) + sortWithinPartitions ⇒ each sink cuts
+  * id-ordered chunks of ≤ chunkSize from its partitions.
+  *
+  * Count and checkpoint ride the delivery itself via observe(): a
+  * post-write df.agg would re-execute the whole upstream pipeline (at
+  * 100 TB, a second source scan per write).  The observe node sits
+  * ABOVE the range exchange: the range partitioner's sampling pass
+  * evaluates only the exchange's child, so the metrics count each
+  * delivered row exactly once.  Anything a sink derives per row (the
+  * upsert sink's JSON) belongs above the exchange too, or the sampling
+  * pass computes it as well.
   */
-sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int, partitions: Int)
-    extends DocSink {
+private[sinks] object IdOrder {
+  /** Run `deliver` (one action) on `df` in id order; returns the rows
+    * it saw and their max id (None when there were none).
+    */
+  def apply(df: DataFrame)(deliver: DataFrame => Unit): (Long, Option[String]) = {
+    require(df.columns.contains("id"), "DocSink frames carry an id column")
+    val obs = Observation("graft-sink-" + java.util.UUID.randomUUID)
+    deliver(df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, col("id"))
+      .sortWithinPartitions("id")
+      .observe(obs, count(lit(1)).as("n"), max(col("id")).as("m")))
+    val m = obs.get
+    (m("n").asInstanceOf[Long], Option(m("m").asInstanceOf[String]))
+  }
+}
 
-  /** DataFrameWriter format name ("json", "parquet"). */
-  protected def fmt: String
-  /** Construct the per-batch subdirectory sink of the same kind. */
-  protected def make(dir: String): ChunkedDirSink
-
+/** Filesystem NDJSON sink: each record is one JSON line (explicit
+  * NDJSON — fixes reference B6, which concatenated raw content with no
+  * separator).  `maxRecordsPerFile` cuts each id-ordered partition into
+  * files of ≤ chunkSize records, and Spark never creates an empty file
+  * (B8 impossible by construction).
+  */
+final class NdjsonDirSink(outDir: String, chunkSize: Int) extends DocSink {
+  override def name: String = s"ndjson-dir:$outDir"
   private var lastMax: Option[String] = None
 
   override def write(df: DataFrame): Long = {
-    // partitions=0 → derive from the cluster (defaultParallelism), so
-    // the write fan-out scales with the session instead of a constant
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    require(df.columns.contains("id"), "DocSink frames carry an id column")
-    // count + checkpoint ride the write itself via observe(): a
-    // post-write df.agg would re-execute the whole upstream pipeline
-    // (at 100 TB, a second source scan per write).  The observe node
-    // sits ABOVE the range exchange: the range partitioner's sampling
-    // pass evaluates only the exchange's child, so the metrics count
-    // each written row exactly once.
-    val obs = org.apache.spark.sql.Observation("graft-sink-" + java.util.UUID.randomUUID)
-    df.repartitionByRange(nParts, col("id"))
-      .sortWithinPartitions("id")
-      .observe(obs, count(lit(1)).as("n"), max(col("id")).as("m"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", chunkSize.toLong)
-      .format(fmt).save(outDir)
-    val m = obs.get
-    lastMax = Option(m("m").asInstanceOf[String])
-    m("n").asInstanceOf[Long]
+    val (n, m) = IdOrder(df)(save(outDir))
+    lastMax = m
+    n
   }
 
   override def checkpoint(): Option[String] = lastMax
@@ -87,60 +93,20 @@ sealed abstract class ChunkedDirSink(outDir: String, chunkSize: Int, partitions:
     * checkpoint advances monotonically across batches.
     */
   override def writeBatch(df: DataFrame, batchId: Long): Long = {
-    val sub = make(s"$outDir/batch=$batchId")
-    val n = sub.write(df)
-    lastMax = (lastMax.toSeq ++ sub.checkpoint().toSeq)
-      .reduceOption((a, b) => Ordering[String].max(a, b))
+    val (n, m) = IdOrder(df)(save(s"$outDir/batch=$batchId"))
+    lastMax = (lastMax ++ m).maxOption
     n
   }
+
+  private def save(dir: String)(ordered: DataFrame): Unit =
+    ordered.write.mode("overwrite")
+      .option("maxRecordsPerFile", chunkSize.toLong)
+      .json(dir)
 
   override def healthCheck(): Either[String, Unit] = {
     val parent = new java.io.File(outDir).getAbsoluteFile.getParentFile
     if (parent != null && parent.exists) Right(()) else Left(s"parent dir missing for $outDir")
   }
-}
-
-/** Filesystem NDJSON sink: each record is one JSON line (explicit
-  * NDJSON — fixes reference B6, which concatenated raw content with no
-  * separator).
-  */
-final class NdjsonDirSink(outDir: String, chunkSize: Int, partitions: Int = 0)
-    extends ChunkedDirSink(outDir, chunkSize, partitions) {
-  override def name: String = s"ndjson-dir:$outDir"
-  override protected def fmt: String = "json"
-  override protected def make(dir: String): ChunkedDirSink =
-    new NdjsonDirSink(dir, chunkSize, partitions)
-}
-
-/** Columnar parquet sink with the same chunking/resume contract as the
-  * NDJSON sink — the engine-native output format (splittable,
-  * predicate-pushdown-able on re-read), for pipelines whose next stage
-  * is another engine job rather than Solr.
-  */
-final class ParquetDirSink(outDir: String, chunkSize: Int, partitions: Int = 0)
-    extends ChunkedDirSink(outDir, chunkSize, partitions) {
-  override def name: String = s"parquet-dir:$outDir"
-  override protected def fmt: String = "parquet"
-  override protected def make(dir: String): ChunkedDirSink =
-    new ParquetDirSink(dir, chunkSize, partitions)
-}
-
-/** Asciibetical max over string ids, merged across tasks — the
-  * checkpoint computed in the delivery pass itself.  null = no rows.
-  */
-private[sinks] final class MaxStringAccumulator
-    extends org.apache.spark.util.AccumulatorV2[String, String] {
-  private var _max: String = null
-  override def isZero: Boolean = _max == null
-  override def copy(): MaxStringAccumulator = {
-    val c = new MaxStringAccumulator; c._max = _max; c
-  }
-  override def reset(): Unit = _max = null
-  override def add(v: String): Unit =
-    if (v != null && (_max == null || v > _max)) _max = v
-  override def merge(o: org.apache.spark.util.AccumulatorV2[String, String]): Unit =
-    add(o.value)
-  override def value: String = _max
 }
 
 /** Transport abstraction for the Solr-style sink: prod wires an HTTP
@@ -187,35 +153,27 @@ final class BatchedUpsertSink(
   private var lastMax: Option[String] = None
 
   override def write(df: DataFrame): Long = {
-    val spark = df.sparkSession
-    val sent = spark.sparkContext.longAccumulator("graft-sink-sent")
-    // checkpoint from per-partition maxima gathered in the SAME pass
-    // that delivers the rows — a post-write df.agg(max) would execute
-    // the whole upstream pipeline a second time.  Accumulator updates
-    // happen inside the action (exactly-once on task success), and max
-    // is idempotent under retry anyway.
-    val maxId = new MaxStringAccumulator
-    spark.sparkContext.register(maxId, "graft-sink-maxid")
     val errs = errors
     val t = transport
     val size = chunkSize
-    val nParts = df.sparkSession.sparkContext.defaultParallelism
-    df.select(col("id"), to_json(struct(df.columns.map(col): _*)).as("doc"))
-      .repartitionByRange(nParts, col("id"))
-      .sortWithinPartitions("id")
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.map { r => maxId.add(r.getString(0)); (r.getString(0), r.getString(1)) }
-          .grouped(size)
-          .foreach { batch =>
-            val clean = errs match {
-              case Some(ec) => batch.flatMap(b => ec.guard(s"doc ${b._1}")(b))
-              case None => batch
+    val (n, m) = IdOrder(df) { ordered =>
+      // the JSON is built above the range exchange, once per doc: the
+      // sampling pass reads only the exchange's child
+      ordered.select(col("id"), to_json(struct(df.columns.map(col): _*)).as("doc"))
+        .foreachPartition { rows: Iterator[Row] =>
+          rows.map(r => (r.getString(0), r.getString(1)))
+            .grouped(size)
+            .foreach { batch =>
+              val clean = errs match {
+                case Some(ec) => batch.flatMap(b => ec.guard(s"doc ${b._1}")(b))
+                case None => batch
+              }
+              if (clean.nonEmpty) t.send(clean)
             }
-            if (clean.nonEmpty) { t.send(clean); sent.add(clean.size.toLong) }
-          }
-      }
-    lastMax = Option(maxId.value)
-    sent.value
+        }
+    }
+    lastMax = m
+    n
   }
 
   override def checkpoint(): Option[String] = lastMax

@@ -1,9 +1,15 @@
 package graft
 
-import graft.sinks.{BatchedUpsertSink, NdjsonDirSink, ParquetDirSink, UpdateTransport}
+import graft.sinks.{BatchedUpsertSink, NdjsonDirSink, UpdateTransport}
 import graft.operators.Reindex
 import graft.sources.NdjsonDocSource
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, StructsToJson}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -24,27 +30,9 @@ class ChunkSinkSpec extends SparkSuite {
   private def jsonFiles(dir: Path): Seq[Path] =
     Files.walk(dir).iterator.asScala.filter(_.toString.endsWith(".json")).toSeq
 
-  test("parquet sink: chunk contract holds and a re-read round-trips exactly") {
-    val out = tmp("graft-pq")
-    val sink = new ParquetDirSink(out.toString + "/out", chunkSize = 64, partitions = 4)
-    assert(sink.write(docsDf) == 500)
-    assert(sink.checkpoint().contains("99"))
-    val files = Files.walk(out.resolve("out")).iterator.asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq
-    assert(files.nonEmpty)
-    val back = spark.read.parquet(out.toString + "/out")
-    assert(back.count() == 500)
-    // per-file chunk bound: no file holds more than chunkSize rows
-    val perFile = back.groupBy(input_file_name()).count()
-      .select("count").as[Long].collect()
-    assert(perFile.forall(_ <= 64), s"chunk overflow: ${perFile.max}")
-    // round-trip equality on the full 4-column payload
-    assert(back.except(docsDf).count() == 0 && docsDf.except(back).count() == 0)
-  }
-
   test("ndjson sink: every chunk file has 1..chunkSize records, total preserved") {
     val out = tmp("graft-chunks")
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 64, partitions = 4)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 64)
     val written = sink.write(docsDf)
     assert(written == 500)
     val sizes = jsonFiles(out.resolve("out")).map(f => Files.readAllLines(f).size)
@@ -55,7 +43,7 @@ class ChunkSinkSpec extends SparkSuite {
   test("ndjson sink: exact multiple of chunkSize leaves no empty chunk (B8)") {
     val out = tmp("graft-exact")
     val df = docsDf.limit(100) // 100 = 4 chunks of 25 exactly
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 25, partitions = 2)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 25)
     sink.write(df)
     val sizes = jsonFiles(out.resolve("out")).map(f => Files.readAllLines(f).size)
     assert(sizes.sum == 100)
@@ -64,12 +52,13 @@ class ChunkSinkSpec extends SparkSuite {
 
   test("ndjson sink: records are well-formed one-per-line JSON (B6) and round-trip") {
     val out = tmp("graft-ndjson")
-    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 200, partitions = 2)
+    val sink = new NdjsonDirSink(out.toString + "/out", chunkSize = 200)
     sink.write(docsDf)
     val back = new NdjsonDocSource(out.toString + "/out").load(spark)
+      .select(docsDf.columns.map(col): _*)
     assert(back.count() == 500)
-    assert(back.select("id").as[String].collect().toSet ==
-      docsDf.select("id").as[String].collect().toSet)
+    // round-trip equality on the full 4-column payload
+    assert(back.except(docsDf).count() == 0 && docsDf.except(back).count() == 0)
   }
 
   test("checkpoint is the asciibetical max id") {
@@ -100,6 +89,46 @@ class ChunkSinkSpec extends SparkSuite {
     assert(sink.checkpoint().contains("99"))
   }
 
+  test("batched upsert sink: an empty frame writes 0, has no checkpoint and sends nothing") {
+    BatchCollector.reset()
+    val sink = new BatchedUpsertSink(BatchCollector, chunkSize = 64)
+    assert(sink.write(docsDf.filter(col("id") === "no such id")) == 0)
+    assert(sink.checkpoint().isEmpty)
+    assert(BatchCollector.sizes().isEmpty)
+  }
+
+  test("batched upsert sink: the JSON is built above the range exchange, once per doc") {
+    // below the exchange, the range partitioner's sampling pass would
+    // serialize every doc and the write would serialize it again
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        if (func == "foreachPartition") plans.add(qe.executedPlan)
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      BatchCollector.reset()
+      assert(new BatchedUpsertSink(BatchCollector, chunkSize = 64).write(docsDf) == 500)
+      graft.util.Harness.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one foreachPartition action, saw ${plans.size}")
+    val ranges = planNodes(plans.peek).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.size == 1, "the sink orders through one range exchange")
+    // to_json is runtime-replaced by an invoke on a StructsToJsonEvaluator
+    def isToJson(e: Expression): Boolean = e match {
+      case _: StructsToJson => true
+      case l: Literal => l.value.isInstanceOf[StructsToJsonEvaluator]
+      case _ => false
+    }
+    val below = planNodes(ranges.head.child).filter(_.expressions.exists(_.exists(isToJson)))
+    assert(below.isEmpty, s"to_json below the range exchange: ${below.map(_.nodeName)}")
+    assert(planNodes(plans.peek).exists(_.expressions.exists(_.exists(isToJson))),
+      "the plan serializes the docs somewhere")
+  }
+
   test("sink accounting is single-pass: count/checkpoint do not re-execute the input") {
     // Count upstream evaluations per row.  The range partitioner's
     // sampling pass reads every input row once, the write/delivery
@@ -113,7 +142,7 @@ class ChunkSinkSpec extends SparkSuite {
 
     val a1 = spark.sparkContext.longAccumulator("evals-dir")
     val out = tmp("graft-onepass")
-    val dirSink = new NdjsonDirSink(out.toString + "/out", chunkSize = 50, partitions = 2)
+    val dirSink = new NdjsonDirSink(out.toString + "/out", chunkSize = 50)
     assert(dirSink.write(metered(a1)) == 100)
     assert(dirSink.checkpoint().contains("99"))
     assert(a1.value <= 200L, s"input evaluated ${a1.value / 100.0}x; expected ≤2x")

@@ -328,6 +328,16 @@ class ReindexJobSpec extends SparkSuite {
     viaCol.foreach { case (id, w, m) => assert(viaSql(id) == ((w, m)), s"doc $id") }
   }
 
+  test("SQL surface: RegisterFunctions registers the extension's table, arity checks included") {
+    val s = spark.newSession()
+    graft.plans.RegisterFunctions(s)
+    val e = intercept[Exception](s.sql("SELECT graft_dot(array(1f))").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("graft_dot(arrayFloat, arrayFloat)")), messages)
+    assert(s.sql("SELECT graft_token_count('a b c')").head().get(0).toString == "3")
+  }
+
   test("topK aggregator matches the window formulation exactly") {
     val agg = Similarity.topKAggregated(spark, sf, numProbes = 3, k = 5)
       .select("probe_id", "neighbor_id", "cos_sim", "rank")
