@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * table in SURVEY.md §3.1):
   *
   *   preflight(source, sink) → lockfile → scan → filter/resume →
-  *   flatten+suffix → enrich → persist → chunked idempotent sink +
+  *   enrich → flatten+suffix → persist → chunked idempotent sink +
   *   soft-error count → checkpoint → release
   *
   * What the thread/process choreography becomes (SURVEY §3.1): the
@@ -65,11 +65,14 @@ object ReindexJob {
       return Left(Seq(s"another reindex holds ${lock.path}" +
         lock.holderPid.map(p => s" (pid $p)").getOrElse("")))
     try {
-      // scan → (source applies NOT-deleted + resume) → one parse per
-      // doc: `p` carries the failure reason and the flattened map
-      // (Solr dynamic fields) from a single flatten.  Authority
-      // enrichment (O8, the reference's `argot ingest -a
-      // --redis-url` step) runs on that frame when a store is wired.
+      // scan → (source applies NOT-deleted + resume) → authority
+      // enrichment when a store is wired (O8, the reference's `argot
+      // ingest -a --redis-url` step) → one parse per doc: `p` carries
+      // the failure reason and the flattened map (Solr dynamic fields)
+      // from a single flatten.  Enrichment runs on the scanned frame,
+      // before the parse: a kv store's cost grows with the width of
+      // the frame it is handed (AuthorityStore), and the source
+      // columns are far narrower than the parsed struct and its map.
       //
       // The frame is persisted once and serves every later job: the
       // sink's range-partition sampling pass materializes it, the
@@ -78,8 +81,8 @@ object ReindexJob {
       // The struct is split only above the cache; split below it, the
       // projection could collapse onto the UDF and parse twice.
       val loaded = source.load(spark)
-      val parsed = loaded.withColumn("p", ArgotFlatten.parseFlatten(col("content")))
-      val cached = store.map(_.enrich(parsed)).getOrElse(parsed).persist()
+      val cached = store.map(_.enrich(loaded)).getOrElse(loaded)
+        .withColumn("p", ArgotFlatten.parseFlatten(col("content"))).persist()
       try {
         // Records whose content fails to flatten are SKIPPED (not
         // indexed): shipping an empty flat map would plant broken

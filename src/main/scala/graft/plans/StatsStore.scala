@@ -182,12 +182,14 @@ object StatsStore {
     val base = new Path(storeDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Map.empty
+    // the caller's regex may hold groups of its own: the version is
+    // the LAST group
     val vRe = s"($baseRe)-v(\\d+)".r
-    val lRe = s"($baseRe)".r
+    val lRe = baseRe.r
     fs.listStatus(base).iterator.map(_.getPath.getName)
       .flatMap {
-        case vRe(b, v) => Some((b, v.toInt))
-        case lRe(b) => Some((b, 0))
+        case vRe(b, more @ _*) => Some((b, more.last.toInt))
+        case n @ lRe(_*) => Some((n, 0))
         case _ => None
       }.toSeq
       .groupBy(_._1).map { case (b, vs) =>

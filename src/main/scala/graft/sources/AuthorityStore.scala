@@ -24,6 +24,12 @@ import org.apache.spark.sql.types.StringType
   * Both append a nullable `authority` string column; docs without an
   * authority record pass through with NULL (the reference indexes
   * un-enriched docs rather than dropping them).
+  *
+  * Width rule: the kv store decodes every column of every row into an
+  * external `Row` and encodes it again, so its cost grows with the
+  * width of the frame, not just its row count.  Callers hand it the
+  * narrowest frame that still carries the key — in `ReindexJob`, the
+  * scanned source columns, before the parse adds the flattened map.
   */
 trait AuthorityStore extends HealthCheck {
   /** Append an `authority` column resolved from the store. */

@@ -1,7 +1,13 @@
 package graft
 
 import graft.operators.{Dedup, EventOps, Multimodal, PipelineAudits, Relational, Similarity}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Batches 17-19 (q306-q315): semantic invariants checked against
   * direct recounts — cluster geometry (silhouette, Davies-Bouldin),
@@ -47,6 +53,54 @@ class Batch17Spec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (r <- rows)
       assert(deg(r.getLong(1)) == r.getLong(2), s"degree recount for supplier ${r.getLong(1)}")
+  }
+
+  test("q307 hits, shuffle score joins: scores equal broadcast mode, one edges-sized exchange per half-step") {
+    val knob = "spark.graft.hits.scoreJoin"
+    assert(spark.conf.getOption(knob).isEmpty, "broadcast is the default mode")
+    val bcast = Relational.hits(spark, sf).collect().toSeq
+    // each half-step's fold is one localCheckpoint action
+    val folds = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        if (func == "localCheckpoint") folds.add(qe.executedPlan)
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // fixture-scale broadcasts off, so the joins show the production
+    // shuffle form instead of broadcasting the small edge set
+    val bcastKnob = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(knob, "shuffle")
+    spark.conf.set(bcastKnob, "-1")
+    spark.listenerManager.register(listener)
+    val shuffled =
+      try Relational.hits(spark, sf).collect().toSeq
+      finally {
+        graft.util.Harness.drainListenerBus(spark)
+        spark.listenerManager.unregister(listener)
+        spark.conf.unset(knob)
+        spark.conf.unset(bcastKnob)
+      }
+    assert(shuffled.nonEmpty && shuffled == bcast, "shuffle mode computes the identical fold")
+    assert(folds.size == 6, s"3 iterations × 2 half-steps, saw ${folds.size} folds")
+    // an exchange is edges-sized when its own map stage scans the
+    // pinned edges: the fold's level-1 (key, _seg) exchange, the one
+    // the recurrence cannot avoid.  Level 2 reads level 1's shuffle
+    // output (≤ width partials per key) and the score side is a
+    // checkpointed node frame, so neither counts.
+    def mapStage(n: SparkPlan): Seq[SparkPlan] = n match {
+      case c: TableCacheQueryStageExec => mapStage(c.plan)
+      case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => Nil
+      case a: AdaptiveSparkPlanExec => mapStage(a.executedPlan)
+      case _ => n +: n.children.flatMap(mapStage)
+    }
+    for ((p, i) <- folds.asScala.zipWithIndex) {
+      val edgeExchanges = planNodes(p).collect {
+        case e: ShuffleExchangeExec
+            if mapStage(e.child).exists(_.isInstanceOf[InMemoryTableScanExec]) => e
+      }
+      assert(edgeExchanges.size == 1,
+        s"half-step $i: ${edgeExchanges.size} edges-sized exchanges: ${edgeExchanges.map(_.outputPartitioning)}")
+    }
   }
 
   test("q308 linkage patterns: pairs partition the blocks, lr positive, all-agree pattern dominates") {

@@ -437,6 +437,24 @@ class Batch28Spec extends SparkSuite {
     } finally graft.util.Fs.deleteRecursively(store)
   }
 
+  test("artifactDirs: a caller regex with its own groups resolves the same serving dirs") {
+    val store = java.nio.file.Files.createTempDirectory("graft-spec-store-groups")
+    try {
+      Seq("probe", "probe-v1", "probe-v2", "other-v5", ".tmp-probe")
+        .foreach(d => new java.io.File(store.toFile, d).mkdirs())
+      def dirs(re: String) = graft.plans.StatsStore.artifactDirs(spark, store.toString, re)
+      val want = Map("probe" -> new org.apache.hadoop.fs.Path(store.toString, "probe-v2").toString)
+      assert(dirs("probe") == want)
+      for (re <- Seq("(probe)", "(pro)(be)", "(p)(r)obe"))
+        assert(dirs(re) == want, s"baseRe $re")
+      assert(dirs("probe|other").keySet == Set("probe", "other"))
+      // a legacy unversioned dir alone serves as version 0
+      new java.io.File(store.toFile, "legacy").mkdirs()
+      assert(dirs("(leg)acy") == Map("legacy" ->
+        new org.apache.hadoop.fs.Path(store.toString, "legacy").toString))
+    } finally graft.util.Fs.deleteRecursively(store)
+  }
+
   test("one publish, many consumers: two registrations off one store, both plans filtered; stored column stats == fresh ANALYZE") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val store = java.nio.file.Files.createTempDirectory("graft-spec-store-amort")

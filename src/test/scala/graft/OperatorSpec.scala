@@ -1592,6 +1592,17 @@ class OperatorSpec extends SparkSuite {
     assert(kappa >= -1.0 && kappa <= 1.0 && po >= 0.0 && po <= 1.0)
   }
 
+  test("centroid_kappa: a BIGINT label column gives the INT-label row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-kappa-long")
+    try {
+      Tables.embeddings(spark, sf).withColumn("label", col("label").cast("bigint"))
+        .write.parquet(s"$dir/embeddings.parquet")
+      val want = Similarity.centroidKappa(spark, sf).collect().toSeq
+      assert(want.head.getLong(1) > 0, "the fixture has agreeing vectors")
+      assert(Similarity.centroidKappa(spark, dir.toString).collect().toSeq == want)
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("split_affinity: Bhattacharyya replayed from the q63 buckets") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
       .as[(Long, String)].collect()

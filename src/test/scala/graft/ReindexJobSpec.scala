@@ -7,9 +7,15 @@ import graft.sinks.NdjsonDirSink
 import graft.sources.{DocSource, InMemoryKvTransport, JdbcDocSource, KvAuthorityStore, ParquetDocSource}
 import graft.util.Lockfile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** The composed pipeline (SURVEY §3.1 lifecycle) plus the remaining
   * source/scale utilities.
@@ -122,6 +128,52 @@ class ReindexJobSpec extends SparkSuite {
       val order = Seq("id", "txn_id", "owner", "content", "flat") ++ Option.when(withStore)("authority")
       assert(keys.filter(order.contains).distinct == order, keys)
     }
+  }
+
+  test("the kv lookup runs on the scanned columns: one parse, above the enrichment, below the cache") {
+    val out = Files.createTempDirectory("graft-order")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val source = new ParquetDocSource(mixedCorpus)
+    spark.listenerManager.register(listener)
+    try ReindexJob.run(spark, conf.copy(authorities = true), source,
+        new NdjsonDirSink(out.toString + "/docs", chunkSize = 300),
+        Lockfile.default(out.toString), authorityStore = Some(kvStore)).toOption.get
+    finally { drainListenerBus(); spark.listenerManager.unregister(listener) }
+    val run = plans.asScala.toSeq.flatMap(planNodes)
+    val cache = run.collectFirst { case s: InMemoryTableScanExec => planNodes(s.relation.cachedPlan) }
+      .getOrElse(fail("the run reads no cache"))
+    def isParse(e: Expression): Boolean = e match {
+      case u: ScalaUDF => u.dataType match {
+        case st: StructType => st.fieldNames.toSeq == Seq("err", "flat")
+        case _ => false
+      }
+      case _ => false
+    }
+    val enrich = cache.collect { case m: MapPartitionsExec => m }
+    assert(enrich.size == 1, "one kv enrichment in the cached plan")
+    // the columns the enrichment decodes into an external Row
+    val rowIn = enrich.head.child match {
+      case d: DeserializeToObjectExec => d.child.output
+      case c => c.output
+    }
+    assert(rowIn.map(_.name) == source.load(spark).columns.toSeq, rowIn)
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case a: ArrayType => hasMap(a.elementType)
+      case _ => false
+    }
+    assert(!rowIn.exists(a => hasMap(a.dataType)), rowIn)
+    val parses = cache.filter(_.expressions.exists(_.exists(isParse)))
+    assert(parses.size == 1, s"one parse in the cached plan: ${parses.map(_.nodeName)}")
+    assert(planNodes(parses.head).exists(_ eq enrich.head), "the parse sits above the enrichment")
+    val outside = run.filter(_.expressions.exists(_.exists(isParse)))
+    assert(outside.isEmpty, s"parse outside the cache: ${outside.map(_.nodeName)}")
   }
 
   test("e2e: parquet source → flatten → chunked ndjson sink → checkpoint") {
