@@ -1948,7 +1948,7 @@ private[graft] trait OraclesC extends OracleHelpers {
         |  CAST(sum(CASE WHEN regexp_matches(text, '[a-z0-9._]+@[a-z0-9.]+') THEN 1 ELSE 0 END) AS BIGINT) AS n_email_docs,
         |  CAST(sum(CASE WHEN regexp_matches(text, '[a-z0-9]{20,}') THEN 1 ELSE 0 END) AS BIGINT) AS n_longtok_docs
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // q277: row_number mirrors the two-pass globalRank; ntile is the
+    // q277: row_number mirrors GlobalPrefix's global rank; ntile is the
     // standard first-buckets-larger split on both engines; the mean
     // percentile divides in ONE pinned order (Δrank / (N−1) / n)
     "q277_quantile_norm" ->
@@ -2034,7 +2034,7 @@ private[graft] trait OraclesC extends OracleHelpers {
         |    / (exp_share * CAST(n_total AS DOUBLE)) AS chi2_term
         |FROM e, n ORDER BY digit""".stripMargin,
     // q282: DuckDB's ntile over the same (score desc, id) order is
-    // bit-equal to the two-pass globalRank + ntileExpr form (q104)
+    // bit-equal to the GlobalPrefix rank + ntileExpr form (q104)
     "q282_lift_table" ->
       """WITH r AS (SELECT doc_id, n_chars,
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,

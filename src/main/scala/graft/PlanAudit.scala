@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Physical-plan audit over every registered query: verifies the
@@ -15,15 +13,6 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
-    def collectAll(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match {
-        case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)
-        case _ => Seq(p)
-      }
-      self ++ p.children.flatMap(collectAll) ++
-        p.subqueries.flatMap(collectAll)
-    }
-
     // With AQE on, WholeStageCodegen is only inserted per-stage at
     // execution time, so the pre-execution plan always showed
     // codegenSpans=0 — a dead metric. The audit inspects the
@@ -35,7 +24,7 @@ object PlanAudit {
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.executedPlan
-        val nodes = collectAll(plan)
+        val nodes = graft.util.Harness.planNodes(plan)
         val names = nodes.map(_.nodeName)
         val scans = nodes.collect {
           case s: org.apache.spark.sql.execution.FileSourceScanExec => s

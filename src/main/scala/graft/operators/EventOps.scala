@@ -367,13 +367,11 @@ object EventOps {
     * or after their first view contribute one integer-µs latency, and
     * the output is one row of exact latency percentiles.
     *
-    * The global rank over per-user latencies deliberately avoids a
-    * single-partition `Window.orderBy` (the naive form funnels every
-    * row through one task): it is the q65 two-pass escape —
-    * repartitionByRange on (lat, user_id), per-partition row_number +
-    * broadcast partition offsets — so the total order is computed
-    * without any single-task bottleneck.  Rank arithmetic is pure
-    * integer per the q122 rule; every output column is BIGINT µs.
+    * The global rank over per-user latencies is GlobalPrefix's
+    * two-pass recipe on (lat, user_id), not a single-partition
+    * `Window.orderBy` (which funnels every row through one task).
+    * Rank arithmetic is pure integer per the q122 rule; every output
+    * column is BIGINT µs.
     */
   def conversionLatency(spark: SparkSession, dir: String,
                         parts: Int = 0): DataFrame = {
@@ -386,21 +384,9 @@ object EventOps {
         min(when(col("event_type") === "purchase", col("us"))).as("fp"))
       .filter(col("fv").isNotNull && col("fp").isNotNull && col("fp") >= col("fv"))
       .select(col("user_id"), (col("fp") - col("fv")).as("lat"))
-    // q65 two-pass global rank: one range shuffle, no 1-task window
-    val sorted = lat
-      .repartitionByRange(nParts, col("lat"), col("user_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false) // pin ONE pid assignment for both branches
-    val counts = sorted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.orderBy(col("pid").asc).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy()))
-      .select("pid", "off", "n")
-    sorted
-      .join(broadcast(offsets), Seq("pid"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("pid").orderBy(col("lat").asc, col("user_id").asc)) + col("off"))
+    GlobalPrefix(lat, nParts, eager = false, keys = Nil,
+        order = Seq(col("lat").asc, col("user_id").asc))(
+        GlobalPrefix.Running("rn", total = Some("n")))
       .agg(
         max(col("n")).as("n_converted"),
         max(when(col("rn") === 1, col("lat"))).as("min_lat_us"),
@@ -765,8 +751,7 @@ object EventOps {
     * a lapsing big spender (win-back list), "411" fresh low-value.
     *
     * Scores come from exact quartile CUT VALUES — order statistics
-    * at ranks ⌈n/4⌉, ⌈n/2⌉, ⌈3n/4⌉ — computed with the q65 two-pass
-    * escape (range shuffle + broadcast partition offsets; NO
+    * at ranks ⌈n/4⌉, ⌈n/2⌉, ⌈3n/4⌉ — ranked by GlobalPrefix (NO
     * single-task global window over users), then applied as
     * broadcast thresholds: score = 1 + (v>q1) + (v>q2) + (v>q3).
     * Value-based scoring means ties share a score deterministically
@@ -800,29 +785,15 @@ object EventOps {
         .select(col("user_id"),
           expr("(ref - last_us) DIV 86400000000").as("r_days"),
           col("f"), col("m")))
-    // exact quartile cuts via the q65 two-pass escape, eager-pinned
-    def cuts(metric: String): DataFrame = {
-      val sorted = graft.util.Pins.eager( // EAGER: feeds a broadcast join
-        users
-          .select(col(metric).as("x"), col("user_id"))
-          .repartitionByRange(nParts, col("x"), col("user_id"))
-          .withColumn("pid", spark_partition_id()))
-      val counts = sorted.groupBy("pid").agg(count(lit(1)).as("c"))
-      val offsets = counts
-        .withColumn("off", coalesce(sum(col("c")).over(
-          Window.orderBy(col("pid").asc).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .withColumn("n", sum(col("c")).over(Window.partitionBy()))
-        .select("pid", "off", "n")
-      sorted.join(broadcast(offsets), Seq("pid"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("pid").orderBy(col("x").asc, col("user_id").asc))
-          + col("off"))
+    // exact quartile cuts; EAGER pin: the cuts feed a broadcast join
+    def cuts(metric: String): DataFrame =
+      GlobalPrefix(users.select(col(metric).as("x"), col("user_id")), nParts,
+          eager = true, keys = Nil, order = Seq(col("x").asc, col("user_id").asc))(
+          GlobalPrefix.Running("rn", total = Some("n")))
         .agg(
           max(when(col("rn") === ceil(lit(0.25) * col("n")), col("x"))).as(s"${metric}_q1"),
           max(when(col("rn") === ceil(lit(0.5) * col("n")), col("x"))).as(s"${metric}_q2"),
           max(when(col("rn") === ceil(lit(0.75) * col("n")), col("x"))).as(s"${metric}_q3"))
-    }
     def score(v: org.apache.spark.sql.Column, q1: org.apache.spark.sql.Column,
               q2: org.apache.spark.sql.Column,
               q3: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

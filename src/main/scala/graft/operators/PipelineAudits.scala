@@ -509,8 +509,8 @@ object PipelineAudits {
   /** q282: decile lift / cumulative-gains table — the model-eval view
     * q243 (average precision), q269 (calibration) and q270 (Brier)
     * don't cover: rank the corpus by a score (length proxy,
-    * descending), cut into global deciles (the q104 two-pass form —
-    * no single-partition window over the corpus), and report each
+    * descending), cut into global deciles (GlobalPrefix's rank — no
+    * single-partition window over the corpus), and report each
     * decile's positive rate against the base rate (lift) plus the
     * cumulative share of all positives captured (gains).  Positive =
     * English-language doc.  All counts exact BIGINTs; lift and
@@ -518,13 +518,13 @@ object PipelineAudits {
     * over the 10 decile rows (bounded-frame exception).
     */
   def liftTable(spark: SparkSession, dir: String): DataFrame = {
-    val (ranked, total) = graft.operators.TextAnalysis.globalRank(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("n_chars"),
-          (col("lang") === "en").cast("long").as("pos")),
-      spark.sparkContext.defaultParallelism,
-      col("n_chars").desc, col("doc_id").asc)
-    val byDecile = ranked.crossJoin(broadcast(total))
+    val byDecile = GlobalPrefix(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("n_chars"),
+            (col("lang") === "en").cast("long").as("pos")),
+        spark.sparkContext.defaultParallelism, eager = true, keys = Nil,
+        order = Seq(col("n_chars").desc, col("doc_id").asc))(
+        GlobalPrefix.Running("rank", total = Some("n")))
       .withColumn("decile", graft.operators.TextAnalysis.ntileExpr(10))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_docs"), sum(col("pos")).as("n_pos"))
@@ -603,25 +603,23 @@ object PipelineAudits {
     * quality scores need renormalizing before cross-source mixing
     * (q151's mixture planner consumes exactly this).
     *
-    * 100 TB shape: the global rank is the two-pass range-partition
-    * form (TextAnalysis.globalRank — no single-partition window);
+    * 100 TB shape: the global rank is GlobalPrefix's (no
+    * single-partition window);
     * per-source deciles ride source-partitioned windows; the rollup
     * is one keyed aggregate.  Guards: N=1 and n_docs=0 are
     * unreachable on the fixture but the N−1 divide carries the
     * explicit CASE anyway (the batch rule).
     */
   def quantileNormAudit(spark: SparkSession, dir: String): DataFrame = {
-    val (ranked, total) = graft.operators.TextAnalysis.globalRank(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("n_chars")),
-      spark.sparkContext.defaultParallelism,
-      col("n_chars").asc, col("doc_id").asc)
     val wSrc = Window.partitionBy("source").orderBy(col("n_chars").asc, col("doc_id").asc)
-    ranked
+    GlobalPrefix(
+        Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("n_chars")),
+        spark.sparkContext.defaultParallelism, eager = true, keys = Nil,
+        order = Seq(col("n_chars").asc, col("doc_id").asc))(
+        GlobalPrefix.Running("rank", total = Some("n")))
       .withColumn("decile", ntile(10).over(wSrc))
-      .groupBy("source", "decile")
+      .groupBy("source", "decile", "n")
       .agg(count(lit(1)).as("n_docs"), sum(col("rank")).as("sum_grank"))
-      .crossJoin(broadcast(total))
       .select(col("source"), col("decile"), col("n_docs"), col("sum_grank"),
         when(col("n") <= 1L, lit(null).cast("double"))
           .otherwise((col("sum_grank") - col("n_docs")).cast("double")
@@ -794,9 +792,8 @@ object PipelineAudits {
     * terminal divide).  Sequential order scores ≫ 1; the hash order
     * lands ≈ 1 — the certificate a data-loading pipeline wants.
     *
-    * Adjacency over a GLOBAL order with no global sort: the q104
-    * two-pass rank (range-partition + within-partition row_number +
-    * broadcast offsets) gives each doc its global position; adjacent
+    * Adjacency over a GLOBAL order with no global sort: GlobalPrefix's
+    * rank gives each doc its global position; adjacent
     * pairs are the rank ⋈ rank+1 equi-join (shuffle on rank — keyed,
     * never single-partition).
     *
@@ -813,8 +810,8 @@ object PipelineAudits {
       .agg(sum(col("ns") * (col("ns") - 1L)).as("same_num"),
         sum(col("ns")).as("n_total"))
     def adjacency(orderName: String, sortCols: Column*): DataFrame = {
-      val (ranked, _) = graft.operators.TextAnalysis.globalRank(
-        docs, spark.sparkContext.defaultParallelism, sortCols: _*)
+      val ranked = GlobalPrefix(docs, spark.sparkContext.defaultParallelism,
+        eager = true, keys = Nil, order = sortCols)(GlobalPrefix.Running("rank"))
       val a = ranked.select(col("rank").as("r"), col("source").as("s1"))
       val b = ranked.select((col("rank") - 1L).as("r"), col("source").as("s2"))
       a.join(b, Seq("r"))
@@ -1853,12 +1850,9 @@ object PipelineAudits {
     * against the budget (one terminal divide) — the manifest a
     * distributed writer turns into files.
     *
-    * 100 TB shape: the global cumulative sum is the two-pass
-    * range-partition form (q104/globalRank's recipe, with per-
-    * partition TOKEN-SUM offsets instead of row counts) — local
-    * window per partition + a broadcast offset join, NO
-    * single-partition window at any scale; the rollup is one keyed
-    * aggregate on shard id.
+    * 100 TB shape: the global cumulative token sum is GlobalPrefix's
+    * (NO single-partition window at any scale); the rollup is one
+    * keyed aggregate on shard id.
     */
   def shardPlan(spark: SparkSession, dir: String,
       shardTokens: Long = 20000L): DataFrame =
@@ -1872,9 +1866,8 @@ object PipelineAudits {
 
   /** The per-document shard assignment q359 aggregates and q362
     * writes: exact global token cumsum in the deterministic hash
-    * order via the two-pass range-partition recipe (local window per
-    * partition + a broadcast 32-row offset spine — NO document-sized
-    * single-partition window), then shard = ⌊(cum − tok) / S⌋.
+    * order (GlobalPrefix over 32 range partitions, eager pin), then
+    * shard = ⌊(cum − tok) / S⌋.
     */
   private[graft] def shardAssignments(spark: SparkSession, dir: String,
       shardTokens: Long): DataFrame = {
@@ -1882,20 +1875,8 @@ object PipelineAudits {
       size(tokens(col("text"))).cast("long").as("tok"),
       graft.operators.TextAnalysis.hv60(
         concat(lit("sh:"), col("doc_id").cast("string"))).as("hv"))
-    val sorted = Pins.eager(
-      docs.repartitionByRange(32, col("hv").asc, col("doc_id").asc)
-        .withColumn("pid", spark_partition_id()))
-    val wOff = Window.partitionBy(pmod(col("pid"), lit(1)))
-      .orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sorted.groupBy("pid").agg(sum(col("tok")).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("pid", "off")
-    val wLocal = Window.partitionBy("pid")
-      .orderBy(col("hv").asc, col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum", sum(col("tok")).over(wLocal) + col("off"))
+    GlobalPrefix(docs, 32, eager = true, keys = Nil,
+        order = Seq(col("hv").asc, col("doc_id").asc))(GlobalPrefix.Running("cum", Some("tok")))
       .withColumn("shard", expr(s"(cum - tok) div $shardTokens"))
       .select(col("doc_id"), col("tok"), col("shard"))
   }

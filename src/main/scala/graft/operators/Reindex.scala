@@ -34,71 +34,29 @@ object Reindex {
     * `deleted` column so that filter is identity here — the JDBC source
     * keeps it, see sources.JdbcDocSource).
     */
-  def scanSlice(spark: SparkSession, dir: String, startId: String = ""): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("id"),
-        col("doc_id").cast("string").as("txn_id"),
-        col("source").as("owner"),
-        col("text").as("content"))
-    if (startId.isEmpty) base else base.filter(col("id") >= startId)
-  }
+  def scanSlice(spark: SparkSession, dir: String, startId: String = ""): DataFrame =
+    new graft.sources.ParquetDocSource(s"$dir/documents.parquet", startId).load(spark)
 
   /** Resume-aware ordered scan with deterministic chunk assignment:
     * every output row carries its chunk index (size `chunkSize`,
-    * asciibetical id order).
+    * asciibetical id order): chunk = floor((rank-1)/chunkSize), with
+    * the exact global rank from GlobalPrefix's two-pass recipe (it
+    * replaced the r3 single-partition `Window.orderBy(id)`).
     *
-    * Scale shape (the q65 two-pass global-rank pattern, replacing the
-    * r3 single-partition `Window.orderBy(id)`):
-    *
-    *  1. range-partition on id — id-contiguous, balanced partitions;
-    *  2. count rows per partition (tiny aggregate) and prefix-sum into
-    *     per-partition rank offsets;
-    *  3. local row_number per partition + offset = exact global rank →
-    *     chunk = floor((rank-1)/chunkSize).
-    *
-    * The partitioned frame is persisted so the counts pass and the
-    * rank pass see the SAME spark_partition_id assignment — without
-    * it, correctness would hinge on ReuseExchange deduplicating the
-    * two range shuffles (fragile under AQE/pruning divergence).  The
-    * materialization is comparable to the shuffle write the range
-    * exchange pays anyway.
-    *
-    * Cache lifecycle: the pin is a *lazy* `localCheckpoint`, not a
-    * `persist` — materialized by the caller's first action, then
-    * released by the ContextCleaner as soon as the returned frame is
-    * unreachable.  Repeated invocations therefore cannot accumulate
-    * executor-cache pins, and nothing registers in the SQL
-    * CacheManager (no `clearCache()` obligation on callers).  The
-    * trade, as in connectedComponents: an executor lost mid-action
-    * fails the job instead of recomputing lineage — retried
-    * clean-slate.  Same lifecycle on sequencePacking,
-    * pricePercentilesScalable and lloydCentroids.
+    * Pin: lazy — the rank's only consumer is the caller's action on
+    * the main thread, so the checkpoint piggybacks on it and is
+    * released by the ContextCleaner once the returned frame is
+    * unreachable; repeated invocations cannot accumulate pins.  Same
+    * lifecycle on sequencePacking, pricePercentilesScalable and
+    * lloydCentroids.
     */
   def chunked(spark: SparkSession, dir: String,
-              chunkSize: Int = 20, startId: String = ""): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nParts = spark.sparkContext.defaultParallelism
-    val sorted = scanSlice(spark, dir, startId)
-      .select("id", "owner")
-      .repartitionByRange(nParts, col("id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = sorted.groupBy("pid").agg(count(lit(1)).as("c"))
-    // ≤ nParts count rows: partitioning by the constant pmod(pid,1)=0
-    // keeps this off WindowExec's no-partition path while the frame is
-    // tiny by construction (one row per range partition)
-    val wOff = Window.partitionBy(pmod(col("pid"), lit(1))).orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("pid", "off")
-    val wLocal = Window.partitionBy("pid").orderBy(col("id").asc)
-    sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("rn", row_number().over(wLocal) + col("off"))
+              chunkSize: Int = 20, startId: String = ""): DataFrame =
+    GlobalPrefix(scanSlice(spark, dir, startId).select("id", "owner"),
+      spark.sparkContext.defaultParallelism, eager = false, keys = Nil,
+      order = Seq(col("id").asc))(GlobalPrefix.Running("rn"))
       .withColumn("chunk", floor((col("rn") - 1) / chunkSize).cast("long"))
       .select("id", "owner", "chunk")
-  }
 
   /** Authority enrichment (reference O8): a broadcast lookup join
     * against a small authority dimension.  Here the dimension is

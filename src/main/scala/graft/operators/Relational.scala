@@ -361,53 +361,27 @@ object Relational {
   /** The SCALE path for exact percentiles: q51's window partitions by
     * o_orderpriority — 5 distinct values, so at 100 TB five tasks each
     * sort a fifth of the table.  This formulation computes the same
-    * global per-group ranks with NO low-cardinality bottleneck:
-    *
-    *  1. range-partition + sort by (priority, price, key) — balanced
-    *     partitions regardless of group count;
-    *  2. count rows per (partition, priority) — a tiny aggregate —
-    *     and prefix-sum into per-partition rank offsets;
-    *  3. local row_number within (partition, priority) + offset =
-    *     exact global rank; selection as in q51.
-    *
-    * The result is independent of where the range boundaries land
-    * (global sorted order is what defines the rank), so the output is
+    * per-group ranks with GlobalPrefix keyed by priority — balanced
+    * range partitions regardless of group count, NO low-cardinality
+    * bottleneck — then selects as in q51.  The rank does not depend
+    * on where the range boundaries land, so the output is
     * bit-identical to q51 and shares its oracle.
     *
-    * Cache lifecycle: lazy `localCheckpoint`, self-releasing once the
-    * returned frame is unreachable — see Reindex.chunked.
+    * Cache lifecycle: lazy pin, self-releasing once the returned frame
+    * is unreachable — see Reindex.chunked.
     */
-  def pricePercentilesScalable(spark: SparkSession, dir: String, parts: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nParts = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    // the checkpoint pins ONE spark_partition_id assignment for both
-    // the counts branch and the join branch — without it, correctness
-    // hinges on ReuseExchange deduplicating the two range shuffles,
-    // which AQE/pruning divergence could silently break (two shuffles
-    // may sample different range boundaries)
-    val sorted = Tables.orders(spark, dir)
-      .select("o_orderpriority", "o_totalprice", "o_orderkey")
-      .repartitionByRange(nParts, col("o_orderpriority"), col("o_totalprice"), col("o_orderkey"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = sorted.groupBy("pid", "o_orderpriority").agg(count(lit(1)).as("c"))
-    val wOff = Window.partitionBy("o_orderpriority").orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy("o_orderpriority")))
-      .select("pid", "o_orderpriority", "off", "n")
-    val wLocal = Window.partitionBy("pid", "o_orderpriority")
-      .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-    sorted
-      .join(broadcast(offsets), Seq("pid", "o_orderpriority"))
-      .withColumn("rn", row_number().over(wLocal) + col("off"))
+  def pricePercentilesScalable(spark: SparkSession, dir: String, parts: Int = 0): DataFrame =
+    GlobalPrefix(
+        Tables.orders(spark, dir).select("o_orderpriority", "o_totalprice", "o_orderkey"),
+        if (parts > 0) parts else spark.sparkContext.defaultParallelism,
+        eager = false, keys = Seq("o_orderpriority"),
+        order = Seq(col("o_totalprice").asc, col("o_orderkey").asc))(
+        GlobalPrefix.Running("rn", total = Some("n")))
       .groupBy("o_orderpriority")
       .agg(
         max(when(col("rn") === ceil(lit(0.5) * col("n")), col("o_totalprice"))).as("p50"),
         max(when(col("rn") === ceil(lit(0.9) * col("n")), col("o_totalprice"))).as("p90"),
         max(col("n")).as("n_orders"))
-  }
 
   /** GROUPING SETS through the SQL front end: (year), (priority), and
     * the grand total in ONE hash aggregate (Catalyst expands the sets
@@ -1873,11 +1847,11 @@ object Relational {
     * q58's GK audit checks Spark's quantile SKETCH, this CONSTRUCTS
     * the exact histogram the sketch approximates.
     *
-    * Bucketing is the q104 discipline: exact global rank via the
-    * shared two-pass range-partition recipe (globalRank — NO
-    * single-partition window), then the standard-SQL ntile formula in
-    * pure integer arithmetic (ntileExpr — remainder buckets first),
-    * bit-equal to DuckDB's declarative `ntile(16) OVER (ORDER BY …)`.
+    * Bucketing is the q104 discipline: exact global rank via
+    * GlobalPrefix (NO single-partition window), then the standard-SQL
+    * ntile formula in pure integer arithmetic (ntileExpr — remainder
+    * buckets first), bit-equal to DuckDB's declarative
+    * `ntile(16) OVER (ORDER BY …)`.
     * Cents are one pinned floor(x·100 + ½); the rank's total order
     * tiebreaks by (orderkey, linenumber) so equal prices split across
     * a bucket boundary identically in both engines.
@@ -2871,9 +2845,9 @@ object Relational {
     * through the identical plan.
     */
   private[graft] def equiDepthHistFrom(cents: DataFrame, k: Int): DataFrame = {
-    val (ranked, total) = TextAnalysis.globalRank(cents, 32,
-      col("v"), col("l_orderkey"), col("l_linenumber"))
-    ranked.crossJoin(broadcast(total))
+    GlobalPrefix(cents, 32, eager = true, keys = Nil,
+        order = Seq(col("v").asc, col("l_orderkey").asc, col("l_linenumber").asc))(
+        GlobalPrefix.Running("rank", total = Some("n")))
       .withColumn("bucket", TextAnalysis.ntileExpr(k))
       .groupBy("bucket")
       .agg(min(col("v")).as("lo_cents"), max(col("v")).as("hi_cents"),

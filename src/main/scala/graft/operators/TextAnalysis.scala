@@ -552,40 +552,25 @@ object TextAnalysis {
   /** Sequence packing (concat-and-chunk): lay every document's tokens
     * end-to-end in stable doc_id order and cut the stream into
     * fixed-size context windows — each doc learns which pack it starts
-    * in and at what offset.  The global running token sum uses the
-    * same two-pass range-partition + broadcast-offset pattern as
-    * q17/q65: balanced partitions, no single-partition window, and the
-    * checkpointed frame pins one partition-id assignment for both
-    * passes.
+    * in and at what offset.  The global running token sum (exclusive:
+    * the tokens before the doc) comes from GlobalPrefix — no
+    * single-partition window.
     *
-    * Cache lifecycle: lazy `localCheckpoint`, self-releasing once the
-    * returned frame is unreachable — see Reindex.chunked.
+    * Cache lifecycle: lazy pin, self-releasing once the returned frame
+    * is unreachable — see Reindex.chunked.
     */
   def sequencePacking(spark: SparkSession, dir: String,
-                      contextLen: Long = 2048L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nParts = spark.sparkContext.defaultParallelism
-    val sorted = Tables.documents(spark, dir)
-      .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tok"))
-      .repartitionByRange(nParts, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val counts = sorted.groupBy("pid").agg(sum(col("n_tok")).as("c"))
-    val wOff = Window.partitionBy(pmod(col("pid"), lit(1))).orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("pid", "off")
-    val wLocal = Window.partitionBy("pid").orderBy(col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tok")).over(wLocal), lit(0L)) + col("off"))
+                      contextLen: Long = 2048L): DataFrame =
+    GlobalPrefix(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tok")),
+        spark.sparkContext.defaultParallelism, eager = false, keys = Nil,
+        order = Seq(col("doc_id").asc))(
+        GlobalPrefix.Running("cum_before", Some("n_tok"), inclusive = false))
       .select(col("doc_id"), col("n_tok"), col("cum_before"),
         // integer DIV, not double /: exact at any token-stream length
         expr(s"cum_before DIV $contextLen").as("pack_id"),
         (col("cum_before") % contextLen).as("pack_offset"))
-  }
 
   /** BM25 keyword retrieval (q88): score every document against each
     * probe document's top-3 TF-IDF terms (query-by-example search —
@@ -1120,26 +1105,19 @@ object TextAnalysis {
     * fold-ordered least-squares as q85: x = ln(tokens_seen),
     * y = ln(vocab_seen) via GraftLn.
     *
-    * The running sums are the q17 two-pass prefix-sum, NOT a
-    * per-source window (VERDICT r12 #6: one mega-source would
-    * serialize its whole curve through a single window partition):
-    * range-partition the per-doc frame on (source, doc_id), aggregate
-    * per (source, range-partition) piece, prefix-sum the piece sums
-    * over the BOUNDED piece frame (≤ nParts rows per source), then
-    * local windows keyed (pid, source) + broadcast offsets.  Counts
-    * are integers, so the split sums are bit-identical to the
-    * single-window form.
+    * The running sums are GlobalPrefix's two-pass prefix sums keyed
+    * by source, NOT a per-source window (VERDICT r12 #6: one
+    * mega-source would serialize its whole curve through a single
+    * window partition).
     *
     * 100 TB shape: one (source, token) shuffle + one (source, doc)
     * shuffle + one range shuffle; every doc-frame window is keyed by
     * (pid, source); the regression runs on 10 rows per source.
     * Output: 10 checkpoint rows per source, the fitted exponent
     * repeated on each (sources × 10 rows total).  Pin lifecycle as in
-    * Reindex.chunked: lazy localCheckpoint so both passes see one
-    * partition assignment, released by the ContextCleaner.
+    * Reindex.chunked (lazy).
     */
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ln = graft.functions.MathFunctions.ln _
     val toks = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -1149,29 +1127,11 @@ object TextAnalysis {
     val perDoc = toks.groupBy("source", "doc_id").agg(count(lit(1)).as("nt"))
       .join(newPerDoc, Seq("source", "doc_id"), "left")
       .withColumn("nv", coalesce(col("nv"), lit(0L)))
-    val nParts = spark.sparkContext.defaultParallelism
-    val parted = perDoc
-      .repartitionByRange(nParts, col("source"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val pieces = parted.groupBy("source", "pid")
-      .agg(count(lit(1)).as("c"), sum(col("nt")).as("snt"), sum(col("nv")).as("snv"))
-    // bounded frame: ≤ one row per (source, range partition)
-    val wOff = Window.partitionBy("source").orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = pieces
-      .withColumn("c_off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .withColumn("nt_off", coalesce(sum(col("snt")).over(wOff), lit(0L)))
-      .withColumn("nv_off", coalesce(sum(col("snv")).over(wOff), lit(0L)))
-      .select("source", "pid", "c_off", "nt_off", "nv_off")
-    val totals = pieces.groupBy("source").agg(sum(col("c")).as("n"))
-    val wLocal = Window.partitionBy("pid", "source").orderBy(col("doc_id").asc)
-    val curve = parted
-      .join(broadcast(offsets), Seq("source", "pid"))
-      .join(broadcast(totals), Seq("source"))
-      .withColumn("rn", row_number().over(wLocal) + col("c_off"))
-      .withColumn("tokens_seen", sum(col("nt")).over(wLocal) + col("nt_off"))
-      .withColumn("vocab_seen", sum(col("nv")).over(wLocal) + col("nv_off"))
+    val curve = GlobalPrefix(perDoc, spark.sparkContext.defaultParallelism,
+        eager = false, keys = Seq("source"), order = Seq(col("doc_id").asc))(
+      GlobalPrefix.Running("rn", total = Some("n")),
+      GlobalPrefix.Running("tokens_seen", Some("nt")),
+      GlobalPrefix.Running("vocab_seen", Some("nv")))
     val checkpoints = curve
       .select(col("source"), col("rn"), col("n"), col("tokens_seen"), col("vocab_seen"),
         explode(sequence(lit(1), lit(10))).as("decile"))
@@ -1411,56 +1371,6 @@ object TextAnalysis {
         (col("cnt").cast("double") / col("tot").cast("double")).as("p_next"))
   }
 
-  /** Equal-frequency length buckets (q104): ntile(10) over document
-    * length — the batch-composition view a sequence-packing pipeline
-    * plans against (how much of the corpus is short-tail, where the
-    * padding waste lives).  Computed in the SCALABLE two-pass form:
-    * range-partition by (n_chars, doc_id), per-partition local
-    * row_number + broadcast partition offsets = the exact global rank
-    * with NO single-partition window (q17/q65/q71's pattern), then
-    * the standard-SQL ntile bucket is pure integer arithmetic over
-    * (rank, N) — bit-equal to the declarative `ntile(10) OVER (ORDER
-    * BY ...)` the DuckDB oracle runs, remainder buckets first.
-    *
-    * Cache lifecycle: EAGER pin (Pins.eager), not the lazy form
-    * sequencePacking uses — `sorted` here feeds TWO broadcast
-    * lineages (offsets and the 1-row total), and two broadcast
-    * threads racing to materialize one lazy checkpoint is the r11
-    * deadlock (util/Pins.scala).  The eager pin also freezes the
-    * partition-id assignment for both passes, which the two-pass
-    * rank requires anyway.
-    */
-  /** Two-pass exact GLOBAL rank — q104's recipe, ONE definition now
-    * shared by lengthDeciles (q104), isotonicCalibration (q269) and
-    * taDepthAudit (q271) so the rank arithmetic cannot drift between
-    * copies (the hv60/denseDailySeries rule): range-partition by
-    * `sortCols`, per-partition row_number + broadcast partition
-    * offsets = the exact global rank with NO single-partition window.
-    * Returns (input + pid + 1-based long `rank`, broadcastable 1-row
-    * total frame with column `n`).  The input is eagerly pinned: the
-    * offsets broadcast, the totals broadcast and the ranked output
-    * all consume it, and the pin freezes partition ids across the
-    * two passes (util/Pins.scala).
-    */
-  private[operators] def globalRank(df: DataFrame, nParts: Int,
-                                    sortCols: Column*): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val sorted = graft.util.Pins.eager(
-      df.repartitionByRange(nParts, sortCols: _*)
-        .withColumn("pid", spark_partition_id()))
-    val counts = sorted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val wOff = Window.partitionBy(pmod(col("pid"), lit(1))).orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("pid", "off")
-    val total = counts.agg(sum(col("c")).as("n"))
-    val wLocal = Window.partitionBy("pid").orderBy(sortCols: _*)
-    (sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("rank", row_number().over(wLocal).cast("long") + col("off")),
-      total)
-  }
-
   /** Standard-SQL ntile over (rank, n) in pure integer arithmetic
     * (ALL divisions integral `DIV` — a float divide could land one
     * ulp under a bucket boundary): the first (N mod k) buckets hold
@@ -1473,15 +1383,29 @@ object TextAnalysis {
        |  ELSE (n % $k) + ((rank - 1) - (n % $k) * ((n DIV $k) + 1)) DIV (n DIV $k)
        |END + 1 AS INT)""".stripMargin)
 
-  def lengthDeciles(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val (ranked, total) = globalRank(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("n_chars"),
-          tokenCount(col("text")).cast("long").as("n_tok")),
-      spark.sparkContext.defaultParallelism,
-      col("n_chars").asc, col("doc_id").asc)
-    ranked
-      .crossJoin(broadcast(total))
+  /** Equal-frequency length buckets (q104): ntile(10) over document
+    * length — the batch-composition view a sequence-packing pipeline
+    * plans against (how much of the corpus is short-tail, where the
+    * padding waste lives).  The exact global rank over
+    * (n_chars, doc_id) comes from GlobalPrefix (NO single-partition
+    * window), then the standard-SQL ntile bucket is pure integer
+    * arithmetic over (rank, N) — bit-equal to the declarative
+    * `ntile(10) OVER (ORDER BY ...)` the DuckDB oracle runs,
+    * remainder buckets first.
+    *
+    * Cache lifecycle: EAGER pin, not the lazy form sequencePacking
+    * uses — the rank's offsets reach it through a broadcast, and a
+    * broadcast thread materializing a lazy checkpoint is the r11
+    * deadlock (util/Pins.scala).
+    */
+  def lengthDeciles(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    GlobalPrefix(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("n_chars"),
+            tokenCount(col("text")).cast("long").as("n_tok")),
+        spark.sparkContext.defaultParallelism, eager = true, keys = Nil,
+        order = Seq(col("n_chars").asc, col("doc_id").asc))(
+        GlobalPrefix.Running("rank", total = Some("n")))
       .withColumn("decile", ntileExpr(k))
       .groupBy("decile")
       .agg(
@@ -1491,7 +1415,6 @@ object TextAnalysis {
         sum(col("n_chars")).as("sum_chars"),
         sum(col("n_tok")).as("sum_tokens"),
         (sum(col("n_chars")).cast("double") / count(lit(1)).cast("double")).as("avg_chars"))
-  }
 
   /** Per-source Gini coefficient of document length (q131) — the
     * corpus-balance concentration metric: gini → 0 means every doc
@@ -1502,39 +1425,23 @@ object TextAnalysis {
     *
     * Uses the classic rank formula over ascending lengths,
     * G = (2·Σ i·xᵢ − (n+1)·Σ xᵢ) / (n·Σ xᵢ), which needs only the
-    * exact global rank i within each source — computed in the q104
-    * two-pass form (range-partition by (source, n_chars, doc_id),
-    * local row_number + broadcast per-(source, pid) offsets) so no
-    * window ever sees a whole source in one partition.  Every sum
-    * is exact integer arithmetic in DECIMAL(38,0) (mirrored by
+    * exact global rank i within each source — GlobalPrefix keyed by
+    * source, so no window ever sees a whole source in one partition.
+    * Every sum is exact integer arithmetic in DECIMAL(38,0) (mirrored by
     * DuckDB's HUGEINT sums); the ONLY floating-point ops are the two
     * final int→double conversions and one divide, all correctly
     * rounded by IEEE in both engines — no fold-order anywhere.
     *
     * 100 TB shape: one range-exchange + one keyed agg; the offsets
     * frame is (sources × partitions) rows — broadcast-bounded.  The
-    * eager pin freezes partition ids across the two passes and keeps
-    * the offsets broadcast off the lazy-checkpoint deadlock path
-    * (SCALING.md, util/Pins.scala).
+    * pin is eager to keep the offsets broadcast off the
+    * lazy-checkpoint deadlock path (SCALING.md, util/Pins.scala).
     */
   def giniConcentration(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nParts = spark.sparkContext.defaultParallelism
-    val sorted = graft.util.Pins.eager(
-      Tables.documents(spark, dir)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .repartitionByRange(nParts, col("source").asc, col("n_chars").asc, col("doc_id").asc)
-        .withColumn("pid", spark_partition_id()))
-    val counts = sorted.groupBy("source", "pid").agg(count(lit(1)).as("c"))
-    val wOff = Window.partitionBy("source").orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("source", "pid", "off")
-    val wLocal = Window.partitionBy("pid", "source")
-      .orderBy(col("n_chars").asc, col("doc_id").asc)
-    val ranked = sorted.join(broadcast(offsets), Seq("source", "pid"))
-      .withColumn("rank", row_number().over(wLocal).cast("long") + col("off"))
+    val ranked = GlobalPrefix(
+        Tables.documents(spark, dir).select(col("source"), col("doc_id"), col("n_chars")),
+        spark.sparkContext.defaultParallelism, eager = true, keys = Seq("source"),
+        order = Seq(col("n_chars").asc, col("doc_id").asc))(GlobalPrefix.Running("rank"))
     val g = ranked.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_chars").cast("decimal(38,0)")).as("sx"),
@@ -1816,9 +1723,8 @@ object TextAnalysis {
     * offsets are exact integer token positions); the two rates are
     * single divides at the end.
     *
-    * 100 TB shape: inherits q71's two-pass global offset (range
-    * shuffle + broadcast partition offsets — no single-task window),
-    * then ONE partial+final agg to a single row.
+    * 100 TB shape: inherits q71's GlobalPrefix offset (no
+    * single-task window), then ONE partial+final agg to a single row.
     */
   def packingEfficiency(spark: SparkSession, dir: String,
                         contextLen: Long = 2048L): DataFrame = {
@@ -1978,8 +1884,8 @@ object TextAnalysis {
     * not engine ntile (whose tie-splitting is implementation-
     * defined); rank is (n_chars desc, doc_id) total order.
     *
-    * Determinism: ranks via the q65 two-pass escape (no single-task
-    * window over the corpus); per-decile counts exact integers;
+    * Determinism: ranks via GlobalPrefix (no single-task window over
+    * the corpus); per-decile counts exact integers;
     * cumulative sums integer windows over the 10-row frame; capture
     * and lift single divides.
     *
@@ -1989,23 +1895,13 @@ object TextAnalysis {
   def gainsTable(spark: SparkSession, dir: String, parts: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nParts = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    val sorted = graft.util.Pins.eager( // EAGER: feeds a broadcast join
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("n_chars"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-        .repartitionByRange(nParts, col("n_chars").desc, col("doc_id"))
-        .withColumn("pid", spark_partition_id()))
-    val counts = sorted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.orderBy(col("pid").asc).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy()))
-      .select("pid", "off", "n")
-    val deciles = sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("pid").orderBy(col("n_chars").desc, col("doc_id").asc))
-        + col("off"))
+    val deciles = GlobalPrefix( // EAGER: the rank's offsets arrive by broadcast
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("n_chars"),
+            when(col("lang") === "en", 1L).otherwise(0L).as("y")),
+        nParts, eager = true, keys = Nil,
+        order = Seq(col("n_chars").desc, col("doc_id").asc))(
+        GlobalPrefix.Running("rn", total = Some("n")))
       .withColumn("decile", (expr("((rn - 1) * 10) DIV n") + lit(1)).cast("int"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_docs"), sum(col("y")).as("n_pos"))
@@ -2721,39 +2617,22 @@ object TextAnalysis {
     * DECIMAL(38,0)); positive-operand `div` is the floor DuckDB's `//`
     * takes.
     *
-    * 100 TB shape: the cumulative axis is the q127 two-pass prefix
-    * sum — per (source, range-partition) piece sums, a bounded
-    * offsets frame (≤ one row per piece) broadcast back — so one
-    * mega-source CANNOT serialize through a single window partition;
-    * the output is ≤ k rows per source.
+    * 100 TB shape: the cumulative axis is GlobalPrefix's two-pass
+    * prefix sum keyed by source, so one mega-source CANNOT serialize
+    * through a single window partition; the output is ≤ k rows per
+    * source.
     */
-  def ppsSample(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, dir).select(col("source"), col("doc_id"),
-      col("n_chars").cast("long").as("w"))
-    val nParts = spark.sparkContext.defaultParallelism
-    val parted = docs
-      .repartitionByRange(nParts, col("source"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
-    val pieces = parted.groupBy("source", "pid").agg(sum(col("w")).as("sw"))
-    val wOff = Window.partitionBy("source").orderBy(col("pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = pieces
-      .withColumn("w_off", coalesce(sum(col("sw")).over(wOff), lit(0L)))
-      .select("source", "pid", "w_off")
-    val totals = pieces.groupBy("source").agg(sum(col("sw")).as("wt"))
-    val wLocal = Window.partitionBy("pid", "source").orderBy(col("doc_id").asc)
-    parted
-      .join(broadcast(offsets), Seq("source", "pid"))
-      .join(broadcast(totals), Seq("source"))
-      .withColumn("cum", sum(col("w")).over(wLocal) + col("w_off"))
+  def ppsSample(spark: SparkSession, dir: String, k: Int = 50): DataFrame =
+    GlobalPrefix(
+        Tables.documents(spark, dir).select(col("source"), col("doc_id"),
+          col("n_chars").cast("long").as("w")),
+        spark.sparkContext.defaultParallelism, eager = false, keys = Seq("source"),
+        order = Seq(col("doc_id").asc))(GlobalPrefix.Running("cum", Some("w"), total = Some("wt")))
       .withColumn("hi", expr(s"(cum * $k) div wt"))
       .withColumn("lo", expr(s"((cum - w) * $k) div wt"))
       .filter(col("hi") > col("lo"))
       .select(col("source"), col("doc_id"), col("w").as("n_chars"),
         col("cum").as("cum_chars"), (col("hi") - col("lo")).as("strata_covered"))
-  }
 
   /** Source key for the KMV sketch rows; a case class (not a tuple) so
     * the grouped-aggregation encoder is stable across Scala versions.
@@ -3053,27 +2932,28 @@ object TextAnalysis {
     * makes it DECLARATIVE and engine-portable; OperatorSpec replays
     * the classic stack PAVA and asserts bit-equality.
     *
-    * Deciles come from q104's scalable two-pass global rank (range
-    * partition + local row_number + broadcast offsets; integer ntile
-    * arithmetic, remainder buckets first) — no single-partition
-    * window.  Every interval mean is one exact-integer divide;
-    * min/max over identical doubles are engine-identical.
+    * Deciles come from GlobalPrefix's exact global rank (no
+    * single-partition window) and q104's integer ntile arithmetic,
+    * remainder buckets first.  Every interval mean is one
+    * exact-integer divide; min/max over identical doubles are
+    * engine-identical.
     *
     * 100 TB shape: corpus-scale work is the two-pass rank + one
     * keyed aggregate to B rows; the minimax algebra runs on
     * B²-bounded broadcast frames.
     */
   def isotonicCalibration(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val (ranked, total) = globalRank(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("n_chars"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("pos")),
-      spark.sparkContext.defaultParallelism,
-      col("n_chars").asc, col("doc_id").asc)
+    val ranked = GlobalPrefix(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("n_chars"),
+            when(col("lang") === "en", 1L).otherwise(0L).as("pos")),
+        spark.sparkContext.defaultParallelism, eager = true, keys = Nil,
+        order = Seq(col("n_chars").asc, col("doc_id").asc))(
+        GlobalPrefix.Running("rank", total = Some("n")))
     // pinned: the B-row bucket frame feeds the pair spine, the
     // interval sums AND the final projection
     val buckets = graft.util.Pins.eager(
-      ranked.crossJoin(broadcast(total))
+      ranked
         .withColumn("decile", ntileExpr(k))
         .groupBy("decile")
         .agg(count(lit(1)).as("n_docs"), sum(col("pos")).as("n_pos")))
@@ -3165,8 +3045,7 @@ object TextAnalysis {
     * Determinism: scores, ranks, τ and depths are integers; the one
     * double is an exact-integer divide.
     *
-    * 100 TB shape: both global ranks are the q104 two-pass form
-    * (range partition + local row_number + broadcast offsets — no
+    * 100 TB shape: both global ranks come from GlobalPrefix (no
     * single-partition window); the τ frame is a rank-keyed equi-join;
     * top-k is TakeOrdered; the stop search is one filtered aggregate.
     */
@@ -3175,11 +3054,9 @@ object TextAnalysis {
     val base = graft.util.Pins.eager(Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars").cast("long").as("s1"),
         tokenCount(col("text")).cast("long").as("s2")))
-    def rankBy(s: String): DataFrame = {
-      val (ranked, _) = globalRank(base.select(col("doc_id"), col(s)),
-        nParts, col(s).desc, col("doc_id").asc)
-      ranked.select(col("doc_id"), col(s), col("rank"))
-    }
+    def rankBy(s: String): DataFrame =
+      GlobalPrefix(base.select(col("doc_id"), col(s)), nParts, eager = true, keys = Nil,
+        order = Seq(col(s).desc, col("doc_id").asc))(GlobalPrefix.Running("rank"))
     val j = graft.util.Pins.eager(
       rankBy("s1").withColumnRenamed("rank", "r1")
         .join(rankBy("s2").withColumnRenamed("rank", "r2"), Seq("doc_id"))

@@ -1,8 +1,12 @@
 package graft.util
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** What the measuring mains (Bench, PlanDump) share. */
+/** What the measuring mains (Bench, PlanDump, PlanAudit) and the
+  * plan-shape specs share.
+  */
 object Harness {
   /** Warm up the JVM (codegen compiler, parquet reader, shuffle
     * machinery) so per-query timings measure the query, not first-run
@@ -26,4 +30,17 @@ object Harness {
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
       ()
     } catch { case _: Throwable => Thread.sleep(50) }
+
+  /** Every node of a physical plan, pre-order: AQE wrappers and query
+    * stages unwrapped, subqueries walked.  The one plan walker, so a
+    * Spark upgrade that adds a wrapper node needs one edit.
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val self = p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case _ => Seq(p)
+    }
+    self ++ p.children.flatMap(planNodes) ++ p.subqueries.flatMap(planNodes)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, EventOps, Multimodal, PipelineAudits, Relational, Similarity}
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, TableCacheQueryStageExec}

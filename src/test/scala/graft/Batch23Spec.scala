@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import graft.functions.TextFunctions
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.functions._
 
 /** Batch 26 (q334, q337): the ExactSubstr scale levers — the df-capped
@@ -111,25 +112,13 @@ class Batch23Spec extends SparkSuite {
     // measured slower (it defeats map-side partial aggregation)
     val plan = GraphFold.segmentedSum(df, "key", col("id"), col("v"), "s")
       .queryExecution.executedPlan
-    val shuffles = nodes(plan).count(
+    val shuffles = planNodes(plan).count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
     assert(shuffles == 2, s"row-sized + partial-sized exchange, got $shuffles")
-    assert(!nodes(plan).exists(n =>
+    assert(!planNodes(plan).exists(n =>
       n.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec] ||
         n.isInstanceOf[org.apache.spark.sql.execution.SortExec]),
       "residue segmentation needs neither a window nor a sort")
-  }
-
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-      Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val self = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        nodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        q +: nodes(q.plan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
   }
 
   test("q334/q337 plan shape: content equi-joins, never all-pairs; keyed windows; gram exchange reused") {
@@ -141,7 +130,7 @@ class Batch23Spec extends SparkSuite {
       for (df <- Seq(Dedup.exactSubstrSpansCapped(spark, sf),
                      Dedup.exactSubstrCut(spark, sf))) {
         df.collect()
-        val all = nodes(df.queryExecution.executedPlan)
+        val all = planNodes(df.queryExecution.executedPlan)
         assert(!all.exists(_.nodeName.contains("CartesianProduct")),
           "anchor join stays a content equi-join under the cap")
         val ws = all.collect {

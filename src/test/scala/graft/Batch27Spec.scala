@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Dedup
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.functions._
 
 /** Batch 34 (q351, q352): the ExactSubstr CUT and coverage rollup
@@ -160,14 +161,14 @@ class Batch27Spec extends SparkSuite {
     try {
       val df = graft.operators.Relational.bloomPrefilteredJoin(spark, sf)
       val rows = df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(all.exists(hasBloom),
         "the injected optimizer rule spliced the bloom prefilter into the physical plan")
       // pre-shuffle: some exchange's SUBTREE carries the filter — the
       // pruning happens before rows move
       val exchanges = all.collect { case e: ShuffleExchangeLike => e }
       assert(exchanges.nonEmpty, "broadcast disabled: the join shuffles")
-      assert(exchanges.exists(e => nodes(e.child).exists(hasBloom)),
+      assert(exchanges.exists(e => planNodes(e.child).exists(hasBloom)),
         "the might_contain filter sits BELOW an exchange (pre-shuffle pruning)")
       // value identity: the bloom has no false negatives, so the
       // result is the plain join's
@@ -189,7 +190,7 @@ class Batch27Spec extends SparkSuite {
         Tables.customer(spark, sf).select(col("c_custkey").as("o_custkey")),
         "o_custkey").groupBy().count()
       unrelated.collect()
-      assert(!nodes(unrelated.queryExecution.executedPlan).exists(hasBloom),
+      assert(!planNodes(unrelated.queryExecution.executedPlan).exists(hasBloom),
         "the rule never fires on joins that did not register a bloom")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -199,7 +200,7 @@ class Batch27Spec extends SparkSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     def shuffleRecords(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()
-      nodes(df.queryExecution.executedPlan)
+      planNodes(df.queryExecution.executedPlan)
         .collect { case e: ShuffleExchangeLike => e }
         .flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value))
         .sum
@@ -239,7 +240,7 @@ class Batch27Spec extends SparkSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec, ShuffledHashJoinExec}
     def joins(p: SparkPlan): Seq[BaseJoinExec] =
-      nodes(p).collect { case j: BaseJoinExec => j }
+      planNodes(p).collect { case j: BaseJoinExec => j }
     def keyNames(j: BaseJoinExec): Set[String] =
       (j.leftKeys ++ j.rightKeys).flatMap(_.collect {
         case a: org.apache.spark.sql.catalyst.expressions.AttributeReference => a.name
@@ -255,7 +256,7 @@ class Batch27Spec extends SparkSuite {
       // ENFORCED: the marked (selective customer) join is the INNER
       // one — a descendant of the orderkey join
       val outerJoin = js.filterNot(_ eq markerJoin.head).head
-      assert(nodes(outerJoin).exists(_ eq markerJoin.head),
+      assert(planNodes(outerJoin).exists(_ eq markerJoin.head),
         "the registered decision pulled the customer join INNERMOST")
       // value identity vs the naive-order plain join
       val plain = Tables.orders(spark, sf)
@@ -288,7 +289,7 @@ class Batch27Spec extends SparkSuite {
       val nMarker = njs.filter(j => keyNames(j).contains("gjo_unregistered_x"))
       assert(nMarker.length == 1)
       assert(!njs.filterNot(_ eq nMarker.head)
-          .exists(oj => nodes(oj).exists(_ eq nMarker.head)),
+          .exists(oj => planNodes(oj).exists(_ eq nMarker.head)),
         "without a registered decision the custkey join stays OUTERMOST (naive order)")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -303,7 +304,7 @@ class Batch27Spec extends SparkSuite {
       for (df <- Seq(Dedup.exactSubstrCutCapped(spark, sf),
                      Dedup.dupCoverageCapped(spark, sf))) {
         df.collect()
-        val all = nodes(df.queryExecution.executedPlan)
+        val all = planNodes(df.queryExecution.executedPlan)
         assert(!all.exists(_.nodeName.contains("CartesianProduct")),
           "no all-pairs anywhere in the capped composition")
         val ws = all.collect {
@@ -320,7 +321,7 @@ class Batch27Spec extends SparkSuite {
   test("q359 plan shape: the row-side cumsum window is pid-keyed (no global row window)") {
     val df = graft.operators.PipelineAudits.shardPlan(spark, sf)
     df.collect()
-    val ws = nodes(df.queryExecution.executedPlan).collect {
+    val ws = planNodes(df.queryExecution.executedPlan).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(ws.nonEmpty)
     // exactly one window may run partition-less: the 32-row
@@ -353,7 +354,7 @@ class Batch27Spec extends SparkSuite {
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
       val rows = df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(!all.exists(_.nodeName.contains("CartesianProduct")),
         "the unsound swap never happens — no cartesian appears")
       val js = all.collect { case j: BaseJoinExec => j }
@@ -362,7 +363,7 @@ class Batch27Spec extends SparkSuite {
       }.contains(marker)))
       assert(markerJoin.length == 1)
       assert(!js.filterNot(_ eq markerJoin.head)
-          .exists(oj => nodes(oj).exists(_ eq markerJoin.head)),
+          .exists(oj => planNodes(oj).exists(_ eq markerJoin.head)),
         "the marked join stays OUTERMOST: the guard refused the registered swap")
       // and the values are the plain 3-way join's
       val expect = Tables.customer(spark, sf).select(col("c_custkey"))
@@ -416,18 +417,6 @@ class Batch27Spec extends SparkSuite {
     assert(rows.forall(r =>
       r.getDouble(3) == r.getLong(2).toDouble / 20000.0),
       "fill_frac is the single pinned divide")
-  }
-
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-      Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val self = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        nodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        q +: nodes(q.plan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
   }
 
   test("crafted hot gram: capped coverage covers a SUBSET of positions") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.functions._
 
 /** Batch 39 (q360-q363): the persisted CBO lifecycle, the TTL-dedup
@@ -8,18 +9,6 @@ import org.apache.spark.sql.functions._
   * plus the explicit AQE pin for the two injected enforcement rules.
   */
 class Batch28Spec extends SparkSuite {
-
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-      Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val self = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        nodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        q +: nodes(q.plan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-  }
 
   private def hasBloomFilter(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
     p match {
@@ -56,11 +45,11 @@ class Batch28Spec extends SparkSuite {
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
       val rows = df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(all.exists(hasBloomFilter),
         "the stored bitmap reached the fresh session's physical plan")
       assert(all.collect { case e: ShuffleExchangeLike => e }
-          .exists(e => nodes(e.child).exists(hasBloomFilter)),
+          .exists(e => planNodes(e.child).exists(hasBloomFilter)),
         "pre-shuffle: the filter sits below an exchange")
       assert(!all.exists(_.expressions.exists(_.exists {
           case _: org.apache.spark.sql.catalyst.expressions.aggregate
@@ -94,7 +83,7 @@ class Batch28Spec extends SparkSuite {
         .join(build, col(marker) === col("c_custkey"))
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
       chain.collect()
-      val js = nodes(chain.queryExecution.executedPlan).collect {
+      val js = planNodes(chain.queryExecution.executedPlan).collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
       val markerJoin = js.filter(j => (j.leftKeys ++ j.rightKeys)
         .exists(_.collect {
@@ -103,7 +92,7 @@ class Batch28Spec extends SparkSuite {
         }.contains(marker)))
       assert(markerJoin.length == 1)
       assert(js.filterNot(_ eq markerJoin.head)
-          .exists(oj => nodes(oj).exists(_ eq markerJoin.head)),
+          .exists(oj => planNodes(oj).exists(_ eq markerJoin.head)),
         "the STORED decision pulled the customer join innermost in the fresh session")
     } finally {
       graft.plans.BloomRegistry.clear()
@@ -117,7 +106,7 @@ class Batch28Spec extends SparkSuite {
     try {
       val df = graft.operators.Relational.cboPersisted(spark, sf)
       df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(all.exists(hasBloomFilter), "stored bitmap enforced in the plan")
       assert(!all.exists(_.expressions.exists(_.exists {
           case _: org.apache.spark.sql.catalyst.expressions.aggregate
@@ -139,7 +128,7 @@ class Batch28Spec extends SparkSuite {
       assert(bPlan.isInstanceOf[
           org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec],
         "the pin really runs under AQE")
-      assert(nodes(bPlan).exists(hasBloomFilter),
+      assert(planNodes(bPlan).exists(hasBloomFilter),
         "the spliced prefilter survives AQE's runtime re-planning")
       assert(bRows.map(_.getLong(1)).sum ==
         Tables.orders(spark, sf).join(
@@ -149,7 +138,7 @@ class Batch28Spec extends SparkSuite {
         "AQE re-planning never costs a row")
       val jo = graft.operators.Relational.joinOrderEnforced(spark, sf)
       jo.collect()
-      val js = nodes(jo.queryExecution.executedPlan).collect {
+      val js = planNodes(jo.queryExecution.executedPlan).collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
       val markerJoin = js.filter(j => (j.leftKeys ++ j.rightKeys)
         .exists(_.collect {
@@ -158,7 +147,7 @@ class Batch28Spec extends SparkSuite {
         }.exists(_.startsWith("gjo_custkey_"))))
       assert(markerJoin.length == 1 &&
         js.filterNot(_ eq markerJoin.head)
-          .exists(oj => nodes(oj).exists(_ eq markerJoin.head)),
+          .exists(oj => planNodes(oj).exists(_ eq markerJoin.head)),
         "the reassociated order survives AQE re-planning")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prev)
@@ -198,12 +187,12 @@ class Batch28Spec extends SparkSuite {
       val rows = joined.collect()
       assert(rows.length.toLong == control,
         s"disjunctive join loses nothing: ${rows.length} vs $control")
-      assert(!nodes(joined.queryExecution.executedPlan).exists(hasBloomFilter),
+      assert(!planNodes(joined.queryExecution.executedPlan).exists(hasBloomFilter),
         "no might_contain anywhere: the disjunctive equality never seeds a filter")
       // the SAME registration on a purely conjunctive join still fires
       val conj = left.join(right, col(probe) === col("rk"))
       conj.collect()
-      assert(nodes(conj.queryExecution.executedPlan).exists(hasBloomFilter),
+      assert(planNodes(conj.queryExecution.executedPlan).exists(hasBloomFilter),
         "the conjunctive form of the same column is still filtered")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -413,12 +402,17 @@ class Batch28Spec extends SparkSuite {
       pub(2L)
       val v1Ghost = new java.io.File(store.toFile, "probe-v1"); v1Ghost.mkdirs()
       assert(served() == 2L, "readers resolve to the max version")
-      // the next publish sweeps every older version
+      // a publish keeps the previous version (a lazy reader may still
+      // hold it) and sweeps everything older; the next publish sweeps it
+      def leftovers() = store.toFile.list().toSeq.filter(_.startsWith("probe")).sorted
       pub(3L)
       assert(served() == 3L)
-      val leftovers = store.toFile.list().toSeq.filter(_.startsWith("probe"))
-      assert(leftovers == Seq("probe-v3"),
-        s"older versions swept after the new one is visible: $leftovers")
+      assert(leftovers() == Seq("probe-v2", "probe-v3"),
+        s"N-1 kept, older versions swept after the new one is visible: ${leftovers()}")
+      pub(4L)
+      assert(served() == 4L)
+      assert(leftovers() == Seq("probe-v3", "probe-v4"),
+        s"N-1 gone after the next publish: ${leftovers()}")
       // migration: a legacy UNVERSIONED dir (pre-r22 store) serves when
       // no versioned dir exists, and a republish replaces it
       val legacyStore = java.nio.file.Files.createTempDirectory("graft-spec-legacy")
@@ -428,12 +422,29 @@ class Batch28Spec extends SparkSuite {
         assert(spark.read.parquet(graft.plans.StatsStore
           .artifactPath(spark, legacyStore.toString, "probe").get)
           .head().getLong(0) == 9L, "legacy unversioned artifact serves")
-        graft.plans.StatsStore.publishNamed(
-          spark.range(1).select(lit(10L).as("payload")),
-          legacyStore.toString, "probe")
-        assert(!new java.io.File(legacyStore.toFile, "probe").exists(),
-          "legacy dir swept by the first versioned republish")
+        def republish(v: Long): Unit = graft.plans.StatsStore.publishNamed(
+          spark.range(1).select(lit(v).as("payload")), legacyStore.toString, "probe")
+        val legacy = new java.io.File(legacyStore.toFile, "probe")
+        republish(10L)
+        assert(legacy.exists(), "the legacy dir is version 0: kept as N-1")
+        republish(11L)
+        assert(!legacy.exists(), "legacy dir swept by the second versioned republish")
       } finally graft.util.Fs.deleteRecursively(legacyStore)
+    } finally graft.util.Fs.deleteRecursively(store)
+  }
+
+  test("versioned publish: a lazy frame read on version N still collects after N+1 is published") {
+    val store = java.nio.file.Files.createTempDirectory("graft-spec-store-lazy")
+    try {
+      def pub(v: Long): Unit = graft.plans.StatsStore.publishNamed(
+        spark.range(4).select(lit(v).as("payload")), store.toString, "probe")
+      pub(1L)
+      pub(2L)
+      val onV2 = spark.read.parquet(graft.plans.StatsStore
+        .artifactPath(spark, store.toString, "probe").get)
+      pub(3L)
+      assert(onV2.collect().map(_.getLong(0)).toSeq == Seq.fill(4)(2L),
+        "the frame resolved before the publish reads the version it resolved")
     } finally graft.util.Fs.deleteRecursively(store)
   }
 
@@ -476,11 +487,11 @@ class Batch28Spec extends SparkSuite {
       for (probe <- Seq("gbp_amort_a", "gbp_amort_b")) {
         val df = consumer(probe)
         df.collect()
-        val all = nodes(df.queryExecution.executedPlan)
+        val all = planNodes(df.queryExecution.executedPlan)
         assert(all.exists(hasBloomFilter),
           s"consumer $probe rides the shared stored bitmap")
         assert(all.collect { case e: ShuffleExchangeLike => e }
-            .exists(e => nodes(e.child).exists(hasBloomFilter)),
+            .exists(e => planNodes(e.child).exists(hasBloomFilter)),
           s"consumer $probe prunes pre-shuffle")
       }
       // the non-enforcement consumers' claim: the stored q338 frame IS
@@ -504,7 +515,7 @@ class Batch28Spec extends SparkSuite {
     try {
       val df = graft.operators.PipelineAudits.yieldV3(spark, sf)
       df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(!all.exists(_.nodeName.contains("CartesianProduct")),
         "nothing all-pairs anywhere in the seven-gate report")
       val semis = all.collect {
@@ -523,7 +534,7 @@ class Batch28Spec extends SparkSuite {
   test("q364 histogram from store: estimates == q335's rebuild path; NO rank window in the consumer plan") {
     val df = graft.operators.Relational.histPersisted(spark, sf)
     val rows = df.collect()
-    val all = nodes(df.queryExecution.executedPlan)
+    val all = planNodes(df.queryExecution.executedPlan)
     assert(!all.exists(_.isInstanceOf[
         org.apache.spark.sql.execution.window.WindowExec]),
       "the stored artifact replaced the two-pass rank build — no window anywhere")
@@ -546,7 +557,7 @@ class Batch28Spec extends SparkSuite {
         "kept + cascade rebuilds the pre-deletion books on every nation")
       // the executed deletion really is the FK chain: an anti join
       // (customers minus forget set) and semi joins down the chain
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       val joinTypes = all.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.joinType }
       assert(joinTypes.contains(org.apache.spark.sql.catalyst.plans.LeftAnti),
@@ -613,7 +624,7 @@ class Batch28Spec extends SparkSuite {
     try {
       val q = chain(marker)
       val rows = q.collect()
-      val all = nodes(q.queryExecution.executedPlan)
+      val all = planNodes(q.queryExecution.executedPlan)
       // (a) the bloom prefilter fired
       assert(all.exists(hasBloomFilter),
         "the bloom prefilter spliced into the composed plan")
@@ -628,7 +639,7 @@ class Batch28Spec extends SparkSuite {
         }.exists(_ == marker)))
       assert(markerJoin.length == 1 &&
         joins.filterNot(_ eq markerJoin.head)
-          .exists(oj => nodes(oj).exists(_ eq markerJoin.head)),
+          .exists(oj => planNodes(oj).exists(_ eq markerJoin.head)),
         "the marked customer join runs innermost under BOTH rules")
       // (c) convergence hygiene: the optimized logical plan carries no
       // DUPLICATED splice (the pre-fix oscillation left the batch

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 

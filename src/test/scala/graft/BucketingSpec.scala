@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.Bucketing
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Bucketed co-located join: correctness AND the plan property that
   * justifies it — no shuffle exchange anywhere, whether the planner
@@ -11,16 +10,8 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 class BucketingSpec extends SparkSuite {
 
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val self = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(allNodes)
-  }
-
   private def shuffleCount(df: org.apache.spark.sql.DataFrame): Int =
-    allNodes(df.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeLike])
+    planNodes(df.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeLike])
 
   test("co-located join has zero shuffles and matches a plain join") {
     val joined = Bucketing.colocatedOrderJoin(spark, sf, buckets = 4)
@@ -45,7 +36,7 @@ class BucketingSpec extends SparkSuite {
     try {
       val smj = Bucketing.colocatedOrderJoin(spark, sf, buckets = 4)
       assert(smj.count() == n)
-      val nodes = allNodes(smj.queryExecution.executedPlan).map(_.nodeName)
+      val nodes = planNodes(smj.queryExecution.executedPlan).map(_.nodeName)
       assert(nodes.exists(_.contains("SortMergeJoin")), nodes.toString)
       assert(shuffleCount(smj) == 0,
         s"expected zero shuffles in bucketed SMJ plan: $nodes")

@@ -3,6 +3,7 @@ package graft
 import graft.sinks.{BatchedUpsertSink, NdjsonDirSink, UpdateTransport}
 import graft.operators.Reindex
 import graft.sources.NdjsonDocSource
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, StructsToJson}
 import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning

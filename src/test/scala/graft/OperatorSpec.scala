@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants per operator family, on sf0.001 — complements
@@ -3605,16 +3606,7 @@ class OperatorSpec extends SparkSuite {
     val df = TextAnalysis.postingsStorageAudit(spark, sf)
     // plan pins: the gap window partitions by token (never global); no joins.
     // AQE-aware walk (WindowExec hides inside AdaptiveSparkPlanExec pre-execution)
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val self = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          nodes(a.executedPlan)
-        case _ => Seq(p)
-      }
-      self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-    }
-    val all = nodes(df.queryExecution.executedPlan)
+    val all = planNodes(df.queryExecution.executedPlan)
     val ws = all.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(ws.nonEmpty && ws.forall(_.partitionSpec.nonEmpty), "no unkeyed window")
@@ -3676,16 +3668,7 @@ class OperatorSpec extends SparkSuite {
     // no window at all (vocab-sized or otherwise), no cartesian
     val roundPlan = Tokenizer.pairCounts(Tokenizer.initialSymbols(spark, sf))
       .queryExecution.executedPlan
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val self = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          nodes(a.executedPlan)
-        case _ => Seq(p)
-      }
-      self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-    }
-    val all = nodes(roundPlan)
+    val all = planNodes(roundPlan)
     assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
       "BPE superstep must not use a window")
     assert(!all.exists(_.nodeName.contains("CartesianProduct")))
@@ -3711,17 +3694,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("q296 exact-substring: every reported span's text matches verbatim and is maximal; keyed window; exchange reused") {
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val self = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          nodes(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: nodes(q.plan)
-        case _ => Seq(p)
-      }
-      self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-    }
     // the 100 TB shape: with the fixture-scale broadcast disabled, the
     // anchor self-join is an SMJ whose second side is a ReusedExchange
     // of the single gram-key shuffle (SCALING.md exchange-reuse rule)
@@ -3729,7 +3701,7 @@ class OperatorSpec extends SparkSuite {
     val rows = try {
       val df = Dedup.exactSubstrSpans(spark, sf)
       val out = df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       assert(!all.exists(_.nodeName.contains("CartesianProduct")),
         "anchor join is a content equi-join, never all-pairs")
       val ws = all.collect {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.PipelineAudits
 import graft.operators.PipelineAudits.{MisraGries, TokHv}
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -13,14 +14,7 @@ import org.apache.spark.sql.functions._
   */
 class PipelineAuditsSpec extends SparkSuite {
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val self = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-  }
-  private def plan(df: DataFrame): Seq[SparkPlan] = nodes(df.queryExecution.executedPlan)
+  private def plan(df: DataFrame): Seq[SparkPlan] = planNodes(df.queryExecution.executedPlan)
   private def shuffles(df: DataFrame): Int = plan(df).count(_.isInstanceOf[ShuffleExchangeLike])
   private def names(df: DataFrame): Seq[String] = plan(df).map(_.nodeName)
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.util.Harness.planNodes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
@@ -17,15 +18,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
   */
 class PlanGuardSpec extends SparkSuite {
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val self = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case _ => Seq(p)
-    }
-    self ++ p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes)
-  }
-
-  private def plan(df: DataFrame): Seq[SparkPlan] = nodes(df.queryExecution.executedPlan)
+  private def plan(df: DataFrame): Seq[SparkPlan] = planNodes(df.queryExecution.executedPlan)
 
   // broadcast exchanges are free at scale (dim-sized); only count the
   // data-sized shuffles
@@ -583,7 +576,7 @@ class PlanGuardSpec extends SparkSuite {
     val ws = plan(welch).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(ws.size == 1)
-    assert(nodes(ws.head.child).exists(_.nodeName.contains("HashAggregate")),
+    assert(planNodes(ws.head.child).exists(_.nodeName.contains("HashAggregate")),
       "rank window must consume the aggregated sources frame")
   }
 
@@ -607,7 +600,7 @@ class PlanGuardSpec extends SparkSuite {
     val expands = plan(df).collect {
       case e: org.apache.spark.sql.execution.ExpandExec => e }
     assert(expands.size == 1, "native unpivot must plan as one Expand")
-    assert(nodes(expands.head.child).exists(_.nodeName.contains("HashAggregate")),
+    assert(planNodes(expands.head.child).exists(_.nodeName.contains("HashAggregate")),
       "Expand must consume the aggregated month frame")
     assert(!names(df).exists(_.contains("Join")))
   }
@@ -627,7 +620,7 @@ class PlanGuardSpec extends SparkSuite {
       p.nodeName.contains("CartesianProduct"))
     assert(joins.nonEmpty)
     joins.foreach(j => j.children.foreach(c =>
-      assert(nodes(c).exists(_.nodeName.contains("HashAggregate")),
+      assert(planNodes(c).exists(_.nodeName.contains("HashAggregate")),
         "cross join sides must be the aggregated name vocabulary")))
     val ws = plan(df).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
@@ -1197,7 +1190,7 @@ class PlanGuardSpec extends SparkSuite {
       val df = Bucketing.bucketedJoinAgg(spark, "graft_li_pin237", "graft_ord_pin237")
       val join = plan(df).collectFirst {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.get
-      val belowJoin = nodes(join).count(_.isInstanceOf[ShuffleExchangeLike])
+      val belowJoin = planNodes(join).count(_.isInstanceOf[ShuffleExchangeLike])
       assert(belowJoin == 0, "bucketed sides must join without an exchange")
       assert(shuffles(df) == 1, "the only shuffle is the bounded priority aggregate")
     } finally {

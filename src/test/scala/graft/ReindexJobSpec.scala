@@ -5,7 +5,8 @@ import graft.functions.ArgotFlatten
 import graft.operators.{ReindexJob, SkewJoin, Similarity}
 import graft.sinks.NdjsonDirSink
 import graft.sources.{DocSource, InMemoryKvTransport, JdbcDocSource, KvAuthorityStore, ParquetDocSource}
-import graft.util.Lockfile
+import graft.util.{Harness, Lockfile}
+import graft.util.Harness.planNodes
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, QueryExecution, SparkPlan}
@@ -59,13 +60,6 @@ class ReindexJobSpec extends SparkSuite {
   private def kvStore = new KvAuthorityStore(
     new InMemoryKvTransport((0 until 4).map(o => s"src$o" -> s"auth:src$o").toMap), batchSize = 64)
 
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    ()
-  }
-
   /** Every NDJSON line a chunked sink wrote, in chunk order (part files
     * are named by range partition, so the order is the global id order).
     */
@@ -87,13 +81,13 @@ class ReindexJobSpec extends SparkSuite {
           ()
         }
     }
-    drainListenerBus()
+    Harness.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     val r =
       try ReindexJob.run(spark, conf.copy(authorities = true), new ParquetDocSource(mixedCorpus),
           new NdjsonDirSink(out.toString + "/docs", chunkSize = 300),
           Lockfile.default(out.toString), authorityStore = Some(kvStore))
-      finally { drainListenerBus(); spark.sparkContext.removeSparkListener(listener) }
+      finally { Harness.drainListenerBus(spark); spark.sparkContext.removeSparkListener(listener) }
     val res = r.toOption.get
     // a read of the cache counts one record per cached column batch, at
     // most one per task here (every partition is smaller than a batch);
@@ -143,7 +137,7 @@ class ReindexJobSpec extends SparkSuite {
     try ReindexJob.run(spark, conf.copy(authorities = true), source,
         new NdjsonDirSink(out.toString + "/docs", chunkSize = 300),
         Lockfile.default(out.toString), authorityStore = Some(kvStore)).toOption.get
-    finally { drainListenerBus(); spark.listenerManager.unregister(listener) }
+    finally { Harness.drainListenerBus(spark); spark.listenerManager.unregister(listener) }
     val run = plans.asScala.toSeq.flatMap(planNodes)
     val cache = run.collectFirst { case s: InMemoryTableScanExec => planNodes(s.relation.cachedPlan) }
       .getOrElse(fail("the run reads no cache"))

@@ -26,24 +26,10 @@ abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
-  /** Flatten a physical plan, unwrapping AQE wrapper/stage nodes — the
-    * ONE walker every plan-shape pin should use (it was re-derived
-    * per-spec before batch 43's review flagged the ninth copy; a Spark
-    * upgrade adding a wrapper node now needs exactly one edit).
-    */
-  protected def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p.flatMap {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      planNodes(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      q +: planNodes(q.plan)
-    case n => Seq(n)
-  }
-
   /** File scans in a plan (AQE-unwrapped) — the plan-pin staple. */
   protected def planScans(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-    planNodes(p).collect {
+    graft.util.Harness.planNodes(p).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
 }
