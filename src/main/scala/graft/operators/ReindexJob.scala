@@ -79,7 +79,7 @@ object ReindexJob {
       // write and the soft-error count read the cache.  So each doc is
       // scanned once, parsed once and looked up in the store once.
       // The struct is split only above the cache; split below it, the
-      // projection could collapse onto the UDF and parse twice.
+      // projection could collapse onto the kernel and parse twice.
       val loaded = source.load(spark)
       val cached = store.map(_.enrich(loaded)).getOrElse(loaded)
         .withColumn("p", ArgotFlatten.parseFlatten(col("content"))).persist()

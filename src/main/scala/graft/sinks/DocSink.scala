@@ -123,13 +123,20 @@ trait UpdateTransport extends Serializable {
 /** HTTP JSON-update transport: POSTs NDJSON batches to
   * `{solrUrl}/update/json/docs`.  Constructed lazily per executor so
   * the client never rides the closure.
+  *
+  * Both waits are bounded, as in `RespKvTransport`: 5 s to connect and
+  * 10 s for the response to a batch.  A server that accepts the
+  * connection and never answers fails the send with an `IOException`
+  * (and the task retries) instead of hanging the task.
   */
 final class HttpUpdateTransport(solrUrl: String) extends UpdateTransport {
-  @transient private lazy val client = java.net.http.HttpClient.newHttpClient()
+  @transient private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(5)).build()
   override def send(batch: Seq[(String, String)]): Unit = {
     val body = batch.map(_._2).mkString("\n")
     val req = java.net.http.HttpRequest.newBuilder()
       .uri(java.net.URI.create(s"$solrUrl/update/json/docs"))
+      .timeout(java.time.Duration.ofSeconds(10))
       .header("Content-Type", "application/json")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
       .build()

@@ -54,4 +54,21 @@ class HttpSinkSpec extends SparkSuite {
         Option(e.getCause).exists(_.getMessage.contains("update failed")))
     }
   }
+
+  test("a server that accepts the POST and never answers fails the send in bounded time") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/solr/update/json/docs", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = { release.await(); ex.close() }
+    })
+    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    server.start()
+    try {
+      val t = new HttpUpdateTransport(s"http://127.0.0.1:${server.getAddress.getPort}/solr")
+      val t0 = System.nanoTime()
+      intercept[java.io.IOException](t.send(Seq("1" -> """{"id":"1"}""")))
+      val waitedS = (System.nanoTime() - t0) / 1e9
+      assert(waitedS < 30, s"send gave up after $waitedS s")
+    } finally { release.countDown(); server.stop(0) }
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.ReindexConfig
-import graft.functions.ArgotFlatten
+import graft.functions.{ArgotFlatten, ParseFlatten}
 import graft.operators.{ReindexJob, SkewJoin, Similarity}
 import graft.sinks.NdjsonDirSink
 import graft.sources.{DocSource, InMemoryKvTransport, JdbcDocSource, KvAuthorityStore, ParquetDocSource}
@@ -114,8 +114,12 @@ class ReindexJobSpec extends SparkSuite {
       val flat = source.load(spark)
         .filter(ArgotFlatten.parseError(col("content")).isNull)
         .withColumn("flat", ArgotFlatten.flattenArgot(col("content")))
-      new NdjsonDirSink(out.toString + "/ref", chunkSize = 300)
-        .write(store.map(_.enrich(flat)).getOrElse(flat))
+      // the enrichment decodes its input into an external Row, which
+      // hands the flat map back in Scala-HashMap key order; flattening
+      // again in place restores the flatten's first-seen order
+      val ref = store.map(_.enrich(flat).withColumn("flat", ArgotFlatten.flattenArgot(col("content"))))
+        .getOrElse(flat)
+      new NdjsonDirSink(out.toString + "/ref", chunkSize = 300).write(ref)
       val got = sinkBytes(out.resolve("job"))
       assert(got == sinkBytes(out.resolve("ref")), s"withStore=$withStore")
       val keys = "\"([a-z_]+)\":".r.findAllMatchIn(got.linesIterator.next()).map(_.group(1)).toSeq
@@ -141,13 +145,7 @@ class ReindexJobSpec extends SparkSuite {
     val run = plans.asScala.toSeq.flatMap(planNodes)
     val cache = run.collectFirst { case s: InMemoryTableScanExec => planNodes(s.relation.cachedPlan) }
       .getOrElse(fail("the run reads no cache"))
-    def isParse(e: Expression): Boolean = e match {
-      case u: ScalaUDF => u.dataType match {
-        case st: StructType => st.fieldNames.toSeq == Seq("err", "flat")
-        case _ => false
-      }
-      case _ => false
-    }
+    def isParse(e: Expression): Boolean = e.isInstanceOf[ParseFlatten]
     val enrich = cache.collect { case m: MapPartitionsExec => m }
     assert(enrich.size == 1, "one kv enrichment in the cached plan")
     // the columns the enrichment decodes into an external Row
@@ -168,6 +166,10 @@ class ReindexJobSpec extends SparkSuite {
     assert(planNodes(parses.head).exists(_ eq enrich.head), "the parse sits above the enrichment")
     val outside = run.filter(_.expressions.exists(_.exists(isParse)))
     assert(outside.isEmpty, s"parse outside the cache: ${outside.map(_.nodeName)}")
+    val udfs = (run ++ cache).flatMap(_.expressions).flatMap(_.collect {
+      case u: ScalaUDF if u.references.exists(_.name == "content") => u
+    })
+    assert(udfs.isEmpty, s"a Scala UDF reads content: $udfs")
   }
 
   test("e2e: parquet source → flatten → chunked ndjson sink → checkpoint") {

@@ -270,6 +270,39 @@ class PinsSpec extends SparkSuite {
     assert(acc.value < 128L, "consumers read blocks, they do not recompute")
     pinned.unpersist(true)
   }
+
+  test("releaseAll logs no lineage-truncated warning per pin; other warnings still print") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("pins-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { seen.add(e.getMessage.getFormattedMessage); () }
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val level = root.getLevel
+    root.addAppender(capture, Level.WARN, null)
+    Configurator.setRootLevel(Level.WARN)
+    try {
+      val pinned = graft.util.Pins.eager(spark.range(0, 64, 1, 4).toDF())
+      assert(pinned.count() == 64L)
+      graft.util.Pins.releaseAll(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, "releaseAll unpersisted the pin")
+      LogManager.getLogger("graft.PinsSpec").warn("an unrelated warning")
+    } finally {
+      Configurator.setRootLevel(level)
+      root.removeAppender("pins-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = seen.asScala.toSeq
+    assert(msgs.contains("an unrelated warning"), msgs)
+    assert(!msgs.exists(_.contains("was locally checkpointed")), msgs)
+  }
 }
 
 /** Accumulator-based soft-error accounting inside Spark tasks. */
