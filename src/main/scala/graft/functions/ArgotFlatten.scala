@@ -197,7 +197,7 @@ object ParseFlatten {
     * UTF-16 or UTF-32, which the `String` form never does.
     */
   private def streamable(text: UTF8String): Boolean =
-    text.getByte(0) == '{' && (text.numBytes < 2 || text.getByte(1) != 0) && text.isValid
+    text.getByte(0) == '{' && (text.numBytes < 2 || text.getByte(1) != 0) && Utf8.wellFormed(text)
 
   private def parser(text: UTF8String): JsonParser = text.getBaseObject match {
     case a: Array[Byte] =>

@@ -32,19 +32,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // base table is answered from the rename-published MV artifact
     // (plan substitution with exprId-preserving aliases)
     e.injectOptimizerRule(_ => RewriteToMv)
-    GraftExtensions.functions.foreach { case (name, cls, build) =>
-      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
-    }
+    GraftExtensions.functions.foreach(e.injectFunction)
   }
 }
 
 object GraftExtensions {
-  /** The engine's SQL functions as (name, expression class, builder):
-    * the one table both `GraftExtensions` (new sessions) and
-    * `RegisterFunctions` (existing sessions) register.  Every builder
-    * checks its arity and names the signature when it fails.
+  /** The engine's SQL functions as (name, info, builder): the one
+    * table both `GraftExtensions` (new sessions) and `RegisterFunctions`
+    * (existing sessions) register.  Every builder checks its arity and
+    * names the signature when it fails.
     */
-  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+  private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     fn("graft_token_count", classOf[TokenCount], 1, "graft_token_count(string)") { a =>
       TokenCount(a.head) },
     fn("graft_dot", classOf[DotProduct], 2, "graft_dot(arrayFloat, arrayFloat)") { a =>
@@ -73,8 +71,10 @@ object GraftExtensions {
 
   /** A table row whose builder requires `arity` arguments. */
   private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
-      build: Seq[Expression] => Expression): (String, Class[_], Seq[Expression] => Expression) =
-    (name, cls, (args: Seq[Expression]) => { require(args.length == arity, usage); build(args) })
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => { require(args.length == arity, usage); build(args) })
 
   /** Resolve a literal int argument at registration time (k/w/n are
     * plan-shaping constants, not data).

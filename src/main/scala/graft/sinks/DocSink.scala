@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.functions.DocJson
 import graft.util.{ErrorCollector, HealthCheck}
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
@@ -128,6 +129,11 @@ trait UpdateTransport extends Serializable {
   * 10 s for the response to a batch.  A server that accepts the
   * connection and never answers fails the send with an `IOException`
   * (and the task retries) instead of hanging the task.
+  *
+  * Backpressure (HTTP 429 or 503) re-sends the same batch after 100,
+  * 200 and 400 ms; a fourth refusal, or any other non-2xx status, fails
+  * the send, so a task retry re-sends its partition only when Solr
+  * stays overloaded.
   */
 final class HttpUpdateTransport(solrUrl: String) extends UpdateTransport {
   @transient private lazy val client = java.net.http.HttpClient.newBuilder()
@@ -140,10 +146,21 @@ final class HttpUpdateTransport(solrUrl: String) extends UpdateTransport {
       .header("Content-Type", "application/json")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
       .build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() / 100 != 2)
-      throw new java.io.IOException(s"update failed: HTTP ${resp.statusCode()}")
+    var attempt = 0
+    var status = client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
+    while ((status == 429 || status == 503) && attempt < HttpUpdateTransport.BackoffMs.length) {
+      Thread.sleep(HttpUpdateTransport.BackoffMs(attempt))
+      attempt += 1
+      status = client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
+    }
+    if (status / 100 != 2)
+      throw new java.io.IOException(s"update failed: HTTP $status")
   }
+}
+
+private object HttpUpdateTransport {
+  /** The waits before each re-send of a refused batch. */
+  private val BackoffMs = Array(100L, 200L, 400L)
 }
 
 /** Batched upsert sink: `foreachPartition` + `grouped(chunkSize)` —
@@ -152,6 +169,13 @@ final class HttpUpdateTransport(solrUrl: String) extends UpdateTransport {
   * Batch boundaries honor chunkSize; an empty partition sends nothing
   * (B8).  Per-record soft failures are counted, not job-fatal (B9/B10
   * fixed); transport failures fail the task and retry.
+  *
+  * Each doc is one JSON object of every column of the frame, the bytes
+  * `to_json(struct(...))` writes, built once per doc above the range
+  * exchange by [[graft.functions.DocJson.column]]: a one-pass UTF-8
+  * writer when every leaf is a string (under structs, arrays and
+  * string-keyed maps, as every in-repo doc frame is), `to_json` for any
+  * other schema.
   */
 final class BatchedUpsertSink(
     transport: UpdateTransport, chunkSize: Int,
@@ -166,7 +190,7 @@ final class BatchedUpsertSink(
     val (n, m) = IdOrder(df) { ordered =>
       // the JSON is built above the range exchange, once per doc: the
       // sampling pass reads only the exchange's child
-      ordered.select(col("id"), to_json(struct(df.columns.map(col): _*)).as("doc"))
+      ordered.select(col("id"), DocJson.column(df).as("doc"))
         .foreachPartition { rows: Iterator[Row] =>
           rows.map(r => (r.getString(0), r.getString(1)))
             .grouped(size)

@@ -4,8 +4,8 @@ import graft.sinks.{BatchedUpsertSink, NdjsonDirSink, UpdateTransport}
 import graft.operators.Reindex
 import graft.sources.NdjsonDocSource
 import graft.util.Harness.planNodes
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, StructsToJson}
-import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import graft.functions.DocJson
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -118,15 +118,10 @@ class ChunkSinkSpec extends SparkSuite {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
     assert(ranges.size == 1, "the sink orders through one range exchange")
-    // to_json is runtime-replaced by an invoke on a StructsToJsonEvaluator
-    def isToJson(e: Expression): Boolean = e match {
-      case _: StructsToJson => true
-      case l: Literal => l.value.isInstanceOf[StructsToJsonEvaluator]
-      case _ => false
-    }
-    val below = planNodes(ranges.head.child).filter(_.expressions.exists(_.exists(isToJson)))
-    assert(below.isEmpty, s"to_json below the range exchange: ${below.map(_.nodeName)}")
-    assert(planNodes(plans.peek).exists(_.expressions.exists(_.exists(isToJson))),
+    def isDocJson(e: Expression): Boolean = e.isInstanceOf[DocJson]
+    val below = planNodes(ranges.head.child).filter(_.expressions.exists(_.exists(isDocJson)))
+    assert(below.isEmpty, s"DocJson below the range exchange: ${below.map(_.nodeName)}")
+    assert(planNodes(plans.peek).exists(_.expressions.exists(_.exists(isDocJson))),
       "the plan serializes the docs somewhere")
   }
 
@@ -174,4 +169,5 @@ object BatchCollector extends UpdateTransport {
   override def send(batch: Seq[(String, String)]): Unit = batches.add(batch)
   def sizes(): Seq[Int] = batches.asScala.map(_.size).toSeq
   def ids(): Seq[String] = batches.asScala.flatMap(_.map(_._1)).toSeq
+  def docs(): Seq[(String, String)] = batches.asScala.flatten.toSeq
 }

@@ -272,36 +272,33 @@ class PinsSpec extends SparkSuite {
   }
 
   test("releaseAll logs no lineage-truncated warning per pin; other warnings still print") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{Configurator, Property}
-    import scala.jdk.CollectionConverters._
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("pins-capture", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = { seen.add(e.getMessage.getFormattedMessage); () }
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    val level = root.getLevel
-    root.addAppender(capture, Level.WARN, null)
-    Configurator.setRootLevel(Level.WARN)
-    try {
+    val msgs = warnings {
       val pinned = graft.util.Pins.eager(spark.range(0, 64, 1, 4).toDF())
       assert(pinned.count() == 64L)
       graft.util.Pins.releaseAll(spark)
       assert(spark.sparkContext.getPersistentRDDs.isEmpty, "releaseAll unpersisted the pin")
-      LogManager.getLogger("graft.PinsSpec").warn("an unrelated warning")
-    } finally {
-      Configurator.setRootLevel(level)
-      root.removeAppender("pins-capture")
-      ctx.updateLoggers()
-      capture.stop()
+      org.apache.logging.log4j.LogManager.getLogger("graft.PinsSpec").warn("an unrelated warning")
     }
-    val msgs = seen.asScala.toSeq
     assert(msgs.contains("an unrelated warning"), msgs)
     assert(!msgs.exists(_.contains("was locally checkpointed")), msgs)
+  }
+}
+
+/** `plans.RegisterFunctions` on a session that already has the
+  * functions, and on one missing one of them.
+  */
+class RegisterFunctionsSpec extends SparkSuite {
+  test("RegisterFunctions registers only missing names: no replaced-function warning, graft_dot resolves") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession() // built with GraftExtensions, as GraftSession's sessions are
+    s.sessionState.functionRegistry.dropFunction(FunctionIdentifier("graft_dot"))
+    val msgs = warnings {
+      graft.plans.RegisterFunctions(s)
+      graft.plans.RegisterFunctions(s)
+    }
+    assert(!msgs.exists(_.contains("replaced a previously registered function")), msgs)
+    assert(s.sql("SELECT graft_dot(array(1f, 2f), array(3f, 4f))").head.get(0).toString.toDouble == 11.0)
+    assert(s.sql("SELECT graft_norm(array(3f, 4f))").head.get(0).toString.toDouble == 5.0)
   }
 }
 
