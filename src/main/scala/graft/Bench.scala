@@ -1,9 +1,7 @@
 package graft
 
 import graft.util.Harness
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
 
 /** Benchmark entry point (driver contract): runs every registered query
   * against SPARK_GRAFT_SF_DIR and prints ONE compact JSON line as the
@@ -52,23 +50,6 @@ import java.util.concurrent.atomic.AtomicLong
   * host stall spans suite-order neighbors (see blockOutliers).
   */
 object Bench {
-
-  /** Cumulative task-level I/O counters (observability, O16): records
-    * read from sources and shuffle bytes written, snapshotted around
-    * each query to report its I/O footprint alongside wall time.
-    */
-  private final class IoListener extends SparkListener {
-    val recordsRead = new AtomicLong(0L)
-    val shuffleBytes = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        recordsRead.addAndGet(m.inputMetrics.recordsRead)
-        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-  }
 
   /** Per-query seconds from the newest usable committed
     * `BENCH_r{N}.json` in the working directory, keyed by the short
@@ -203,8 +184,7 @@ object Bench {
 
     Harness.warmUp(spark, sfDir)
 
-    val io = new IoListener
-    spark.sparkContext.addSparkListener(io)
+    val io = Harness.counters(spark)
 
     // Noise fix from VERDICT r4 #1: a single-run contract line made the
     // committed record a lottery (q36: 6.78 s at 0 shuffle bytes — a

@@ -1,8 +1,6 @@
 package graft
 
 import graft.util.Harness
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Optimization-round tooling: dump `explain("formatted")` for named
   * queries (or the whole registry) into `<outDir>/<query>_<tag>.txt`,
@@ -25,18 +23,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    val jobs = new AtomicLong(0L)
-    val stages = new AtomicLong(0L)
-    val tasks = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
-      }
-    })
+    val c = Harness.counters(spark)
     Harness.warmUp(spark, sfDir)
 
     names.foreach { name =>
@@ -45,7 +32,7 @@ object PlanDump {
         case Some(fn) =>
           try {
             Harness.drainListenerBus(spark)
-            val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
+            val (j0, s0, t0) = (c.jobs.get, c.stages.get, c.tasks.get)
             val t = System.nanoTime()
             val df = fn(spark, sfDir)
             val planTxt =
@@ -61,8 +48,8 @@ object PlanDump {
             spark.catalog.clearCache()
             graft.util.Pins.releaseAll(spark)
             Harness.drainListenerBus(spark)
-            println(f"PROF $name%-28s sec=$sec%7.2f jobs=${jobs.get - j0}%3d " +
-              s"stages=${stages.get - s0} tasks=${tasks.get - t0}")
+            println(f"PROF $name%-28s sec=$sec%7.2f jobs=${c.jobs.get - j0}%3d " +
+              s"stages=${c.stages.get - s0} tasks=${c.tasks.get - t0}")
           } catch {
             case e: Throwable =>
               println(s"PROF $name ERROR ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")

@@ -1605,19 +1605,25 @@ object Dedup {
       .orderBy("source")
   }
 
-  /** Positional k-grams keyed by their 60-bit content hash — one row
-    * per (doc, position), over an arbitrary (doc_id, text) frame.
+  /** The token-array frame every ExactSubstr entry point takes:
+    * (doc_id, keep…, w = tokens(text)).
     */
-  def positionalGramsFrom(docs: DataFrame, k: Int): DataFrame =
-    positionalGramsFromTokens(
-      docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("w")), k)
+  private[graft] def tokenized(docs: DataFrame, keep: String*): DataFrame =
+    docs.select((col("doc_id") +: keep.map(col)) :+
+      TextFunctions.tokens(col("text")).as("w"): _*)
 
-  /** Same over a PRE-TOKENIZED (doc_id, w: array<string>) frame — the
-    * tokenize-once entry (r22): a consumer that derives several gram
-    * widths (or grams plus the positional cut) from one corpus pins
-    * the token arrays once and feeds them here, instead of paying the
-    * tokenizer per consumer.  Gram text, positions and the 60-bit key
-    * are expression-identical to the text entry above.
+  /** [[tokenized]], eager-pinned: for a consumer that reads the arrays
+    * more than once (anchor grams, the positional cut, the n_tok
+    * recount) — one tokenizer pass instead of one per consumer.  Eager
+    * because the downstream joins may broadcast an aggregate side (the
+    * util/Pins rule).
+    */
+  private[operators] def pinnedTokens(docs: DataFrame, keep: String*): DataFrame =
+    graft.util.Pins.eager(tokenized(docs, keep: _*))
+
+  /** Positional k-grams keyed by their 60-bit content hash — one row
+    * per (doc, position), over a PRE-TOKENIZED (doc_id, w:
+    * array<string>) frame.
     */
   def positionalGramsFromTokens(tw: DataFrame, k: Int): DataFrame =
     tw
@@ -1660,10 +1666,10 @@ object Dedup {
     */
   def exactSubstrSpans(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12): DataFrame =
-    exactSubstrSpansFrom(
-      positionalGramsFrom(Tables.documents(spark, dir), k), k, minLen)
+    exactSubstrSpansFrom(positionalGramsFromTokens(
+      tokenized(Tables.documents(spark, dir)), k), k, minLen)
 
-  /** The chain over a pre-built anchor frame (positionalGramsFrom) —
+  /** The chain over a pre-built anchor frame (positionalGramsFromTokens) —
     * split out so the property spec can drive crafted corpora through
     * the identical plan.
     */
@@ -1722,7 +1728,7 @@ object Dedup {
     */
   def exactSubstrSpansCapped(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12, maxAnchorDf: Int = 16): DataFrame = {
-    val grams = positionalGramsFrom(Tables.documents(spark, dir), k)
+    val grams = positionalGramsFromTokens(tokenized(Tables.documents(spark, dir)), k)
     capSpansWithAccounting(grams, k, minLen, maxAnchorDf)
   }
 
@@ -1780,11 +1786,7 @@ object Dedup {
     */
   def dupCoverage(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12): DataFrame = {
-    // tokenize ONCE (r22, the q337 discipline): anchors + the n_tok
-    // recount share the pinned token arrays
-    val tw = graft.util.Pins.eager(Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        TextFunctions.tokens(col("text")).as("w")))
+    val tw = pinnedTokens(Tables.documents(spark, dir), "source")
     dupCoverageFromTokens(tw,
       exactSubstrSpansFrom(positionalGramsFromTokens(tw, k), k, minLen))
   }
@@ -1808,27 +1810,17 @@ object Dedup {
     */
   def dupCoverageCapped(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12, maxAnchorDf: Int = 16): DataFrame = {
-    val tw = graft.util.Pins.eager(Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        TextFunctions.tokens(col("text")).as("w")))
+    val tw = pinnedTokens(Tables.documents(spark, dir), "source")
     val (kept, acc) = cappedGramsAndAccounting(
       positionalGramsFromTokens(tw, k), maxAnchorDf)
     dupCoverageFromTokens(tw, exactSubstrSpansFrom(kept, k, minLen))
       .crossJoin(broadcast(acc))
   }
 
-  /** The coverage rollup over an arbitrary (docs, spans) pair — split
-    * out so q301 (uncapped) and q352 (capped) share one body and the
-    * crafted-corpus spec can drive both through the identical plan.
-    */
-  private[graft] def dupCoverageFrom(docsIn: DataFrame,
-      spans: DataFrame): DataFrame =
-    dupCoverageFromTokens(
-      docsIn.select(col("doc_id"), col("source"),
-        TextFunctions.tokens(col("text")).as("w")), spans)
-
-  /** The rollup over a PRE-TOKENIZED (doc_id, source, w) frame — the
-    * tokenize-once entry (r22); size(w) ≡ size(tokens(text)).
+  /** The coverage rollup over a PRE-TOKENIZED (doc_id, source, w) frame
+    * and a span frame — split out so q301 (uncapped) and q352 (capped)
+    * share one body and the crafted-corpus spec can drive both through
+    * the identical plan.
     */
   private[graft] def dupCoverageFromTokens(tw: DataFrame,
       spans: DataFrame): DataFrame = {
@@ -1878,13 +1870,7 @@ object Dedup {
     */
   def exactSubstrCut(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12): DataFrame = {
-    // tokenize ONCE (r22): the anchor grams, the positional explode
-    // and the n_tok recount all read the pinned token arrays — one
-    // tokenizer pass instead of three (guide §5 cache-vs-recompute;
-    // eager pin because the accounting/agg side of the downstream
-    // joins may be broadcast, the util/Pins rule)
-    val tw = graft.util.Pins.eager(Tables.documents(spark, dir)
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("w")))
+    val tw = pinnedTokens(Tables.documents(spark, dir))
     exactSubstrCutFromTokens(tw,
       exactSubstrSpansFrom(positionalGramsFromTokens(tw, k), k, minLen))
   }
@@ -1916,47 +1902,26 @@ object Dedup {
     */
   def exactSubstrCutCapped(spark: SparkSession, dir: String,
       k: Int = 5, minLen: Int = 12, maxAnchorDf: Int = 16): DataFrame = {
-    // tokenize ONCE (r22, the q337 discipline): one tokenizer pass
-    // feeds the capped anchors, the positional explode and the n_tok
-    // recount via the pinned token arrays
-    val tw = graft.util.Pins.eager(Tables.documents(spark, dir)
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("w")))
+    val tw = pinnedTokens(Tables.documents(spark, dir))
     val (kept, acc) = cappedGramsAndAccounting(
       positionalGramsFromTokens(tw, k), maxAnchorDf)
     exactSubstrCutFromTokens(tw, exactSubstrSpansFrom(kept, k, minLen))
       .crossJoin(broadcast(acc))
   }
 
-  /** The cut over an arbitrary (docs, spans) pair — split out so q337
-    * (uncapped) and q351 (capped) share one body and the crafted
-    * corpus spec can drive both through the identical plan.  `spans`
-    * needs (doc_b, pos_b, match_len); survivor rule unchanged (lower
-    * id keeps its copy, doc_b side positions are cut once).
-    */
-  private[graft] def exactSubstrCutFrom(docs: DataFrame,
-      spans: DataFrame): DataFrame =
-    exactSubstrCutFromTokens(
-      docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("w")),
-      spans)
-
-  /** The cut over a PRE-TOKENIZED (doc_id, w) frame (r22, the
-    * positionalGramsFromTokens discipline): the cut consumes the
-    * corpus twice (positional explode + the n_tok recount), so a
-    * caller that also built the anchor grams from the same corpus can
-    * pin the token arrays once and tokenize ONCE instead of three
-    * times.  posexplode(w) / size(w) are expression-identical to the
-    * text form's posexplode(tokens(text)) / size(tokens(text)).
+  /** The cut over a PRE-TOKENIZED (doc_id, w) frame and a span frame —
+    * split out so q337 (uncapped), q351 (capped) and q358 share one
+    * body and the crafted-corpus spec can drive them through the
+    * identical plan.  `spans` needs (doc_b, pos_b, match_len);
+    * survivor rule unchanged (lower id keeps its copy, doc_b side
+    * positions are cut once).
     */
   private[graft] def exactSubstrCutFromTokens(tw: DataFrame,
       spans: DataFrame): DataFrame = {
     // repartition(doc_id) BEFORE the distinct (r22, guide §2.4): the
     // dedup rides the doc_id exchange the anti-join needs anyway —
     // Hash(doc_id) satisfies the distinct's (doc_id, pos) clustering
-    val cut = spans.select(col("doc_b").as("doc_id"),
-        explode(sequence(col("pos_b").cast("long"),
-          col("pos_b").cast("long") + col("match_len") - 1L)).as("pos"))
-      .repartition(col("doc_id"))
-      .distinct()
+    val cut = spanPositions(spans).repartition(col("doc_id")).distinct()
     val toks = tw
       .select(col("doc_id"),
         posexplode(col("w")).as(Seq("p", "token")))
@@ -1976,13 +1941,43 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** The token positions a span frame (doc_b, pos_b, match_len) cuts:
+    * one (doc_id, pos) row per position of each span's doc_b side, not
+    * yet distinct (overlapping spans repeat positions).
+    */
+  private[operators] def spanPositions(spans: DataFrame): DataFrame =
+    spans.select(col("doc_b").as("doc_id"),
+      explode(sequence(col("pos_b").cast("long"),
+        col("pos_b").cast("long") + col("match_len") - 1L)).as("pos"))
+
+  /** The eval designation q340, q358 and the yield report's gate 6
+    * share: hv60("ev:"‖doc_id) mod 10 = 0 (the q329 designation
+    * pattern — ~10% of the corpus).
+    */
+  private[operators] def isEval: Column =
+    pmod(graft.operators.TextAnalysis.hv60(
+      concat(lit("ev:"), col("doc_id").cast("string"))), lit(10L)) === 0L
+
+  /** k-gram hit spans: every positional k-gram of the token frame
+    * `probe` whose key also occurs in `ref`, as (doc_b, pos_b,
+    * match_len = k) span rows the cut consumes.  The hit test is a
+    * LEFT-SEMI on the gram key — fan-out ≤ 1 per probe row by
+    * definition, so no df-cap is ever needed however hot the gram.
+    */
+  private[operators] def hitSpans(probe: DataFrame, ref: DataFrame,
+      k: Int): DataFrame =
+    positionalGramsFromTokens(probe, k)
+      .join(positionalGramsFromTokens(ref, k).select("g").distinct(),
+        Seq("g"), "left_semi")
+      .select(col("doc_id").as("doc_b"), col("pos").as("pos_b"),
+        lit(k.toLong).as("match_len"))
+
   /** q340: eval-set decontamination audit — the n-gram overlap check
     * every benchmark-honest training pipeline runs (the GPT-3 appendix
     * / Lee et al. decontamination rule): an eval document whose
     * content n-grams also appear in the TRAINING corpus inflates eval
     * scores and must be flagged.  Eval membership is hash-designated
-    * (hv60("ev:"‖doc_id) mod 10 = 0, the q329 designation pattern —
-    * ~10% of the corpus); for each eval document, every positional
+    * ([[isEval]]); for each eval document, every positional
     * 8-gram (the q296 anchor machinery reused at k=8) is checked for
     * existence in the train-side gram set, and the document reports
     * n_grams, n_hit, the hit fraction (one pinned divide) and the
@@ -1999,9 +1994,7 @@ object Dedup {
   def evalContamination(spark: SparkSession, dir: String,
       k: Int = 8): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val isEval = pmod(graft.operators.TextAnalysis.hv60(
-      concat(lit("ev:"), col("doc_id").cast("string"))), lit(10L)) === 0L
-    val grams = positionalGramsFrom(docs, k)
+    val grams = positionalGramsFromTokens(tokenized(docs), k)
       .join(docs.select(col("doc_id"), isEval.as("ev")), "doc_id")
     val trainSet = grams.filter(!col("ev")).select("g").distinct()
     val evalGrams = grams.filter(col("ev"))
@@ -2036,16 +2029,9 @@ object Dedup {
     */
   def decontamCut(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val isEval = pmod(graft.operators.TextAnalysis.hv60(
-      concat(lit("ev:"), col("doc_id").cast("string"))), lit(10L)) === 0L
-    val evalDocs = docs.filter(isEval).select(col("doc_id"), col("text"))
-    val trainSet = positionalGramsFrom(docs.filter(!isEval), k)
-      .select("g").distinct()
-    val hitSpans = positionalGramsFrom(evalDocs, k)
-      .join(trainSet, Seq("g"), "left_semi")
-      .select(col("doc_id").as("doc_b"), col("pos").as("pos_b"),
-        lit(k.toLong).as("match_len"))
-    exactSubstrCutFrom(evalDocs, hitSpans)
+    val evalTw = tokenized(docs.filter(isEval))
+    exactSubstrCutFromTokens(evalTw,
+      hitSpans(evalTw, tokenized(docs.filter(!isEval)), k))
   }
 
   /** Fellegi–Sunter agreement-pattern table (q308): the probabilistic

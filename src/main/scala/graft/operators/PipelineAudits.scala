@@ -1564,7 +1564,7 @@ object PipelineAudits {
     */
   def pipelineYield(spark: SparkSession, dir: String,
       minTok: Int = 50): DataFrame =
-    yieldReport(spark, dir, minTok, withCutStage = false)
+    yieldGates(spark, dir, minTok, lastGate = 4)
 
   /** q353: the yield report v2 — q349's five gates plus the stage a
     * real curation run prices LAST: the ExactSubstr CUT (q351's
@@ -1585,17 +1585,40 @@ object PipelineAudits {
     */
   def yieldV2(spark: SparkSession, dir: String,
       minTok: Int = 50): DataFrame =
-    yieldReport(spark, dir, minTok, withCutStage = true)
+    yieldGates(spark, dir, minTok, lastGate = 5)
 
-  /** The shared gate 0-4 chain: (base frame, stage-4 survivors, the
-    * five-row report) — split out so v1/v2 (yieldReport) and v3
-    * (yieldV3) price the identical funnel.
+  /** q363: the yield report v3 — the funnel a curation run actually
+    * signs off on, ENDING where the shipped-artifact decisions end:
+    * gate 5 (the q351 capped span cut, as in v2) and gate 6, the
+    * DECONTAMINATION a benchmark-honest training corpus prices last
+    * (the q358/q340 rule applied to the TRAINING side): the
+    * hash-designated eval slice leaves the training corpus entirely
+    * (it is the benchmark, not training data), and every remaining
+    * document is redacted where one of its 8-grams appears in the
+    * eval slice — gate 6's token mass is what is left to train on.
+    *
+    * Gate 6 cuts the UNION of the gate-5 spans and the eval-hit spans
+    * on the eval-free survivor corpus, so monotonicity extends through
+    * stage 6 by construction (fewer docs, a superset of cut positions
+    * each).
+    *
+    * 100 TB shape: gates 0-4 are the single-scan q349 discipline;
+    * gate 5 rides the df-capped anchors over the already-reduced
+    * survivor corpus; gate 6's hit test is a LEFT-SEMI on the gram
+    * key — fan-out ≤ 1 by definition (the q340 argument), the eval
+    * gram set is ~10%-of-corpus-sized, and the position union is a
+    * distinct on (doc, pos) — nothing all-pairs anywhere.
     */
-  /** r22 shape (VERDICT r21 #3): the r21 form was a UNION of five
-    * 1-row aggregates, each branch re-deriving its gate's filter/join
-    * chain from the pinned base — 148 scans / 276 Exchange nodes in
-    * the v3 plan, ~50 AQE stage-materialization jobs of one task each
-    * at sf0.1.  Gates are CUMULATIVE, so:
+  def yieldV3(spark: SparkSession, dir: String,
+      minTok: Int = 50): DataFrame =
+    yieldGates(spark, dir, minTok, lastGate = 6)
+
+  /** The one yield builder: gates 0 through `lastGate` (4, 5 or 6),
+    * each row with its doc/token mass and the retention fractions
+    * against RAW.
+    *
+    * Gates 0-4 are CUMULATIVE, so no gate re-derives its filter/join
+    * chain from the pinned base:
     *   - stages 0-2 are conditional masses over base: ONE 1-row
     *     aggregate (guide §2.3 — aggregate, don't re-scan);
     *   - the survivor stages become per-row flags via keyed
@@ -1607,19 +1630,15 @@ object PipelineAudits {
     *     stages 3-4 read off ONE more 1-row aggregate;
     *   - the five rows inflate from the two 1-row frames with one
     *     explode(array(struct…)) — no union branches at all.
-    * Every gate count/mass is value-identical (same survivor sets,
-    * same count/sum semantics incl. the coalesce-to-0 empty guard),
-    * so the oracle hash is unchanged.
     *
-    * @param pinSurvivors eager-pin the flagged survivor frame — v2/v3
-    *   consume it down paths where AQE may BROADCAST the survivor id
-    *   set (the util/Pins lazy-pin rule); v1 reads it once inside its
-    *   single action and skips the pin job.
+    * Gates 5-6 count cut POSITIONS per survivor instead of rebuilding
+    * its text: span positions always lie inside [0, n_tok), so
+    * n_kept = n_tok − |cut positions| is the cut's kept-token count,
+    * and the report never ships text.  Batch28Spec pins gate 5 to the
+    * text-rebuilding cut (`Dedup.exactSubstrCutFromTokens`).
     */
-  private def yieldChain(spark: SparkSession, dir: String,
-      minTok: Int, pinSurvivors: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
+  private def yieldGates(spark: SparkSession, dir: String,
+      minTok: Int, lastGate: Int): DataFrame = {
     val base = Pins.eager(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         size(tokens(col("text"))).cast("long").as("n_tok"),
@@ -1640,7 +1659,10 @@ object PipelineAudits {
         col("doc_id") === min(when(col("k3"), col("doc_id")))
           .over(Window.partitionBy("fp")))
       .select(col("doc_id"), col("n_tok"), col("k3"), col("k4"))
-    val flagged = if (pinSurvivors) Pins.eager(flagged0) else flagged0
+    // gates after 4 read the survivors again, down paths where AQE may
+    // BROADCAST the survivor id set: eager pin (the util/Pins lazy-pin
+    // rule); q349 reads them once inside its single action, no pin job
+    val flagged = if (lastGate > 4) Pins.eager(flagged0) else flagged0
     val s34 = flagged.agg(
       count(when(col("k3"), lit(1))).as("n3"),
       coalesce(sum(when(col("k3"), col("n_tok"))), lit(0L)).as("t3"),
@@ -1661,15 +1683,45 @@ object PipelineAudits {
         g(4, "fingerprint_dedup", "n4", "t4"))).as("gr"))
       .select(col("gr.stage").as("stage"), col("gr.gate").as("gate"),
         col("gr.n_docs").as("n_docs"), col("gr.n_tokens").as("n_tokens"))
-    val s4 = flagged.filter(col("k4")).select(col("doc_id"), col("n_tok"))
-    (base, s4, five)
-  }
-
-  /** Retention terminal shared by every yield version: doc/token
-    * fractions against the RAW gate, one broadcast of the 1-row raw
-    * masses.
-    */
-  private def withRetention(all: DataFrame, base: DataFrame): DataFrame = {
+    val all = if (lastGate == 4) five else {
+      // the survivor frame carries n_tok from the PINNED base, so the
+      // kept counts need no recount; the survivors are tokenized ONCE
+      // for gate 5's 5-grams and gate 6's train-side 8-grams
+      val s4 = flagged.filter(col("k4")).select(col("doc_id"), col("n_tok"))
+      val tw = Dedup.pinnedTokens(Tables.documents(spark, dir)
+        .join(s4.select("doc_id"), "doc_id"))
+      val (kept5, _) = Dedup.cappedGramsAndAccounting(
+        Dedup.positionalGramsFromTokens(tw, 5), 16)
+      // repartition(doc_id) before the distinct (guide §2.4): one
+      // doc_id exchange serves the dedup, both keptOf rollups and the
+      // trainIds join
+      val cut5 = Dedup.spanPositions(Dedup.exactSubstrSpansFrom(kept5, 5, 12))
+        .repartition(col("doc_id")).distinct()
+      def keptOf(cut: DataFrame, docs: DataFrame): DataFrame =
+        docs.join(cut.groupBy("doc_id").agg(count(lit(1)).as("n_cutpos")),
+            Seq("doc_id"), "left")
+          .na.fill(0L, Seq("n_cutpos"))
+          .select(col("doc_id"), (col("n_tok") - col("n_cutpos")).as("n_kept"))
+      def gate(stage: Int, name: String, kept: DataFrame): DataFrame =
+        kept.filter(col("n_kept") >= 1L)
+          .agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(col("n_kept")), lit(0L)).as("n_tokens"))
+          .select(lit(stage).as("stage"), lit(name).as("gate"),
+            col("n_docs"), col("n_tokens"))
+      val six = five.unionByName(gate(5, "substr_cut", keptOf(cut5, s4)))
+      if (lastGate == 5) six else {
+        // gate 6: the q358 designation — eval docs out, eval-hit spans cut
+        val trainTw = tw.filter(!Dedup.isEval)
+        val hit8 = Dedup.hitSpans(trainTw,
+          Dedup.tokenized(Tables.documents(spark, dir).filter(Dedup.isEval)), 8)
+        val trainIds = trainTw.select("doc_id")
+        val cut6 = cut5.join(trainIds, "doc_id")
+          .unionByName(Dedup.spanPositions(hit8))
+          .repartition(col("doc_id")).distinct()
+        six.unionByName(
+          gate(6, "decontam", keptOf(cut6, s4.join(trainIds, "doc_id"))))
+      }
+    }
     val raw = base.agg(count(lit(1)).as("raw_docs"),
       sum(col("n_tok")).as("raw_tokens"))
     all.crossJoin(broadcast(raw))
@@ -1679,118 +1731,6 @@ object PipelineAudits {
         (col("n_tokens").cast("double") / col("raw_tokens").cast("double"))
           .as("token_retention"))
       .orderBy("stage")
-  }
-
-  private def yieldReport(spark: SparkSession, dir: String,
-      minTok: Int, withCutStage: Boolean): DataFrame = {
-    val (base, s4, five) =
-      yieldChain(spark, dir, minTok, pinSurvivors = withCutStage)
-    val all = if (!withCutStage) five else {
-      // gate 5: the q351 capped cut within the stage-4 survivor corpus.
-      // r22: the survivors are TOKENIZED ONCE into a pinned
-      // (doc_id, token-array) frame — the r21 form re-ran the scan +
-      // tokenizer for each of the cut's three consumers (grams, the
-      // positional explode, the n_tok recount); the pin trades one
-      // checkpoint write of the arrays for two full corpus scans +
-      // tokenizer passes (guide §5 cache-vs-recompute, decided FOR the
-      // pin because the tokenizer is the dominant per-row cost here)
-      val tw = Pins.eager(Tables.documents(spark, dir)
-        .join(s4.select("doc_id"), "doc_id")
-        .select(col("doc_id"), tokens(col("text")).as("w")))
-      val grams = Dedup.positionalGramsFromTokens(tw, 5)
-      val (kept, _) = Dedup.cappedGramsAndAccounting(grams, 16)
-      val cut = Dedup.exactSubstrCutFromTokens(tw,
-        Dedup.exactSubstrSpansFrom(kept, 5, 12))
-      val s5 = cut.filter(col("n_kept") >= 1L).agg(
-          count(lit(1)).as("n_docs"), coalesce(sum(col("n_kept")), lit(0L))
-            .as("n_tokens"))
-        .select(lit(5).as("stage"), lit("substr_cut").as("gate"),
-          col("n_docs"), col("n_tokens"))
-      five.unionByName(s5)
-    }
-    withRetention(all, base)
-  }
-
-  /** q363: the yield report v3 — the funnel a curation run actually
-    * signs off on, ENDING where the shipped-artifact decisions end:
-    * gate 5 (the q351 capped span cut, as in v2) and gate 6, the
-    * DECONTAMINATION a benchmark-honest training corpus prices last
-    * (the q358/q340 rule applied to the TRAINING side): the
-    * hash-designated eval slice leaves the training corpus entirely
-    * (it is the benchmark, not training data), and every remaining
-    * document is redacted where one of its 8-grams appears in the
-    * eval slice — gate 6's token mass is what is left to train on.
-    *
-    * Gate 5 here counts cut POSITIONS instead of rebuilding text
-    * (identical mass by construction: span positions always lie
-    * inside [0, n_tok), and the report never ships text) — pinned
-    * equal to v2's gate 5 in Batch28Spec.  Gate 6 cuts the UNION of
-    * the gate-5 spans and the eval-hit spans on the eval-free
-    * survivor corpus, so monotonicity extends through stage 6 by
-    * construction (fewer docs, a superset of cut positions each).
-    *
-    * 100 TB shape: gates 0-4 are the single-scan q349 discipline;
-    * gate 5 rides the df-capped anchors over the already-reduced
-    * survivor corpus; gate 6's hit test is a LEFT-SEMI on the gram
-    * key — fan-out ≤ 1 by definition (the q340 argument), the eval
-    * gram set is ~10%-of-corpus-sized, and the position union is a
-    * distinct on (doc, pos) — nothing all-pairs anywhere.
-    */
-  def yieldV3(spark: SparkSession, dir: String,
-      minTok: Int = 50): DataFrame = {
-    val (base, s4, five) = yieldChain(spark, dir, minTok, pinSurvivors = true)
-    // survivors tokenized ONCE (the v2 gate-5 discipline): gate 5's
-    // 5-grams and gate 6's train-side 8-grams both read the pinned
-    // token arrays instead of re-running scan+join+tokenizer each
-    val tw = Pins.eager(Tables.documents(spark, dir)
-      .join(s4.select("doc_id"), "doc_id")
-      .select(col("doc_id"), tokens(col("text")).as("w")))
-    val grams5 = Dedup.positionalGramsFromTokens(tw, 5)
-    val (kept5, _) = Dedup.cappedGramsAndAccounting(grams5, 16)
-    // repartition(doc_id) before the distinct (guide §2.4): one
-    // doc_id exchange serves the dedup, both keptOf rollups and the
-    // trainIds join
-    val cut5 = Dedup.exactSubstrSpansFrom(kept5, 5, 12)
-      .select(col("doc_b").as("doc_id"),
-        explode(sequence(col("pos_b").cast("long"),
-          col("pos_b").cast("long") + col("match_len") - 1L)).as("pos"))
-      .repartition(col("doc_id"))
-      .distinct()
-    // the survivor frame already carries n_tok from the PINNED base —
-    // reusing it saves a whole corpus scan + tokenizer pass vs
-    // re-deriving from text (the v2 cut path must re-tokenize because
-    // it rebuilds text; this report never ships text)
-    val toks = s4.select(col("doc_id"), col("n_tok"))
-    def keptOf(cut: DataFrame, docs: DataFrame): DataFrame =
-      docs.join(cut.groupBy("doc_id").agg(count(lit(1)).as("n_cutpos")),
-          Seq("doc_id"), "left")
-        .na.fill(0L, Seq("n_cutpos"))
-        .select(col("doc_id"), (col("n_tok") - col("n_cutpos")).as("n_kept"))
-    def gate(stage: Int, name: String, kept: DataFrame): DataFrame =
-      kept.filter(col("n_kept") >= 1L)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("n_kept")), lit(0L)).as("n_tokens"))
-        .select(lit(stage).as("stage"), lit(name).as("gate"),
-          col("n_docs"), col("n_tokens"))
-    val g5 = gate(5, "substr_cut", keptOf(cut5, toks))
-    // gate 6: the q358 designation — eval docs out, eval-hit spans cut
-    val isEval = pmod(graft.operators.TextAnalysis.hv60(
-      concat(lit("ev:"), col("doc_id").cast("string"))), lit(10L)) === 0L
-    val evalGrams = Dedup.positionalGramsFrom(
-        Tables.documents(spark, dir).filter(isEval)
-          .select(col("doc_id"), col("text")), 8)
-      .select("g").distinct()
-    val trainTw = tw.filter(!isEval)
-    val hit8 = Dedup.positionalGramsFromTokens(trainTw, 8)
-      .join(evalGrams, Seq("g"), "left_semi")
-      .select(col("doc_id"),
-        explode(sequence(col("pos").cast("long"),
-          col("pos").cast("long") + lit(7L))).as("pos"))
-    val trainIds = trainTw.select("doc_id")
-    val cut6 = cut5.join(trainIds, "doc_id")
-      .unionByName(hit8).repartition(col("doc_id")).distinct()
-    val g6 = gate(6, "decontam", keptOf(cut6, toks.join(trainIds, "doc_id")))
-    withRetention(five.unionByName(g5).unionByName(g6), base)
   }
 
   /** q350: the q345 mixture EXECUTED — turn each source's token quota

@@ -2,28 +2,20 @@ package graft.sources
 
 import graft.util.HealthCheck
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 /** Authority enrichment against an external key-value store —
   * the reference's O8 (`authorities=true` + `--redis-url`,
   * /root/reference/README.md:92-101, ingest/ingest.go:28-32), where
   * the argot subprocess looks up authority records in Redis per
-  * document.  Re-expressed Spark-first as two interchangeable store
-  * shapes behind one trait:
-  *
-  *  - [[BroadcastAuthorityStore]]: the dimension is small enough to
-  *    ship to every executor — a broadcast left join, zero shuffle on
-  *    the document side (the q18 plan).
-  *  - [[KvAuthorityStore]]: the store stays external (Redis-style);
-  *    each partition opens ONE pooled client and resolves its keys in
-  *    `mget` batches — the per-partition-resource shape, same as the
-  *    reference's per-worker Redis connection but with Spark
-  *    parallelism instead of a worker pool.
-  *
-  * Both append a nullable `authority` string column; docs without an
-  * authority record pass through with NULL (the reference indexes
-  * un-enriched docs rather than dropping them).
+  * document.  Re-expressed Spark-first as one trait with one store,
+  * [[KvAuthorityStore]]: the store stays external (Redis-style); each
+  * partition opens ONE pooled client and resolves its keys in `mget`
+  * batches — the per-partition-resource shape, same as the reference's
+  * per-worker Redis connection but with Spark parallelism instead of a
+  * worker pool.  It appends a nullable `authority` string column; docs
+  * without an authority record pass through with NULL (the reference
+  * indexes un-enriched docs rather than dropping them).
   *
   * Width rule: the kv store decodes every column of every row into an
   * external `Row` and encodes it again, so its cost grows with the
@@ -215,21 +207,4 @@ final class KvAuthorityStore(transport: KvTransport, keyCol: String = "owner",
   }
 
   override def healthCheck(): Either[String, Unit] = transport.ping()
-}
-
-/** Broadcast-dimension enrichment (the q18 shape): `dim` must expose
-  * (`key`, `authority`); every doc left-joins against the broadcast
-  * copy — no shuffle, no external store at task time.
-  */
-final class BroadcastAuthorityStore(dim: DataFrame, keyCol: String = "owner")
-    extends AuthorityStore {
-  override def name: String = "authority-store(broadcast)"
-
-  override def enrich(df: DataFrame): DataFrame =
-    df.join(broadcast(dim.select(col("key"), col("authority"))),
-      df(keyCol) === dim("key"), "left").drop("key")
-
-  override def healthCheck(): Either[String, Unit] =
-    if (dim.columns.contains("key") && dim.columns.contains("authority")) Right(())
-    else Left(s"dimension must expose (key, authority); has ${dim.columns.mkString(",")}")
 }

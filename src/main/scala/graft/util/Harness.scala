@@ -1,5 +1,8 @@
 package graft.util
 
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -8,6 +11,41 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * plan-shape specs share.
   */
 object Harness {
+  /** Cumulative execution counters over everything the session runs:
+    * jobs started, stages completed and their tasks, records read from
+    * sources and shuffle bytes written.  Callers snapshot them around
+    * a query, after [[drainListenerBus]], to attribute the deltas.
+    */
+  final class Counters extends SparkListener {
+    val jobs = new AtomicLong(0L)
+    val stages = new AtomicLong(0L)
+    val tasks = new AtomicLong(0L)
+    val recordsRead = new AtomicLong(0L)
+    val shuffleBytes = new AtomicLong(0L)
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val m = t.taskMetrics
+      if (m != null) {
+        recordsRead.addAndGet(m.inputMetrics.recordsRead)
+        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        ()
+      }
+    }
+  }
+
+  /** A [[Counters]] registered on the session's listener bus. */
+  def counters(spark: SparkSession): Counters = {
+    val c = new Counters
+    spark.sparkContext.addSparkListener(c)
+    c
+  }
+
   /** Warm up the JVM (codegen compiler, parquet reader, shuffle
     * machinery) so per-query timings measure the query, not first-run
     * JIT: without this the first query absorbs ~7s of fixed startup.

@@ -3,8 +3,8 @@ package graft
 import graft.config.ReindexConfig
 import graft.operators.ReindexJob
 import graft.sinks.NdjsonDirSink
-import graft.sources.{BroadcastAuthorityStore, InMemoryKvTransport, KvAuthorityStore,
-  ParquetDocSource, RespKvTransport}
+import graft.sources.{InMemoryKvTransport, KvAuthorityStore, ParquetDocSource,
+  RespKvTransport}
 import graft.util.Lockfile
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -103,21 +103,6 @@ class AuthoritySpec extends SparkSuite {
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     known.foreach(o => assert(byOwner(o)._1 == byOwner(o)._2, s"all $o docs enriched"))
     owners.diff(known).foreach(o => assert(byOwner(o)._2 == 0L, s"no $o doc enriched"))
-  }
-
-  test("broadcast store produces the same enrichment as the kv store") {
-    import spark.implicits._
-    val docs = new ParquetDocSource(corpus).load(spark).limit(200)
-    val owners = docs.select("owner").distinct().collect().map(_.getString(0))
-    val entries = owners.take(2).map(o => o -> s"auth:$o").toMap
-    val kv = new KvAuthorityStore(new InMemoryKvTransport(entries))
-    val bc = new BroadcastAuthorityStore(
-      entries.toSeq.toDF("key", "authority"))
-    val a = kv.enrich(docs).select("id", "authority").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1)
-    val b = bc.enrich(docs).select("id", "authority").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1)
-    assert(a.toSeq == b.toSeq)
   }
 
   test("RESP transport speaks the wire protocol end-to-end (ping + mget)") {

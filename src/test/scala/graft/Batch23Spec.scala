@@ -35,7 +35,7 @@ class Batch23Spec extends SparkSuite {
     val docs = ((1 to 6).map(i => (i.toLong, hot)) ++
       Seq((100L, s"prefix one two three $rare"),
           (101L, s"$rare suffix four five six"))).toDF("doc_id", "text")
-    val grams = Dedup.positionalGramsFrom(docs, 5)
+    val grams = Dedup.positionalGramsFromTokens(Dedup.tokenized(docs), 5)
     val capped = Dedup.capSpansWithAccounting(grams, 5, 12, 4).collect()
     assert(capped.nonEmpty, "the rare span survives the cap")
     assert(capped.forall(_.getLong(5) > 0L), "grams_capped reported")

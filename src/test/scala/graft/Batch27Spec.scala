@@ -15,16 +15,25 @@ class Batch27Spec extends SparkSuite {
   private val hot = "the quick brown fox jumps over the lazy dog again and again today"
   private val rare = "zeta eta theta iota kappa lambda mu nu xi omicron pi rho sigma tau"
 
+  /** q349's five gates (stage, gate, n_docs, n_tokens) on the sf0.001
+    * fixture: q349 shares its builder with q353/q363, and a change made
+    * for their later gates must not move these.
+    */
+  private val Q349Gates = Seq((0, "raw", 500L, 27939L),
+    (1, "lang_en", 193L, 10343L), (2, "len_ge_50", 103L, 7680L),
+    (3, "exact_dedup", 103L, 7680L), (4, "fingerprint_dedup", 85L, 6139L))
+
   /** 6 verbatim copies of the hot line (every 5-gram df=6 > cap 4)
     * plus two docs sharing a rare 14-token span (df=2, survives).
     */
   private def craftedDocs = {
     import spark.implicits._
-    ((1 to 6).map(i => (i.toLong, hot)) ++
+    Dedup.tokenized(((1 to 6).map(i => (i.toLong, hot)) ++
       Seq((100L, s"prefix one two three $rare"),
           (101L, s"$rare suffix four five six")))
       .toDF("doc_id", "text")
-      .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(2L))))
+      .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(2L)))),
+      "source")
   }
 
   test("q351 capped cut == q337 cut on the fixture (cap slack), accounting zero") {
@@ -51,12 +60,12 @@ class Batch27Spec extends SparkSuite {
 
   test("crafted hot gram: capped cut keeps a SUPERSET of tokens (cuts less, never more)") {
     val docs = craftedDocs
-    val grams = Dedup.positionalGramsFrom(docs, 5)
-    val uncapped = Dedup.exactSubstrCutFrom(docs,
+    val grams = Dedup.positionalGramsFromTokens(docs, 5)
+    val uncapped = Dedup.exactSubstrCutFromTokens(docs,
         Dedup.exactSubstrSpansFrom(grams, 5, 12)).collect()
       .map(r => r.getLong(0) -> r).toMap
     val (kept, acc) = Dedup.cappedGramsAndAccounting(grams, 4)
-    val capped = Dedup.exactSubstrCutFrom(docs,
+    val capped = Dedup.exactSubstrCutFromTokens(docs,
         Dedup.exactSubstrSpansFrom(kept, 5, 12))
       .crossJoin(broadcast(acc)).collect()
       .map(r => r.getLong(0) -> r).toMap
@@ -88,13 +97,13 @@ class Batch27Spec extends SparkSuite {
     // hot line only: the cap drops every anchor, the span frame is
     // EMPTY — the q334 span-row path would lose the accounting here
     // (documented edge case); the cut path must not
-    val docs = (1 to 6).map(i => (i.toLong, hot)).toDF("doc_id", "text")
-      .withColumn("source", lit("s0"))
-    val grams = Dedup.positionalGramsFrom(docs, 5)
+    val docs = Dedup.tokenized((1 to 6).map(i => (i.toLong, hot)).toDF("doc_id", "text")
+      .withColumn("source", lit("s0")), "source")
+    val grams = Dedup.positionalGramsFromTokens(docs, 5)
     val (kept, acc) = Dedup.cappedGramsAndAccounting(grams, 4)
     assert(Dedup.exactSubstrSpansFrom(kept, 5, 12).isEmpty,
       "every span died under the cap")
-    val cut = Dedup.exactSubstrCutFrom(docs,
+    val cut = Dedup.exactSubstrCutFromTokens(docs,
         Dedup.exactSubstrSpansFrom(kept, 5, 12))
       .crossJoin(broadcast(acc)).collect()
     assert(cut.length == 6, "one row per document regardless")
@@ -102,7 +111,7 @@ class Batch27Spec extends SparkSuite {
       "nothing cut, text verbatim")
     assert(cut.forall(r => r.getLong(5) == 9L && r.getLong(6) == 54L),
       "drop accounting reported on every row despite zero spans")
-    val cov = Dedup.dupCoverageFrom(docs,
+    val cov = Dedup.dupCoverageFromTokens(docs,
         Dedup.exactSubstrSpansFrom(kept, 5, 12))
       .crossJoin(broadcast(acc)).collect()
     assert(cov.length == 1 && cov.head.getLong(3) == 0L &&
@@ -128,6 +137,26 @@ class Batch27Spec extends SparkSuite {
     assert(rows.take(5).map(r =>
       (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq == v1.toSeq,
       "v2 extends q349 without disturbing it")
+  }
+
+  test("q353 plan shape: gate 5 counts cut positions, no per-token text rebuild; q349 unchanged") {
+    val df = graft.operators.PipelineAudits.yieldV2(spark, sf)
+    df.collect()
+    val all = planNodes(df.queryExecution.executedPlan)
+    val collects = all.filter(_.expressions.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])))
+    assert(collects.isEmpty,
+      s"no collect_list aggregate, saw ${collects.map(_.nodeName)}")
+    // the rebuild's other half: every survivor token exploded and
+    // anti-joined against the cut positions (column pruning already
+    // drops an unused collect_list, so this is the check that bites)
+    val antis = all.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+        if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j }
+    assert(antis.isEmpty, "gate 5 anti-joins no token stream against the cut")
+    val v1 = graft.operators.PipelineAudits.pipelineYield(spark, sf).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(v1.toSeq == Q349Gates, "q349's five gates as before")
   }
 
   test("q354 stats IVM: merged partials == full recompute; delta accounting real") {
@@ -421,13 +450,13 @@ class Batch27Spec extends SparkSuite {
 
   test("crafted hot gram: capped coverage covers a SUBSET of positions") {
     val docs = craftedDocs
-    val grams = Dedup.positionalGramsFrom(docs, 5)
+    val grams = Dedup.positionalGramsFromTokens(docs, 5)
     def bySource(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
       df.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    val uncapped = bySource(Dedup.dupCoverageFrom(docs,
+    val uncapped = bySource(Dedup.dupCoverageFromTokens(docs,
       Dedup.exactSubstrSpansFrom(grams, 5, 12)))
     val (kept, _) = Dedup.cappedGramsAndAccounting(grams, 4)
-    val capped = bySource(Dedup.dupCoverageFrom(docs,
+    val capped = bySource(Dedup.dupCoverageFromTokens(docs,
       Dedup.exactSubstrSpansFrom(kept, 5, 12)))
     assert(capped.keySet == uncapped.keySet)
     assert(capped.forall { case (s, n) => n <= uncapped(s) },

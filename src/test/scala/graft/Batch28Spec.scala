@@ -590,13 +590,35 @@ class Batch28Spec extends SparkSuite {
     assert(toks.last > 0L, "a training corpus remains after decontamination")
     assert(toks(6) < toks(5),
       "gate 6 genuinely bites (eval docs leave and hit spans cut)")
-    // the position-count gate 5 equals v2's rebuild-based gate 5 —
-    // and gates 0-5 are exactly the v2 report
+    // gates 0-5 are exactly the v2 report
     val v2 = graft.operators.PipelineAudits.yieldV2(spark, sf).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(v3.take(6).map(r =>
       (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq ==
-      v2.toSeq, "v3 extends v2 without disturbing it (incl. the counted gate 5)")
+      v2.toSeq, "v3 extends v2 without disturbing it")
+    // v2 and v3 share one builder, so gate 5 also needs a reference of
+    // its own: the stage-4 survivors by groupBy-min, cut by the
+    // text-rebuilding ExactSubstr cut over the df-16 capped 5-gram spans
+    import graft.functions.TextFunctions.{fingerprint, tokens}
+    val s2 = Tables.documents(spark, sf)
+      .filter(col("lang") === "en" && size(tokens(col("text"))) >= 50)
+    val exact = s2.groupBy(md5(col("text"))).agg(min(col("doc_id")).as("doc_id"))
+    val s4 = s2.join(exact, "doc_id")
+      .groupBy(fingerprint(col("text"))).agg(min(col("doc_id")).as("doc_id"))
+    val tw = Tables.documents(spark, sf).join(s4, "doc_id")
+      .select(col("doc_id"), tokens(col("text")).as("w"))
+    val (kept, _) = graft.operators.Dedup.cappedGramsAndAccounting(
+      graft.operators.Dedup.positionalGramsFromTokens(tw, 5), 16)
+    val ref = graft.operators.Dedup.exactSubstrCutFromTokens(tw,
+        graft.operators.Dedup.exactSubstrSpansFrom(kept, 5, 12))
+      .filter(col("n_kept") >= 1L)
+      .agg(count(lit(1)), coalesce(sum(col("n_kept")), lit(0L))).head()
+    assert(v2(4)._3 == s4.count(), "the reference survivors are stage 4's")
+    val want = (5, "substr_cut", ref.getLong(0), ref.getLong(1))
+    assert(v2(5) == want, "q353's gate 5 == the text-rebuilding cut")
+    assert((v3(5).getInt(0), v3(5).getString(1), v3(5).getLong(2),
+      v3(5).getLong(3)) == want, "q363's gate 5 == the text-rebuilding cut")
+    assert(want._4 < v2(4)._4, "the cut removes tokens on the fixture")
   }
 
   test("enforcement rules COMPOSE: join reorder AND bloom prefilter fire in ONE plan, values exact") {

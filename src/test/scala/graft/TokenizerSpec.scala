@@ -107,7 +107,7 @@ class TokenizerSpec extends SparkSuite {
       docs.map { case (id, toks) =>
         org.apache.spark.sql.Row(id, toks.mkString(" ")) }.asJava, schema)
     val got = Dedup.exactSubstrSpansFrom(
-        Dedup.positionalGramsFrom(df, k), k, minLen)
+        Dedup.positionalGramsFromTokens(Dedup.tokenized(df), k), k, minLen)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
         r.getLong(4).toInt)).toSet
