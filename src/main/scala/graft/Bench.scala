@@ -1,82 +1,117 @@
 package graft
 
 import graft.util.Harness
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
 /** Benchmark entry point (driver contract): runs every registered query
   * against SPARK_GRAFT_SF_DIR and prints ONE compact JSON line as the
   * LAST stdout line.
   *
-  * Measurement fixes from VERDICT r1:
-  *  - results are forced with a `noop`-format write, not `.count()`
-  *    (count lets Catalyst prune every column and collapse the plan);
-  *  - a failing query records `-1` and an `err` entry instead of
-  *    masquerading as a fast run.
+  *  - Results are forced with a `noop`-format write, not `.count()`:
+  *    count lets Catalyst prune every column and collapse the plan.
+  *  - Each query runs `SPARK_GRAFT_BENCH_REPS` (default 3) timed reps
+  *    in-process and the contract carries the per-query MIN, so one
+  *    transient host stall cannot become the record.
+  *  - A query new to the newest same-sf record gets one untimed
+  *    warm-up run first: its first run in the JVM pays JIT, codegen and
+  *    shuffle-directory set-up that carried queries have amortized.
+  *  - Outliers are re-run after the whole suite, when a contention
+  *    window has passed, and the overall min is kept (see `main`).
+  *  - A failing query records `-1` and an `errors` entry instead of
+  *    passing for a fast run.
   *
-  * Output-contract fix from r2: the driver captures only the final 2000
-  * characters of stdout, and r2's single line (45 queries + a per-query
-  * io map) overflowed it — the driver recorded `parsed: null`. Now the
-  * final line is the minimal contract object (seconds rounded to 2
-  * decimals), and the io/error detail goes to an earlier stdout line
-  * plus `bench_detail.json` in the working directory.
-  *
-  * Noise-contract fix from r4: each query runs `SPARK_GRAFT_BENCH_REPS`
-  * (default 3) times in-process; the contract line carries the per-query
-  * MIN and the total-of-mins, so one transient host stall can no longer
-  * rewrite the committed record. Raw per-rep times are in
-  * `bench_detail.json` under `runs`.
-  *
-  * Stall-retry fix from r8: a contention window can outlast all REPS
-  * back-to-back reps of one query (BENCH_r08 recorded q41 at 24.26 s;
-  * it runs in 1.1 s). Queries whose min lands above the outlier
-  * threshold are re-run after the full suite finishes — by then the
-  * window has passed — and the overall min is kept.
-  *
-  * Threshold fix from r9: the r8 rule's 3 s absolute floor let
-  * sub-3 s stalls into the record (BENCH_r09: q67 committed 2.27 s,
-  * true 0.63 s). Now a query is also an outlier when it lands above
-  * 2× its value in the newest committed BENCH_r{N}.json (so a
-  * contention window can never double a query's record), and the
-  * floor of the median rule drops to 1.5 s. Retry errors are
-  * discarded when the retry result is not used, so bench_detail's
-  * `errors` can't implicate a query whose contract number is green.
-  *
-  * Prior-record fixes from r10's verdict: the record parser now
-  * accepts the driver's pretty-printed artifacts (the r10 regex
-  * required compact JSON and matched zero pairs, so the 2×-prior rule
-  * never fired and BENCH_r10 committed q26/q27/q28 at 2-5× their
-  * records), and a run of 3+ consecutive alphabetical queries each
-  * landing 1.5×+ above prior marks the WHOLE block for retry — one
-  * host stall spans suite-order neighbors (see blockOutliers).
+  * The contract line stays small (its reader keeps only the last 2000
+  * characters of stdout). Everything else goes to `bench_detail.json`
+  * in the working directory, also printed as the line before it:
+  *  - `queries`: full name → contract seconds; `sf`; `reps`;
+  *  - `runs`: full name → one array of rep seconds per pass (the first
+  *    pass, then a stall retry's), never spliced, so drift analysis
+  *    compares like with like;
+  *  - `errors`: full name → message of a failure the contract reports;
+  *  - `io`: full name → the per-query profile (see [[ioEntry]]).
   */
 object Bench {
 
-  /** Per-query seconds from the newest usable committed
-    * `BENCH_r{N}.json` in the working directory, keyed by the short
-    * "qNN" contract key. Any failure degrades to an empty map — the
-    * prior-record retry rule is an optimization, never a correctness
-    * dependency.
-    *
-    * Artifact-robustness fixes from r12's verdict: BENCH_r12.json came
-    * back degraded — the contract line outgrew the driver's 2000-char
-    * stdout tail (`parsed: null`) and the captured fragment stores the
-    * line as a JSON STRING, so every quote is backslash-escaped
-    * (`\"q116\":0.23`). The r11 pair regex (literal quotes) matched 0
-    * of them, which killed the stall-retry prior for a whole round.
-    * Now the parser (a) admits the escaping with `\\?` around quotes,
-    * (b) also harvests full-name pairs (`"q01_pricing_summary": 1.06`)
-    * from detail-line fragments, (c) decodes the r13+ compact array
-    * contract (`"qv":[15,105,...]` centiseconds, qNN numeric order —
-    * see `main`), and (d) when the newest artifact yields zero pairs,
-    * falls back to the next-newest and finally to the committed
-    * `bench_detail.json` (full names + seconds).
+  /** The shape of the plans one rep executed, in their final (AQE)
+    * form, as `io` fields: file scans with their read-column counts
+    * and pushed filters, the join mix, Exchange and reused-Exchange
+    * counts and whole-stage-codegen spans.  Cached relations' inner
+    * plans are not walked.
     */
-  /** @param sfDir when non-empty, a prior artifact is used only if it
-    *   matches the same scale factor — comparing an sf0.1 run against
-    *   an sf0.01 record (or vice versa) would either never trigger or
-    *   retry the whole suite. The full dir path only survives in the
-    *   capture window by luck, so the driver envelope's bare
-    *   `"sf": 0.1` number is accepted as the match too.
+  private def planFields(plans: Seq[SparkPlan]): String = {
+    val nodes = plans.flatMap(Harness.planNodes)
+    val names = nodes.map(_.nodeName)
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    val pushed = scans.map(_.metadata.getOrElse("PushedFilters", "[]")).mkString("|")
+    def named(parts: String*): Int = names.count(n => parts.exists(n.contains))
+    s""""scans":${scans.size},"readCols":${scans.map(_.requiredSchema.fieldNames.length).mkString("[", ",", "]")},""" +
+      s""""pushed":${jstr(pushed)},"bcastJoin":${named("BroadcastHashJoin", "BroadcastNestedLoopJoin")},""" +
+      s""""smj":${named("SortMergeJoin")},"shj":${named("ShuffledHashJoin")},""" +
+      s""""shuffles":${nodes.count(_.isInstanceOf[Exchange])},""" +
+      s""""reusedExchanges":${nodes.count(_.isInstanceOf[ReusedExchangeExec])},""" +
+      s""""codegenSpans":${names.count(_.startsWith("WholeStageCodegen"))}"""
+  }
+
+  /** One timed rep: seconds, the failure message if it failed, the
+    * counter deltas from its start until its pins are released, and
+    * its [[planFields]].
+    */
+  private[graft] final case class Rep(sec: Double, err: Option[String],
+      counts: Harness.Counts, plan: String)
+
+  /** Run `force` once as a timed rep, then release what it left
+    * behind.  Only `force` is timed; the plan walk runs after.
+    */
+  private[graft] def timedRep(spark: SparkSession, c: Harness.Counters)(force: => Unit): Rep = {
+    val before = c.snapshot
+    val ((sec, err), plans) = Harness.executedPlans(spark) {
+      val t0 = System.nanoTime()
+      val err =
+        try { force; None }
+        catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120)) }
+      ((System.nanoTime() - t0) / 1e9, err)
+    }
+    Harness.release(spark)
+    Rep(sec, err, c.snapshot - before, planFields(plans.map(_._2)))
+  }
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** One query's `io` entry, from its passes of reps.  `jobs[p][r]` is
+    * the Spark job count of `runs[p][r]` (successful reps only); every
+    * other field is the query's last rep: records read from sources,
+    * shuffle bytes written, stages and tasks, executor CPU and GC
+    * milliseconds, then its [[planFields]].  Counts beside CPU time
+    * tell a plan change apart from host contention.
+    */
+  private[graft] def ioEntry(passes: Seq[Seq[Rep]]): String = {
+    val last = passes.last.last
+    val c = last.counts
+    val jobs = passes.map(_.filter(_.err.isEmpty).map(_.counts.jobs).mkString("[", ",", "]")).mkString("[", ",", "]")
+    s"""{"recordsRead":${c.recordsRead},"shuffleBytes":${c.shuffleBytes},"jobs":$jobs,""" +
+      s""""stages":${c.stages},"tasks":${c.tasks},"cpuMs":${c.cpuNs / 1000000},"gcMs":${c.gcMs},""" +
+      s"""${last.plan}}"""
+  }
+
+  /** Per-query seconds from the newest committed `BENCH_r{N}.json` in
+    * `dir` that holds a `qv` array, keyed by the short "qNN" contract
+    * key; failed (`-1`) entries are left out.  The array is read as
+    * the committed artifacts capture it, which may be the contract
+    * line stored as a JSON string with escaped quotes.  Any failure degrades
+    * to an empty map: the prior record only steers warm-up and retry,
+    * never a result.
+    *
+    * @param sfDir when non-empty, an artifact is used only if it names
+    *   the same scale factor, as the dir path or as the artifact
+    *   envelope's bare `"sf": 0.1` number: comparing an sf0.1 run with
+    *   an sf0.01 record would retry nothing or everything.
     */
   private[graft] def priorBenchRecord(
       dir: java.nio.file.Path = java.nio.file.Paths.get("."),
@@ -84,8 +119,7 @@ object Bench {
     try {
       import scala.jdk.CollectionConverters._
       val benchRe = """BENCH_r(\d+)\.json""".r
-      // Using: Files.list holds a directory handle until closed — a
-      // bare .iterator walk leaked one fd per call (ADVICE r10)
+      // Using: Files.list holds a directory handle until closed
       val artifacts = scala.util.Using.resource(java.nio.file.Files.list(dir)) {
         _.iterator.asScala
           .flatMap { p =>
@@ -101,57 +135,37 @@ object Bench {
           sfNum.nonEmpty &&
             """"sf":\s*([0-9.]+)""".r.findFirstMatchIn(text).exists(_.group(1) == sfNum)
         }
-      def parse(text: String): Map[String, Double] = {
-        // r13+ array contract: digits and commas are immune to the
-        // artifact's string escaping, unlike quoted map keys
-        val arrRe = """\\?"qv\\?":\s*\[([0-9.,\s-]*)\]""".r
-        val fromArray = arrRe.findFirstMatchIn(text).map { m =>
+      // qv[i] = q{i+1} in centiseconds; digits and commas are immune
+      // to the string escaping, the key's quotes are not
+      val qvRe = """\\?"qv\\?":\s*\[([0-9.,\s-]*)\]""".r
+      def parse(text: String): Map[String, Double] =
+        qvRe.findFirstMatchIn(text).map { m =>
           m.group(1).split(",").iterator.map(_.trim).filter(_.nonEmpty)
             .zipWithIndex.flatMap { case (s, i) =>
               s.toDoubleOption.filter(_ >= 0).map(cs => f"q${i + 1}%02d" -> cs / 100.0)
             }.toMap
-        }.getOrElse(Map.empty[String, Double])
-        // \s* after the colon: the driver pretty-prints its BENCH
-        // artifacts (`"q26": 0.28`) — without it this regex matched
-        // ZERO pairs in every real artifact and the prior-record
-        // retry rule never fired (VERDICT r10 #2). `\\?` admits the
-        // backslash-escaped quotes of an embedded tail string
-        // (VERDICT r12 #1); the optional `_suffix` harvests full-name
-        // pairs from detail-line fragments.
-        val pairRe = """\\?"(q\d+)(?:_\w+)?\\?":\s*(-?\d+(?:\.\d+)?)""".r
-        val fromPairs = pairRe.findAllMatchIn(text)
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .toSeq.filter(_._2 >= 0)
-          .groupMapReduce(_._1)(_._2)(math.min)
-        // min across both decodings, matching the old per-key-min rule
-        (fromArray.toSeq ++ fromPairs.toSeq).groupMapReduce(_._1)(_._2)(math.min)
-      }
-      def parseFile(p: java.nio.file.Path): Map[String, Double] = {
+        }.getOrElse(Map.empty)
+      artifacts.iterator.map { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        if (!sfMatches(text)) Map.empty else parse(text)
-      }
-      artifacts.iterator.map(parseFile).find(_.nonEmpty).getOrElse {
-        val bd = dir.resolve("bench_detail.json")
-        if (java.nio.file.Files.exists(bd)) parseFile(bd) else Map.empty
-      }
+        if (sfMatches(text)) parse(text) else Map.empty[String, Double]
+      }.find(_.nonEmpty).getOrElse(Map.empty)
     } catch { case _: Throwable => Map.empty }
 
-  /** Contention-window block detector (VERDICT r10 #6): a host stall
-    * spans ALPHABETICAL NEIGHBORS (BENCH_r10 committed q26/q27/q28 at
-    * 5.2×/2.4×/3.6× their priors from one window), and a member of
-    * such a block deserves a retry even when its own min sits under
-    * the individual 2×-prior trigger (it still absorbed part of the
-    * stall).  A query is a block suspect at the LOWER bar of 1.5×
-    * its prior record (0.3 s floor so sub-second jitter never chains);
-    * any run of `minRun`+ consecutive suspects in suite order marks
-    * every member for the post-suite retry pass.
+  /** Contention-window block detector: one host stall spans
+    * neighbours in suite (alphabetical) order, and a member of such a
+    * block deserves a retry even when its own min sits under the
+    * individual 2×-prior trigger, since it still absorbed part of the
+    * stall.  A query is a block suspect at 1.5× its prior record (0.3 s
+    * floor, so sub-second jitter never chains); any run of `minRun`+
+    * consecutive suspects in suite order marks every member for the
+    * post-suite retry pass.
     */
   private[graft] def blockOutliers(
       ordered: Seq[(String, Double)],
       prior: Map[String, Double],
       minRun: Int = 3): Set[String] = {
     def suspect(name: String, v: Double): Boolean =
-      v >= 0 && prior.get(name.takeWhile(_ != '_'))
+      v >= 0 && prior.get(shortKey(name))
         .exists(p => v >= math.max(0.3, 1.5 * p))
     val out = Set.newBuilder[String]
     var run = List.empty[String]
@@ -161,12 +175,15 @@ object Bench {
     out.result()
   }
 
+  /** A query's contract key: its unique "qNN" prefix. */
+  private def shortKey(name: String): String = name.takeWhile(_ != '_')
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional args = query names to bench (iteration aid, like Verify);
     // no args = the full registry (the driver's contract run).
-    val selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    val selected: Map[String, (SparkSession, String) => DataFrame] =
       if (args.isEmpty) SparkEntry.queries
       else {
         val unknown = args.filterNot(SparkEntry.queries.contains)
@@ -175,98 +192,58 @@ object Bench {
       }
     val spark = GraftSession.get(cpus)
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-
     Harness.warmUp(spark, sfDir)
 
-    val io = Harness.counters(spark)
-
-    // Noise fix from VERDICT r4 #1: a single-run contract line made the
-    // committed record a lottery (q36: 6.78 s at 0 shuffle bytes — a
-    // transient host stall, graded as a regression). Each query now runs
-    // REPS times in-process and the contract reports the per-query MIN
-    // (and total-of-mins); raw per-rep times go to bench_detail.json.
+    val counters = Harness.counters(spark)
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
     var errs = List.empty[(String, String)]
-    var ioStats = List.empty[(String, (Long, Long))]
-    var runDetail = List.empty[(String, Seq[Double])]
-    def runReps(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
-      val times = (0 until reps).iterator.map { _ =>
-        val (r0, s0) = (io.recordsRead.get, io.shuffleBytes.get)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            errs ::= (name, Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
-            false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // drop cache pins (two-pass rank queries persist) so one query's
-        // cache can't evict another's working set or skew its timing,
-        // and so each rep measures a cold-cache execution; releaseAll
-        // additionally frees localCheckpoint (Pins.eager) blocks, which
-        // clearCache does NOT touch and would otherwise accumulate
-        // across the suite until a GC-driven ContextCleaner sweep
-        spark.catalog.clearCache()
-        graft.util.Pins.releaseAll(spark)
-        Harness.drainListenerBus(spark)
-        ioStats ::= (name, (io.recordsRead.get - r0, io.shuffleBytes.get - s0))
-        if (ok) sec else -1.0
-      }.takeWhile(_ >= 0).toSeq // a failing rep records the error and stops
-      runDetail ::= (name, times)
-      times
+    var passes = List.empty[(String, Seq[Rep])] // newest first
+    def force(fn: (SparkSession, String) => DataFrame): Unit =
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // one pass of up to `reps` timed reps; a failing rep records its
+    // error and ends the pass; returns the successful reps' seconds
+    def runReps(name: String, fn: (SparkSession, String) => DataFrame): Seq[Double] = {
+      val pass = (0 until reps).foldLeft(Vector.empty[Rep]) { (done, _) =>
+        if (done.lastOption.exists(_.err.nonEmpty)) done
+        else done :+ timedRep(spark, counters)(force(fn))
+      }
+      pass.flatMap(_.err).foreach(e => errs ::= (name, e))
+      passes ::= (name -> pass)
+      pass.filter(_.err.isEmpty).map(_.sec)
     }
-    // Rep-hygiene fix from r14's verdict #5: the FIRST pass of a query
-    // new to the suite pays JIT + codegen-cache + shuffle-dir warmup
-    // that carried queries already amortized (r14's fresh-tier rep
-    // arrays showed the second 3-rep pass 3-5× faster than the first),
-    // polluting the committed qv and every cross-round delta read off
-    // it. A query with no entry in the newest committed same-sf BENCH
-    // record gets ONE untimed warm-up execution before its timed reps
-    // — zero steady-state cost (carried queries skip it), and a
-    // whole-suite warm pass only when no matching record exists at
-    // all (fresh sf), which is exactly when every number is "new".
     val prior = priorBenchRecord(sfDir = sfDir)
     val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      if (!prior.contains(name.takeWhile(_ != '_'))) {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        graft.util.Pins.releaseAll(spark)
-        Harness.drainListenerBus(spark) // keep warm-up task events out of rep 1's I/O delta
+      // a query with no same-sf prior record is taken to be new to the
+      // JVM's caches: one untimed run, released like a rep, so its
+      // counts stay out of rep 1
+      if (!prior.contains(shortKey(name))) {
+        try force(fn) catch { case _: Throwable => () }
+        Harness.release(spark)
       }
       val times = runReps(name, fn)
       name -> (if (times.length < reps) -1.0 else times.min)
     }
-    // Stall defense beyond min-of-reps (VERDICT-r8 artifact: q41 cube
-    // recorded 24.26 s — all three back-to-back reps sat inside one
-    // host-contention window; the same query ran 1.1 s afterwards).
-    // Re-run the outliers AFTER the rest of the suite, when the stall
-    // window has almost certainly passed, and keep the overall min.
-    // Outlier = min above 2× the query's newest committed BENCH record
-    // (with a 0.5 s floor so ±0.1 s jitter on sub-second queries never
-    // triggers) OR above max(1.5 s, 6× median-of-mins). Genuinely slow
-    // queries cost a bounded second rep set, a stalled one gets its
-    // honest number back.
+    // A contention window can outlast all reps of one query.  Outliers
+    // re-run after the rest of the suite, when the window has almost
+    // certainly passed, and keep the overall min.  Outlier = min above
+    // 2× the query's prior record (0.5 s floor, so ±0.1 s jitter on
+    // sub-second queries never triggers), OR above max(1.5 s, 6× the
+    // median of mins), OR a member of a stall block (blockOutliers).
+    // A genuinely slow query costs one bounded extra rep set.
     val okMins = firstPass.collect { case (_, v) if v >= 0 => v }.sorted
     val results = if (okMins.isEmpty) firstPass else {
       val medianThreshold = math.max(1.5, 6 * okMins(okMins.length / 2))
       val inBlock = blockOutliers(firstPass, prior)
       def isOutlier(name: String, v: Double): Boolean =
         v >= medianThreshold || inBlock.contains(name) ||
-          prior.get(name.takeWhile(_ != '_'))
+          prior.get(shortKey(name))
             .exists(p => v >= math.max(0.5, 2 * p))
       firstPass.map { case (name, v) =>
         if (v < 0 || !isOutlier(name, v)) name -> v
         else {
           val errsBefore = errs
-          val retry = runReps(name, selected(name)).filter(_ >= 0)
+          val retry = runReps(name, selected(name))
           // a retry whose result is unused must not pollute the error
           // report: the contract number stays the valid first-pass min
           if (retry.isEmpty) { errs = errsBefore; name -> v }
@@ -278,37 +255,14 @@ object Bench {
     // and break the JSON contract line
     def r2(v: Double): String =
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // Contract-line headroom (VERDICT r5 #3): the driver parses the JSON
-    // from the LAST 2000 chars of stdout, and 77 full-name query keys put
-    // the line at ~1870 chars — 3 more queries would overflow it and null
-    // the parse. The contract line therefore keys each query by its
-    // unique "qNN" prefix (the part before the first '_'); full names,
-    // sf, io and raw reps live in bench_detail.json.
-    def shortKey(name: String): String = name.takeWhile(_ != '_')
     require(results.map(r => shortKey(r._1)).distinct.size == results.size,
       "query qNN prefixes must stay unique for the contract line")
     val es = errs.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    // reps entries per query were appended; keep the last rep's profile
-    // (reverse = oldest-first, so toMap's later-wins keeps the latest)
-    val ios = ioStats.reverse.toMap.toSeq.sortBy(_._1).map { case (k, (r, s)) =>
-      s"${jstr(k)}:{" + s""""recordsRead":$r,"shuffleBytes":$s}""" }.mkString("{", ",", "}")
-    // Run-provenance fix from r16's verdict #3: a stall-retried query's
-    // second rep set used to be APPENDED to its first (6-element
-    // arrays whose min-of-mixed hid which pass produced the headline
-    // number). Each pass now stays its own array — "runs" maps
-    // name -> [[pass-1 reps], [retry reps], ...] — so drift analysis
-    // compares like with like; out-of-process idle re-measures follow
-    // the same convention by appending a new pass array, never by
-    // splicing into an existing one (README performance notes).
-    val runsGrouped = runDetail.reverse
-      .foldLeft(Vector.empty[(String, Vector[Seq[Double]])]) { (acc, kv) =>
-        acc.indexWhere(_._1 == kv._1) match {
-          case -1 => acc :+ (kv._1 -> Vector(kv._2))
-          case i  => acc.updated(i, (kv._1, acc(i)._2 :+ kv._2))
-        }
-      }
-    val runs = runsGrouped.map { case (k, passes) =>
-      s"${jstr(k)}:" + passes.map(_.map(r2).mkString("[", ",", "]"))
+    val byQuery = passes.reverse.groupMap(_._1)(_._2).toSeq.sortBy(_._1) // passes oldest first
+    val ios = byQuery.map { case (k, ps) => s"${jstr(k)}:${ioEntry(ps)}" }
+      .mkString("{", ",", "}")
+    val runs = byQuery.map { case (k, ps) =>
+      s"${jstr(k)}:" + ps.map(_.filter(_.err.isEmpty).map(r => r2(r.sec)).mkString("[", ",", "]"))
         .mkString("[", ",", "]") }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val fullTimes = results.map { case (k, v) => s"${jstr(k)}:${r2(v)}" }.mkString("{", ",", "}")
@@ -318,22 +272,15 @@ object Bench {
       detail.getBytes("UTF-8"))
     catch { case _: Throwable => () }
     println(detail)
-    // The contract line: LAST, compact, must fit (with sbt's trailing
-    // "[success]" line) inside the driver's 2000-char stdout tail.
-    // Format fix from r12's verdict: the 200-query `"qNN":0.23` map hit
-    // ~2.4 KB and the driver recorded `parsed: null` (only the line's
-    // tail survived its capture). A per-query MAP cannot fit 200+ keys
-    // in 2000 chars at any numeric precision (keys alone cost ~1.4 KB),
-    // so the full-suite contract is now a positional ARRAY: `"qv"` is
-    // centisecond integers in qNN NUMERIC order (qv[0] = q01, qv[i] =
-    // q{i+1}; -1 = failed), ~850 chars at 212 queries and linear in
-    // count — headroom to ~5000 queries. `priorBenchRecord` decodes
-    // both this and the legacy map; full names, seconds, sf, io and
-    // raw reps stay in bench_detail.json (committed per round).
-    // A subset run (non-empty args) is an iteration aid, not the
-    // contract run — it keeps the legacy map (small by construction)
-    // and a "partial" tag so a harness scraping stdout can never
-    // mistake a partial total with missing query keys for the record.
+    // The contract line: LAST, compact, and (with sbt's trailing
+    // "[success]" line) inside the 2000-char stdout tail its reader
+    // keeps.  A per-query map cannot fit 200+ keys in 2000 chars, so the
+    // full-suite line is a positional array: `qv` holds centisecond
+    // integers in qNN numeric order (qv[0] = q01, qv[i] = q{i+1}; -1 =
+    // failed), linear in query count.  A subset run (non-empty args) is
+    // an iteration aid, not the contract run: it keeps a small qNN map
+    // and a "partial" tag, so a partial total is never mistaken for the
+    // record.
     if (args.nonEmpty) {
       val qs = results.map { case (k, v) => s"${jstr(shortKey(k))}:${r2(v)}" }.mkString("{", ",", "}")
       println(s"""{"metric":"total","partial":true,"value":${r2(total)},"unit":"sec","queries":$qs}""")

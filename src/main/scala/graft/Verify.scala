@@ -24,12 +24,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release cache pins (the two-pass rank queries persist their
-      // range-partitioned frame) so entries don't accumulate across
-      // the whole registry; releaseAll also frees localCheckpoint
-      // (Pins.eager) blocks, which clearCache does not touch
-      spark.catalog.clearCache()
-      graft.util.Pins.releaseAll(spark)
+      // so cache entries and pins don't accumulate across the registry
+      graft.util.Harness.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

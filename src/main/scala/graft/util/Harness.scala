@@ -1,27 +1,35 @@
 package graft.util
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** What the measuring mains (Bench, PlanDump, PlanAudit) and the
-  * plan-shape specs share.
-  */
+/** What Bench, PlanDump, Verify and the plan-shape specs share. */
 object Harness {
+  /** Counter values at one instant; `b - a` is what ran in between. */
+  final case class Counts(jobs: Long, stages: Long, tasks: Long,
+      recordsRead: Long, shuffleBytes: Long, cpuNs: Long, gcMs: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, recordsRead - o.recordsRead,
+      shuffleBytes - o.shuffleBytes, cpuNs - o.cpuNs, gcMs - o.gcMs)
+  }
+
   /** Cumulative execution counters over everything the session runs:
     * jobs started, stages completed and their tasks, records read from
-    * sources and shuffle bytes written.  Callers snapshot them around
-    * a query, after [[drainListenerBus]], to attribute the deltas.
+    * sources, shuffle bytes written, executor CPU time and JVM GC time.
+    * Callers snapshot them around a query, after [[drainListenerBus]],
+    * to attribute the deltas.
     */
   final class Counters extends SparkListener {
-    val jobs = new AtomicLong(0L)
-    val stages = new AtomicLong(0L)
-    val tasks = new AtomicLong(0L)
-    val recordsRead = new AtomicLong(0L)
-    val shuffleBytes = new AtomicLong(0L)
+    private val jobs, stages, tasks, recordsRead, shuffleBytes, cpuNs, gcMs = new AtomicLong(0L)
+    def snapshot: Counts = Counts(jobs.get, stages.get, tasks.get,
+      recordsRead.get, shuffleBytes.get, cpuNs.get, gcMs.get)
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet(); ()
     }
@@ -34,6 +42,8 @@ object Harness {
       if (m != null) {
         recordsRead.addAndGet(m.inputMetrics.recordsRead)
         shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        cpuNs.addAndGet(m.executorCpuTime)
+        gcMs.addAndGet(m.jvmGCTime)
         ()
       }
     }
@@ -68,6 +78,40 @@ object Harness {
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
       ()
     } catch { case _: Throwable => Thread.sleep(50) }
+
+  /** Free what one query left behind, between queries: catalog cache
+    * entries (the two-pass rank queries persist) and localCheckpoint
+    * pins ([[Pins.eager]] blocks, which `clearCache` does not touch),
+    * so no query's cache evicts another's working set and each run is
+    * cold; then drain the bus so the query's events are counted before
+    * the next one starts.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    Pins.releaseAll(spark)
+    drainListenerBus(spark)
+  }
+
+  /** Run `body` and return its result with each `(funcName,
+    * executedPlan)` the session completed meanwhile, in completion
+    * order.  An adaptive plan reads as its final (executed) form
+    * through [[planNodes]].
+    */
+  def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[(String, SparkPlan)]) = {
+    val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(func -> qe.executedPlan); ()
+      }
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    drainListenerBus(spark) // earlier queries' events stay out
+    spark.listenerManager.register(listener)
+    val r =
+      try body
+      finally { drainListenerBus(spark); spark.listenerManager.unregister(listener) }
+    (r, plans.asScala.toSeq)
+  }
 
   /** Every node of a physical plan, pre-order: AQE wrappers and query
     * stages unwrapped, subqueries walked.  The one plan walker, so a

@@ -1,14 +1,13 @@
 package graft
 
 import graft.operators.{Dedup, EventOps, Multimodal, PipelineAudits, Relational, Similarity}
+import graft.util.Harness
 import graft.util.Harness.planNodes
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, TableCacheQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import scala.jdk.CollectionConverters._
 
 /** Batches 17-19 (q306-q315): semantic invariants checked against
   * direct recounts — cluster geometry (silhouette, Davies-Bouldin),
@@ -60,28 +59,20 @@ class Batch17Spec extends SparkSuite {
     val knob = "spark.graft.hits.scoreJoin"
     assert(spark.conf.getOption(knob).isEmpty, "broadcast is the default mode")
     val bcast = Relational.hits(spark, sf).collect().toSeq
-    // each half-step's fold is one localCheckpoint action
-    val folds = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
-        if (func == "localCheckpoint") folds.add(qe.executedPlan)
-      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     // fixture-scale broadcasts off, so the joins show the production
     // shuffle form instead of broadcasting the small edge set
     val bcastKnob = "spark.sql.autoBroadcastJoinThreshold"
     spark.conf.set(knob, "shuffle")
     spark.conf.set(bcastKnob, "-1")
-    spark.listenerManager.register(listener)
-    val shuffled =
-      try Relational.hits(spark, sf).collect().toSeq
+    val (shuffled, ran) =
+      try Harness.executedPlans(spark)(Relational.hits(spark, sf).collect().toSeq)
       finally {
-        graft.util.Harness.drainListenerBus(spark)
-        spark.listenerManager.unregister(listener)
         spark.conf.unset(knob)
         spark.conf.unset(bcastKnob)
       }
     assert(shuffled.nonEmpty && shuffled == bcast, "shuffle mode computes the identical fold")
+    // each half-step's fold is one localCheckpoint action
+    val folds = ran.collect { case ("localCheckpoint", p) => p }
     assert(folds.size == 6, s"3 iterations × 2 half-steps, saw ${folds.size} folds")
     // an exchange is edges-sized when its own map stage scans the
     // pinned edges: the fold's level-1 (key, _seg) exchange, the one
@@ -94,7 +85,7 @@ class Batch17Spec extends SparkSuite {
       case a: AdaptiveSparkPlanExec => mapStage(a.executedPlan)
       case _ => n +: n.children.flatMap(mapStage)
     }
-    for ((p, i) <- folds.asScala.zipWithIndex) {
+    for ((p, i) <- folds.zipWithIndex) {
       val edgeExchanges = planNodes(p).collect {
         case e: ShuffleExchangeExec
             if mapStage(e.child).exists(_.isInstanceOf[InMemoryTableScanExec]) => e

@@ -3,14 +3,13 @@ package graft
 import graft.sinks.{BatchedUpsertSink, NdjsonDirSink, UpdateTransport}
 import graft.operators.Reindex
 import graft.sources.NdjsonDocSource
+import graft.util.Harness
 import graft.util.Harness.planNodes
 import graft.functions.DocJson
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -101,27 +100,20 @@ class ChunkSinkSpec extends SparkSuite {
   test("batched upsert sink: the JSON is built above the range exchange, once per doc") {
     // below the exchange, the range partitioner's sampling pass would
     // serialize every doc and the write would serialize it again
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
-        if (func == "foreachPartition") plans.add(qe.executedPlan)
-      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      BatchCollector.reset()
-      assert(new BatchedUpsertSink(BatchCollector, chunkSize = 64).write(docsDf) == 500)
-      graft.util.Harness.drainListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
+    BatchCollector.reset()
+    val (written, ran) = Harness.executedPlans(spark)(
+      new BatchedUpsertSink(BatchCollector, chunkSize = 64).write(docsDf))
+    assert(written == 500)
+    val plans = ran.collect { case ("foreachPartition", p) => p }
     assert(plans.size == 1, s"expected one foreachPartition action, saw ${plans.size}")
-    val ranges = planNodes(plans.peek).collect {
+    val ranges = planNodes(plans.head).collect {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
     assert(ranges.size == 1, "the sink orders through one range exchange")
     def isDocJson(e: Expression): Boolean = e.isInstanceOf[DocJson]
     val below = planNodes(ranges.head.child).filter(_.expressions.exists(_.exists(isDocJson)))
     assert(below.isEmpty, s"DocJson below the range exchange: ${below.map(_.nodeName)}")
-    assert(planNodes(plans.peek).exists(_.expressions.exists(_.exists(isDocJson))),
+    assert(planNodes(plans.head).exists(_.expressions.exists(_.exists(isDocJson))),
       "the plan serializes the docs somewhere")
   }
 

@@ -9,14 +9,12 @@ import graft.util.{Harness, Lockfile}
 import graft.util.Harness.planNodes
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
-import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
 
 /** The composed pipeline (SURVEY §3.1 lifecycle) plus the remaining
   * source/scale utilities.
@@ -130,19 +128,13 @@ class ReindexJobSpec extends SparkSuite {
 
   test("the kv lookup runs on the scanned columns: one parse, above the enrichment, below the cache") {
     val out = Files.createTempDirectory("graft-order")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val source = new ParquetDocSource(mixedCorpus)
-    spark.listenerManager.register(listener)
-    try ReindexJob.run(spark, conf.copy(authorities = true), source,
+    val (r, plans) = Harness.executedPlans(spark)(
+      ReindexJob.run(spark, conf.copy(authorities = true), source,
         new NdjsonDirSink(out.toString + "/docs", chunkSize = 300),
-        Lockfile.default(out.toString), authorityStore = Some(kvStore)).toOption.get
-    finally { Harness.drainListenerBus(spark); spark.listenerManager.unregister(listener) }
-    val run = plans.asScala.toSeq.flatMap(planNodes)
+        Lockfile.default(out.toString), authorityStore = Some(kvStore)))
+    assert(r.isRight, r)
+    val run = plans.flatMap(p => planNodes(p._2))
     val cache = run.collectFirst { case s: InMemoryTableScanExec => planNodes(s.relation.cachedPlan) }
       .getOrElse(fail("the run reads no cache"))
     def isParse(e: Expression): Boolean = e.isInstanceOf[ParseFlatten]

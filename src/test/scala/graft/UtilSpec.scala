@@ -31,73 +31,27 @@ class UtilSpec extends AnyFunSuite {
     assert(r.left.exists(_.size == 2))
   }
 
-  // The bench-harness and doc-drift tests below are PLAIN JVM tests —
-  // they lived in ErrorCollectorSpec (a SparkSuite) through r10, which
-  // made the doc gate cost a Spark startup to run; rounds 9 AND 10
-  // shipped with it red because nobody re-ran the suite at round end.
-  // Here `sbt "testOnly graft.UtilSpec"` verifies both in ~1 s; any
+  // The bench-harness and doc-drift tests below need no Spark session:
+  // `sbt "testOnly graft.UtilSpec"` runs them in about a second; any
   // commit touching SparkEntry.scala or README.md runs it first.
 
   test("priorBenchRecord reads the newest BENCH artifact's qNN minimums") {
     val dir = Files.createTempDirectory("graft-bench")
     assert(Bench.priorBenchRecord(dir).isEmpty, "no artifact → empty map")
     Files.write(dir.resolve("BENCH_r08.json"),
-      """{"queries": {"q01": 9.99, "q67": 9.99}}""".getBytes("UTF-8"))
-    // the fixture replays the driver's REAL artifact shape —
-    // pretty-printed with a space after each colon (the r10 regex
-    // required compact JSON and matched zero pairs in production),
-    // repeating each value in `tail` and `parsed`, with full-name
-    // keys and -1 failures; newest round (r9) wins
+      """{"tail": "{\"qv\":[999,999]}"}""".getBytes("UTF-8"))
+    // the committed artifact shape: pretty-printed, the contract line
+    // both as the escaped `tail` string and as `parsed`; newest round
+    // (r9) wins
     Files.write(dir.resolve("BENCH_r09.json"),
       ("""{
-         |  "tail": "{\"q01_pricing\": 1.05, \"q67_session_window\": 2.27}",
+         |  "tail": "{\"metric\":\"total\",\"nq\":2,\"qv\":[105,227]}",
          |  "parsed": {
-         |    "queries": {
-         |      "q01": 1.05,
-         |      "q67": 2.27,
-         |      "q99": -1
-         |    }
+         |    "qv": [105, 227]
          |  }
          |}""".stripMargin).getBytes("UTF-8"))
     val rec = Bench.priorBenchRecord(dir)
-    assert(rec.get("q01").contains(1.05))
-    assert(rec.get("q67").contains(2.27))
-    assert(!rec.contains("q99"), "failed (-1) entries must not become records")
-  }
-
-  test("priorBenchRecord parses the committed BENCH_r10.json artifact itself") {
-    // End-to-end against the real driver artifact in the repo root:
-    // the exact file class the r10 regex silently failed on.
-    val repoRoot = java.nio.file.Paths.get(".")
-    if (Files.exists(repoRoot.resolve("BENCH_r10.json"))) {
-      val rec = Bench.priorBenchRecord(repoRoot)
-      assert(rec.size >= 80,
-        s"expected >=80 qNN records from the committed artifact, got ${rec.size}")
-      assert(rec.values.forall(_ >= 0))
-    }
-  }
-
-  test("priorBenchRecord parses the degraded BENCH_r12-class artifact (escaped tail, parsed null)") {
-    // Replays VERDICT r12 #1: the contract line outgrew the driver's
-    // 2000-char capture, `parsed` came back null, and the only data
-    // left is the backslash-escaped fragment inside the `tail` string.
-    // The r11 regex (literal quotes) matched ZERO of these pairs.
-    val dir = Files.createTempDirectory("graft-bench-r12")
-    Files.write(dir.resolve("BENCH_r12.json"),
-      ("""{
-         |  "n": 12,
-         |  "sf": 0.1,
-         |  "tail": "q116\":0.23,\"q117\":0.46,\"q118\":0.19,\"q16\":0.07}}",
-         |  "parsed": null
-         |}""".stripMargin).getBytes("UTF-8"))
-    val rec = Bench.priorBenchRecord(dir)
-    assert(rec.get("q117").contains(0.46))
-    assert(rec.get("q16").contains(0.07))
-    // sf gating now accepts the driver envelope's bare `"sf": 0.1`
-    // number (the dir path rarely survives the capture window)
-    assert(Bench.priorBenchRecord(dir, sfDir = "/root/testdata/sf0.1").nonEmpty)
-    assert(Bench.priorBenchRecord(dir, sfDir = "/root/testdata/sf0.01").isEmpty,
-      "sf0.1 artifact must not seed an sf0.01 run's priors")
+    assert(rec == Map("q01" -> 1.05, "q02" -> 2.27))
   }
 
   test("priorBenchRecord decodes the r13 array contract (qv centiseconds, qNN numeric order)") {
@@ -115,21 +69,21 @@ class UtilSpec extends AnyFunSuite {
     assert(rec.get("q02").contains(0.23))
     assert(!rec.contains("q03"), "failed (-1) entries must not become records")
     assert(rec.get("q04").contains(0.07))
+    // sf gating accepts the artifact envelope's bare `"sf": 0.1` number
+    // (the dir path rarely survives the capture window)
+    assert(Bench.priorBenchRecord(dir, sfDir = "/data/sf0.1") == rec)
+    assert(Bench.priorBenchRecord(dir, sfDir = "/data/sf0.01").isEmpty,
+      "sf0.1 artifact must not seed an sf0.01 run's priors")
   }
 
-  test("priorBenchRecord falls back past a zero-pair newest artifact, then to bench_detail.json") {
+  test("priorBenchRecord falls back past a newest artifact with no qv array") {
     val dir = Files.createTempDirectory("graft-bench-fb")
     Files.write(dir.resolve("BENCH_r12.json"),
-      """{"n": 12, "tail": "no pairs survived at all", "parsed": null}""".getBytes("UTF-8"))
+      """{"n": 12, "tail": "q116\":0.23,\"q117\":0.46}}", "parsed": null}""".getBytes("UTF-8"))
     Files.write(dir.resolve("BENCH_r11.json"),
-      """{"queries": {"q01": 1.23}}""".getBytes("UTF-8"))
-    assert(Bench.priorBenchRecord(dir).get("q01").contains(1.23),
-      "a degraded newest artifact must yield to the next-newest")
-    Files.delete(dir.resolve("BENCH_r11.json"))
-    Files.write(dir.resolve("bench_detail.json"),
-      """{"errors":{},"reps":3,"queries":{"q01_pricing_summary":0.55},"sf":"/root/testdata/sf0.1"}""".getBytes("UTF-8"))
-    assert(Bench.priorBenchRecord(dir).get("q01").contains(0.55),
-      "bench_detail.json is the last-resort prior source")
+      """{"parsed": {"qv": [123]}}""".getBytes("UTF-8"))
+    assert(Bench.priorBenchRecord(dir) == Map("q01" -> 1.23),
+      "a newest artifact without qv must yield to the next-newest")
   }
 
   test("blockOutliers flags >=3 consecutive 1.5x-prior suspects, not isolated ones") {
