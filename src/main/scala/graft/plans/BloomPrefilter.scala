@@ -28,40 +28,11 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   * — stats are built once (q331/q338/q339), persisted, and consumed
   * by later plans (q335/q348, and now this rule) — and lets the SAME
   * bitmap serve many queries without rebuilding per plan.
+  *
+  * Registrations are ~16 KB bitmaps, 64 kept; eviction is
+  * value-invisible because the prefilter only ever PRUNES.
   */
-object BloomRegistry {
-  /** Bounded insertion-ordered store: per-call registrations are
-    * ~16 KB bitmaps, and a long-lived session that never bothers to
-    * [[unregister]] must not accumulate them without limit — beyond
-    * `maxEntries` the ELDEST registration is evicted (by then its
-    * consumer plan has long since optimized; eviction is
-    * value-invisible because the prefilter only ever PRUNES, so a
-    * plan re-optimized without its registration still computes the
-    * identical result).
-    */
-  private val maxEntries = 64
-  private val entries = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Array[Byte]]() {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[Byte]]): Boolean =
-        size() > maxEntries
-    })
-
-  def register(probeAttrName: String, bloom: Array[Byte]): Unit = {
-    entries.put(probeAttrName, bloom); ()
-  }
-
-  def unregister(probeAttrName: String): Unit = {
-    entries.remove(probeAttrName); ()
-  }
-
-  def lookup(probeAttrName: String): Option[Array[Byte]] =
-    Option(entries.get(probeAttrName))
-
-  def isEmpty: Boolean = entries.isEmpty
-
-  def clear(): Unit = entries.clear()
-}
+object BloomRegistry extends BoundedRegistry[Array[Byte]](64)
 
 /** Optimizer rule: for an inner equi-join whose probe-side key column
   * is registered in [[BloomRegistry]], insert

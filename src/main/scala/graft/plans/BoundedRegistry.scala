@@ -1,0 +1,33 @@
+package graft.plans
+
+/** The optimizer registries' one store ([[BloomRegistry]],
+  * [[JoinOrderRegistry]], [[MvRegistry]]): a synchronized,
+  * insertion-ordered map from a per-call-unique column name to a
+  * registered decision.  A long-lived session that never unregisters
+  * must not accumulate entries without limit, so beyond `maxEntries`
+  * the ELDEST registration is evicted — by then its consumer plan has
+  * long since optimized, and every registry only ever forfeits an
+  * optimization when an entry is missing (the unoptimized plan computes
+  * the identical result).
+  */
+class BoundedRegistry[V](maxEntries: Int) {
+  private val entries = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, V]() {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
+        size() > maxEntries
+    })
+
+  def register(attrName: String, value: V): Unit = {
+    entries.put(attrName, value); ()
+  }
+
+  def unregister(attrName: String): Unit = {
+    entries.remove(attrName); ()
+  }
+
+  def lookup(attrName: String): Option[V] = Option(entries.get(attrName))
+
+  def isEmpty: Boolean = entries.isEmpty
+
+  def clear(): Unit = entries.clear()
+}

@@ -19,38 +19,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Scoping mirrors [[BloomRegistry]]: the marker column name is
   * unique per call, so the rule is inert for every other plan.
   */
-object JoinOrderRegistry {
-  /** Bounded insertion-ordered store (the [[BloomRegistry]] rule): a
-    * long-lived session that never [[unregister]]s must not grow the
-    * map without limit — past `maxEntries` the eldest decision is
-    * evicted; losing a decision only forfeits the reorder (the naive
-    * association is equally correct).
-    */
-  private val maxEntries = 64
-  private val entries = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, java.lang.Boolean]() {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Boolean]): Boolean =
-        size() > maxEntries
-    })
-
+object JoinOrderRegistry extends BoundedRegistry[Boolean](64) {
   /** innerFirst = true: the join carrying the marked condition should
     * run innermost (first); false records an explicit keep-decision.
     */
-  def register(markerAttrName: String, innerFirst: Boolean): Unit = {
-    entries.put(markerAttrName, java.lang.Boolean.valueOf(innerFirst)); ()
-  }
-
-  def unregister(markerAttrName: String): Unit = {
-    entries.remove(markerAttrName); ()
-  }
-
-  def lookup(markerAttrName: String): Option[Boolean] =
-    Option(entries.get(markerAttrName)).map(_.booleanValue())
-
-  def isEmpty: Boolean = entries.isEmpty
-
-  def clear(): Unit = entries.clear()
+  override def register(markerAttrName: String, innerFirst: Boolean): Unit =
+    super.register(markerAttrName, innerFirst)
 }
 
 /** Optimizer rule: (A ⋈_{c1} B) ⋈_{c2} C → (A ⋈_{c2} C) ⋈_{c1} B

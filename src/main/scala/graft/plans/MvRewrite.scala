@@ -121,35 +121,13 @@ final case class MvRegistration(
     replacement: LogicalPlan,
     signature: Option[MvAggSignature])
 
-object MvRegistry {
-  /** Bounded insertion-ordered store (the [[BloomRegistry]] rule);
-    * entries are logical plans (larger than bitmaps), so the bound is
-    * tighter.  Evicting a registration only forfeits the rewrite —
-    * the base-table aggregate is equally correct.
-    */
-  private val maxEntries = 16
-  private val entries = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, MvRegistration]() {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, MvRegistration]): Boolean =
-        size() > maxEntries
-    })
-
+/** Entries are logical plans (larger than bitmaps), so the bound is
+  * tighter.
+  */
+object MvRegistry extends BoundedRegistry[MvRegistration](16) {
   def register(markerAttrName: String, replacement: LogicalPlan,
-      signature: Option[MvAggSignature] = None): Unit = {
-    entries.put(markerAttrName, MvRegistration(replacement, signature)); ()
-  }
-
-  def unregister(markerAttrName: String): Unit = {
-    entries.remove(markerAttrName); ()
-  }
-
-  def lookup(markerAttrName: String): Option[MvRegistration] =
-    Option(entries.get(markerAttrName))
-
-  def isEmpty: Boolean = entries.isEmpty
-
-  def clear(): Unit = entries.clear()
+      signature: Option[MvAggSignature] = None): Unit =
+    register(markerAttrName, MvRegistration(replacement, signature))
 }
 
 /** Optimizer rule: an Aggregate whose child output carries a column

@@ -205,9 +205,9 @@ object StatsStore {
       java.util.regex.Pattern.quote(name)).get(name)
 
   /** THE named rename-publish entry point for every consumer outside
-    * this object (MvStore's artifacts, the q377 CDC epochs) — one
-    * public surface so a behavior change (fsync, validation) cannot
-    * miss a second call path.
+    * this object (MvStore's artifacts, the q377 CDC epochs, DocStream's
+    * fingerprint and HLL stores) — one public surface so a behavior
+    * change (fsync, validation) cannot miss a second call path.
     */
   def publishNamed(df: DataFrame, storeDir: String, name: String): Unit =
     commitArtifact(df, storeDir, name)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * a local relation before deleting the temp dir.  Returning a lazy
   * plan over files we are about to delete would read after unlink on
   * re-execution; the bounded collect is the same pattern as the memory
-  * sink in the streaming tier (StreamQueries.runToTable).  Bench reps
+  * sink in the streaming tier (StreamRunner.toTable).  Bench reps
   * therefore pay the full write+read each rep and leak nothing.
   *
   * 100 TB notes per operator sit on the methods; plan shapes (ORC

@@ -33,30 +33,21 @@ object DocStream {
 
   private val storeSchema = StructType(Seq(StructField("fp", StringType)))
 
-  /** Start the dedup-ingest stream over a 4-column document stream
-    * (id, txn_id, owner, content).  `storeDir` holds the fingerprint
-    * corpus (created on first batch); fresh docs flow to `sink`.
-    *
-    * The micro-batch is pinned (persist) before the empty-guard: the
-    * pipeline consumes the batch twice (the guard's isEmpty probe,
-    * then the fresh-docs materialization), and without the pin each
-    * pass re-scans the batch's source files — 2× the ingest read I/O
-    * at any scale (caught by StreamProgressSpec's numInputRows pin,
-    * which showed exactly double the staged rows).  A micro-batch is
-    * bounded by maxFilesPerTrigger, so the pin is the standard
-    * multi-pass-foreachBatch play (MEMORY_AND_DISK spills if a batch
-    * outgrows memory).
+  /** Run the dedup-ingest stream over a 4-column document stream
+    * (id, txn_id, owner, content) until every file available at start
+    * is ingested.  `storeDir` holds the fingerprint corpus (created on
+    * first batch); fresh docs flow to `sink`.  Each micro-batch goes
+    * through [[StreamRunner.eachNonEmpty]]: the pipeline reads the batch
+    * twice (the empty probe, then the fresh-docs materialization), and
+    * without the pin each read re-scans the batch's source files
+    * (caught by StreamProgressSpec's numInputRows pin, which showed
+    * exactly double the staged rows).
     */
   def dedupIngest(docs: DataFrame, storeDir: String, sink: DocSink,
                   checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pinned = batch.persist()
-        try { if (!pinned.isEmpty) { processBatch(pinned, storeDir, sink, batchId); () } }
-        finally { pinned.unpersist(); () }
-      }
-      .start()
+    StreamRunner.foreachBatch(docs, checkpointDir)(StreamRunner.eachNonEmpty {
+      (batch, batchId) => processBatch(batch, storeDir, sink, batchId); ()
+    })
 
   /** One batch of the dedup-ingest pipeline (factored out so batch
     * jobs and tests can drive it directly).  Returns the fresh docs
@@ -71,117 +62,80 @@ object DocStream {
     val batchUnique = withFp
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-    val store = readStore(spark, storeDir)
-    val fresh = batchUnique.join(store, Seq("fp"), "left_anti").persist()
-    try {
-      if (fresh.isEmpty) 0L // full replay: leave the batch's prior output alone
-      else {
-        // sink BEFORE store (see scaladoc): crash in between replays
-        // with fps still unstored → same docs recomputed and
-        // idempotently rewritten; the reverse order loses them
-        val written = sink.writeBatch(fresh.drop("fp"), batchId)
-        commitStore(fresh.select("fp"), storeDir, batchId)
-        written
-      }
-    } finally { fresh.unpersist(); () }
+    val store = readStore(spark, storeDir, storeSchema)
+    // a full replay anti-joins to empty: leave the batch's prior output alone
+    StreamRunner.nonEmpty(batchUnique.join(store, Seq("fp"), "left_anti"), 0L) { fresh =>
+      // sink BEFORE store (see scaladoc): crash in between replays
+      // with fps still unstored → same docs recomputed and
+      // idempotently rewritten; the reverse order loses them
+      val written = sink.writeBatch(fresh.drop("fp"), batchId)
+      publish(fresh.select("fp"), storeDir, batchId)
+      written
+    }
   }
 
-  /** Atomic store append: write the batch's fingerprints to a hidden
-    * temp dir, then publish with one FileSystem.rename.  A bare
-    * parquet append is multi-file — a crash mid-append would leave a
-    * PARTIAL fp set, and the replay's anti-join would then recompute
-    * only the still-missing docs and overwrite the batch's sink
-    * subdirectory with that subset, silently dropping the rest.  With
-    * rename-publish the store only ever holds none-or-all of a
-    * batch's fps, so a replay recomputes none-or-all of its docs.
-    * (Hidden `.tmp-*` leftovers from crashes are invisible to both
-    * partition discovery and the anti-join.)
-    */
   /** q336: per-micro-batch HLL register maintenance — the incremental
     * distinct-count a 100 TB ingest pipeline actually runs.  Each
     * micro-batch publishes its OWN m=64 register partial (the q323
     * algebra via [[graft.operators.PipelineAudits.hllRegisterTable]])
-    * into the store with the same none-or-all rename-publish the
-    * fingerprint store uses; the read side max-merges across epoch
-    * partials — exactly the per-shard-build + coordinator-merge shape
-    * q333 certifies, so a batch REPLAY is idempotent twice over
-    * (rename overwrites its own epoch; max absorbs duplicates).  No
-    * read-modify-write of the store ever happens inside a batch.
+    * into the store with the same none-or-all publish the fingerprint
+    * store uses; the read side max-merges across epoch partials —
+    * exactly the per-shard-build + coordinator-merge shape q333
+    * certifies, so a batch REPLAY is idempotent twice over (the replay
+    * publishes a newer version of its own epoch; max absorbs
+    * duplicates).  No read-modify-write of the store ever happens
+    * inside a batch.  Runs until every file available at start is
+    * folded in, like [[dedupIngest]].
     */
   def hllMaintain(docs: DataFrame, storeDir: String,
                   checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pinned = batch.persist()
-        try { if (!pinned.isEmpty) { hllBatch(pinned, storeDir, batchId); () } }
-        finally { pinned.unpersist(); () }
-      }
-      .start()
+    StreamRunner.foreachBatch(docs, checkpointDir)(
+      StreamRunner.eachNonEmpty(hllBatch(_, storeDir, _)))
 
   /** One batch of the HLL maintainer (factored out so the restart spec
-    * can drive it directly): the batch's register partial,
-    * rename-published as `batch=N`.
+    * can drive it directly): the batch's register partial, published
+    * as `batch=N`.
     */
   def hllBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val regs = graft.operators.PipelineAudits.hllRegisterTable(
       batch.select(explode(TextFunctions.tokens(col("text"))).as("token")))
-    commitStore(regs, storeDir, batchId)
+    publish(regs, storeDir, batchId)
   }
 
   /** Read side of the q336 store: max-merge the committed epoch
     * partials (64 rows each) into the current register table.
     */
   def readHllRegisters(spark: SparkSession, storeDir: String): DataFrame =
-    readStoreAs(spark, storeDir, hllStoreSchema)
+    readStore(spark, storeDir, hllStoreSchema)
       .groupBy("register").agg(max(col("m")).as("m"))
 
   private val hllStoreSchema = StructType(Seq(
     StructField("register", org.apache.spark.sql.types.LongType),
     StructField("m", org.apache.spark.sql.types.LongType)))
 
-  private def commitStore(fps: DataFrame, storeDir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = fps.sparkSession
-    val fs = new Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val finalDir = new Path(storeDir, s"batch=$batchId")
-    val tmpDir = new Path(storeDir, s".tmp-batch-$batchId")
-    fps.write.mode("overwrite").parquet(tmpDir.toString)
-    // replay of an anomalous half-published batch: last writer wins,
-    // consistent with the sink's per-batch overwrite
-    if (fs.exists(finalDir)) { fs.delete(finalDir, true); () }
-    if (!fs.rename(tmpDir, finalDir))
-      throw new java.io.IOException(s"cannot publish fp store batch: $tmpDir -> $finalDir")
-  }
+  /** Atomic store append: the batch's rows become the artifact
+    * `batch=N` through [[graft.plans.StatsStore.publishNamed]] (hidden
+    * temp dir, one rename to the next `batch=N-vK` version).  A bare
+    * parquet append is multi-file — a crash mid-append would leave a
+    * PARTIAL fp set, and the replay's anti-join would then recompute
+    * only the still-missing docs and overwrite the batch's sink
+    * subdirectory with that subset, silently dropping the rest.  With
+    * the rename the store only ever holds none-or-all of a batch's
+    * rows, so a replay recomputes none-or-all of its docs.  One file
+    * per artifact is bounded by the micro-batch, which
+    * maxFilesPerTrigger caps.
+    */
+  private def publish(df: DataFrame, storeDir: String, batchId: Long): Unit =
+    graft.plans.StatsStore.publishNamed(df, storeDir, s"batch=$batchId")
 
-  private def readStore(spark: SparkSession, storeDir: String): DataFrame =
-    readStoreAs(spark, storeDir, storeSchema)
-
-  private def readStoreAs(spark: SparkSession, storeDir: String,
-                          schema: StructType): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(storeDir)
-    // Hadoop FileSystem, not java.io.File: the store may live on any
-    // supported filesystem (HDFS/object store), not just local disk
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // enumerate committed batch=N dirs AND any legacy flat part files
-    // (pre-rename-publish stores appended parquet directly here) —
-    // listing explicit paths also sidesteps the mixed-layout assertion
-    // spark.read.parquet(root) would hit, and skips hidden .tmp-*
-    // leftovers from crashed commits
-    val paths =
-      if (!fs.exists(dir)) Array.empty[String]
-      else fs.listStatus(dir)
-        .filterNot(s => s.getPath.getName.startsWith(".") || s.getPath.getName.startsWith("_"))
-        .collect {
-          case s if s.isDirectory && s.getPath.getName.startsWith("batch=") =>
-            s.getPath.toString
-          case s if s.isFile && s.getPath.getName.endsWith(".parquet") =>
-            s.getPath.toString
-        }
-    if (paths.nonEmpty) spark.read.schema(schema).parquet(paths.toIndexedSeq: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Every committed batch's serving version, read as one frame; an
+    * empty frame of `schema` before the first commit.  Hidden `.tmp-*`
+    * leftovers of crashed commits are never listed.
+    */
+  private def readStore(spark: SparkSession, storeDir: String,
+                        schema: StructType): DataFrame = {
+    val paths = graft.plans.StatsStore.artifactDirs(spark, storeDir, "batch=\\d+").values.toSeq
+    if (paths.nonEmpty) spark.read.schema(schema).parquet(paths: _*)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

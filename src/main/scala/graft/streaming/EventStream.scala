@@ -176,7 +176,10 @@ object EventStream {
     * batch write path (chunking, checkpoint, idempotent upsert) via
     * `DocSink.writeBatch`, so at-least-once delivery + a sink that is
     * idempotent per id (upsert) or per batch id (subdirectory) =
-    * effectively-once.
+    * effectively-once.  The batch is pinned by
+    * [[StreamRunner.eachNonEmpty]]: the empty probe, the sink's
+    * range-sampling pass and the write then read the source once.
+    * The query runs until stopped (default trigger).
     */
   def toDocSink(events: DataFrame, sink: DocSink, checkpointDir: String): StreamingQuery =
     events
@@ -188,8 +191,8 @@ object EventStream {
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) { sink.writeBatch(batch, batchId); () }
-      }
+      .foreachBatch(StreamRunner.eachNonEmpty { (batch, batchId) =>
+        sink.writeBatch(batch, batchId); ()
+      })
       .start()
 }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Oracle-checked streaming queries (SURVEY §2.B streaming row): each
-  * runs a Structured Streaming plan to completion over the fixture via
-  * `Trigger.AvailableNow` and returns the materialized result, so the
+  * runs a Structured Streaming plan to completion over the fixture
+  * through [[StreamRunner]] (`Trigger.AvailableNow`, state partitions
+  * pinned) and returns the materialized result, so the
   * streaming tier sits in the SAME DuckDB hash gate as every batch
   * operator instead of a weaker spec-only check.
   *
@@ -40,107 +40,22 @@ object StreamQueries {
     */
   val q343LateLagResidue: Int = 0
 
-  /** Start `stream` into a uniquely-named memory sink, drain every
-    * available micro-batch, hand the finished query to `inspect`
-    * (progress assertions in tests), and return the sink table.
-    *
-    * State partitioning is sized to STATE volume, not to the session's
-    * shuffle width: Spark fixes `spark.sql.shuffle.partitions` into the
-    * checkpoint at first start as the state-store partition count, and
-    * every store partition pays per-micro-batch checkpoint I/O whether
-    * or not it holds keys — at fixture scale 32 near-empty stores per
-    * stateful operator are pure overhead (measured 6.4 s → ~2 s on the
-    * q229 join).  At 100 TB this knob goes UP to match the keyspace;
-    * it is the one parallelism choice streaming cannot AQE its way out
-    * of, which is why it is explicit here.  The conf is restored after
-    * start — it is only read at query planning.
-    */
-  private def runToTable(spark: SparkSession, stream: DataFrame, mode: String,
-                         inspect: StreamingQuery => Unit,
-                         statePartitions: Int = 8): DataFrame = {
-    val name = "graft_sq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val q =
-      try {
-        spark.conf.set(key, statePartitions.toString)
-        stream.writeStream.format("memory").queryName(name)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      } finally spark.conf.set(key, prev)
-    try { q.awaitTermination(); inspect(q) } finally q.stop()
-    spark.table(name)
-  }
-
-  /** Stage each filtered slice of `df` as one parquet file in a fresh
-    * watch dir, mod-times pinned 1 s apart so FileStreamSource picks
-    * the slices up in order — with maxFilesPerTrigger=1 each slice
-    * rides its own micro-batch (the cross-batch-state test harness
-    * used by q230 and q239).  Part-file lookup closes its directory
-    * stream (Files.list holds a handle until closed — the Bench
-    * lesson).  Returns (watch, stage); caller deletes both.
-    */
-  private def stageBatches(df: DataFrame, preds: Seq[org.apache.spark.sql.Column],
-                           tag: String, dropAfterFilter: Seq[String] = Nil)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    stageSlices(preds.map(p =>
-      df.filter(p).drop(dropAfterFilter: _*)), tag)
-
-  /** stageBatches for HETEROGENEOUS batches: each frame (same schema)
-    * becomes one staged file/micro-batch, mod-times pinned in order.
-    */
-  private def stageFrames(dfs: Seq[DataFrame], tag: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    stageSlices(dfs, tag)
-
-  /** The shared staging writer: each slice is still its own
-    * coalesce(1) parquet write (byte-identical files and in-file row
-    * order to the sequential r20 form), but the N independent write
-    * jobs now OVERLAP via [[graft.util.Par]] (guide §2.6) — the
-    * fixture staging is setup the operator pays per invocation, and
-    * serializing N single-partition writes left the other 31 cores
-    * idle for most of it.  File copies + mod-time pinning stay
-    * sequential (cheap, order matters for readability only — the
-    * mod-times, not copy order, pin micro-batch order).
-    */
-  private def stageSlices(slices: Seq[DataFrame], tag: String)
-      : (java.nio.file.Path, java.nio.file.Path) = {
-    import java.nio.file.Files
-    val watch = Files.createTempDirectory(s"graft-$tag-src")
-    val stage = Files.createTempDirectory(s"graft-$tag-stage")
-    graft.util.Par.run(slices.zipWithIndex.map { case (df, i) =>
-      () => df.coalesce(1).write.parquet(s"$stage/c$i")
-    })
-    for (i <- slices.indices) {
-      val dst = watch.resolve(f"$tag$i%02d.parquet")
-      Files.copy(graft.util.Fs.onlyPartFile(s"$stage/c$i"), dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
-    }
-    (watch, stage)
-  }
-
   /** FileStreamSource wants a DIRECTORY to watch; the fixture is one
     * file among the other tables' parquet.  A temp watch dir holding a
     * symlink to events.parquet gives the stream its own source root
-    * without copying data.
+    * without copying data.  `build` shapes the event stream; the result
+    * is drained to a memory table and the watch dir deleted.
     */
-  private def eventsWatchDir(dir: String): java.nio.file.Path = {
+  private def eventsToTable(spark: SparkSession, dir: String, mode: String,
+                            inspect: StreamingQuery => Unit)(
+      build: DataFrame => DataFrame): DataFrame = {
     val watch = java.nio.file.Files.createTempDirectory("graft-stream-events")
-    java.nio.file.Files.createSymbolicLink(watch.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-    watch
+    StreamRunner.toTable(mode, inspect, watch) {
+      java.nio.file.Files.createSymbolicLink(watch.resolve("events.parquet"),
+        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
+      build(EventStream.readEvents(spark, watch.toString))
+    }
   }
-
-  /** The memory sink holds the drained result, so the watch dir is
-    * disposable the moment the query stops — bench reps would
-    * otherwise accumulate temp dirs (q228 copies the fixture twice per
-    * invocation).
-    */
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.util.Fs.deleteRecursively(p)
-
-  private def withWatchDir(watch: java.nio.file.Path)(body: String => DataFrame): DataFrame =
-    try body(watch.toString) finally deleteRecursively(watch)
 
   /** q226: hourly event-time windows, streamed.  Equivalent batch/SQL:
     * group by date_trunc-hour — epoch-aligned exactly like Spark's
@@ -148,14 +63,12 @@ object StreamQueries {
     */
   def windowedTotals(spark: SparkSession, dir: String,
                      inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-    withWatchDir(eventsWatchDir(dir)) { watch =>
-      val agg = EventStream.readEvents(spark, watch)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+    eventsToTable(spark, dir, "complete", inspect) {
+      _.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")).as("value_units"))
         .select(unix_micros(col("window.start")).as("win_us"), col("event_type"),
           col("n_events"), col("value_units"))
-      runToTable(spark, agg, "complete", inspect)
     }
 
   /** q227: gap-based session windows, streamed.  The oracle replays the
@@ -168,15 +81,13 @@ object StreamQueries {
     */
   def sessionTotals(spark: SparkSession, dir: String,
                     inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-    withWatchDir(eventsWatchDir(dir)) { watch =>
-      val agg = EventStream.readEvents(spark, watch)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+    eventsToTable(spark, dir, "complete", inspect) {
+      _.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")).as("value_units"))
         .select(unix_micros(col("session_window.start")).as("session_start_us"),
           unix_micros(col("session_window.end")).as("session_end_us"),
           col("user_id"), col("n_events"), col("value_units"))
-      runToTable(spark, agg, "complete", inspect)
     }
 
   /** q229: the stream-stream interval join, gated.  Both sides read the
@@ -189,13 +100,10 @@ object StreamQueries {
     */
   def joinedPairs(spark: SparkSession, dir: String,
                   inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-    withWatchDir(eventsWatchDir(dir)) { watch =>
-      val joined = EventStream.purchaseViewJoin(
-          EventStream.readEvents(spark, watch),
-          watermark = "3650 days", horizon = "1 hour")
+    eventsToTable(spark, dir, "append", inspect) {
+      EventStream.purchaseViewJoin(_, watermark = "3650 days", horizon = "1 hour")
         .select(col("purchase_id"), col("user_id"), col("view_id"),
           unix_micros(col("p_ts")).as("p_us"), unix_micros(col("v_ts")).as("v_us"))
-      runToTable(spark, joined, "append", inspect)
     }
 
   /** q346: LEFT OUTER stream-stream interval join, gated — q229's
@@ -216,13 +124,10 @@ object StreamQueries {
     */
   def leftJoinedPairs(spark: SparkSession, dir: String,
                       inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-    withWatchDir(eventsWatchDir(dir)) { watch =>
-      val joined = EventStream.purchaseViewLeftJoin(
-          EventStream.readEvents(spark, watch),
-          watermark = "1 hour", horizon = "1 hour")
+    eventsToTable(spark, dir, "append", inspect) {
+      EventStream.purchaseViewLeftJoin(_, watermark = "1 hour", horizon = "1 hour")
         .select(col("purchase_id"), col("user_id"), col("view_id"),
           unix_micros(col("p_ts")).as("p_us"), unix_micros(col("v_ts")).as("v_us"))
-      runToTable(spark, joined, "append", inspect)
     }
 
   /** q230: the WHOLE streaming document-ingest pipeline, gated
@@ -242,12 +147,12 @@ object StreamQueries {
     * states directly as one GROUP BY.  Output: per-source survivor
     * count + exact id sum.
     *
-    * The sink output dir intentionally outlives the call — the
-    * returned frame reads those NDJSON files lazily.
+    * The result is bounded (one row per source): it is localized and
+    * every per-call dir, the sink output included, deleted eagerly.
     */
   def ingestAudit(spark: SparkSession, dir: String,
                   inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val docs = graft.Tables.documents(spark, dir)
       .select(format_string("%08d", col("doc_id")).as("id"),
         col("doc_id").cast("string").as("txn_id"),
@@ -255,33 +160,27 @@ object StreamQueries {
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val cut1 = (maxId + 1) * 3 / 5   // batch 1: ids [0, cut1)
     val cut0 = cut1 / 2              // batch 2: ids [cut0, max] — [cut0, cut1) replays
-    val (watch, stage) = stageBatches(docs,
-      Seq(col("doc_id") < cut1, col("doc_id") >= cut0), "ingest",
-      dropAfterFilter = Seq("doc_id"))
-    val docSchema = StructType(Seq("id", "txn_id", "owner", "content")
-      .map(StructField(_, StringType)))
+    val staged = StreamRunner.stageSlices(
+      Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
+        .map(docs.filter(_).drop("doc_id")), "ingest")
     val storeDir = Files.createTempDirectory("graft-ingest-store")
     val ckptDir = Files.createTempDirectory("graft-ingest-ckpt")
     val outDir = Files.createTempDirectory("graft-ingest-out")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val q =
-      try {
-        spark.conf.set(key, "8")
-        DocStream.dedupIngest(
-          spark.readStream.schema(docSchema)
-            .option("maxFilesPerTrigger", "1").parquet(watch.toString),
-          storeDir.toString,
+    try {
+      StreamRunner.drain(inspect, staged.dirs ++ Seq(storeDir, ckptDir): _*)(
+        DocStream.dedupIngest(staged.read(spark), storeDir.toString,
           new graft.sinks.NdjsonDirSink(outDir.toString, chunkSize = 100),
-          ckptDir.toString)
-      } finally spark.conf.set(key, prev)
-    try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    Seq(watch, stage, storeDir, ckptDir).foreach(deleteRecursively)
-    spark.read.schema(docSchema).json(s"$outDir/batch=*")
-      .groupBy(col("owner").as("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("id").cast("long")).as("id_sum"))
-      .select(col("source"), col("n_docs"), col("id_sum"))
+          ckptDir.toString))
+      graft.util.Fs.localize(spark,
+        spark.read.schema(graft.sources.DocSource.schema).json(s"$outDir/batch=*")
+          .groupBy(col("owner").as("source"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("id").cast("long")).as("id_sum"))
+          .select(col("source"), col("n_docs"), col("id_sum")))
+    } finally {
+      graft.util.Fs.syncRecursively(outDir)
+      graft.util.Fs.deleteRecursively(outDir)
+    }
   }
 
   /** q278: stream-static broadcast enrichment, gated — the one join
@@ -302,12 +201,12 @@ object StreamQueries {
     */
   def staticEnriched(spark: SparkSession, dir: String,
                      inspect: StreamingQuery => Unit = _ => ()): DataFrame =
-    withWatchDir(eventsWatchDir(dir)) { watch =>
+    eventsToTable(spark, dir, "complete", inspect) { events =>
       val units = floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")
       val profile = graft.Tables.events(spark, dir)
         .groupBy("user_id")
         .agg(count(lit(1)).as("user_events"), sum(units).as("user_units"))
-      val enriched = EventStream.readEvents(spark, watch)
+      events
         .join(broadcast(profile), Seq("user_id"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -315,7 +214,6 @@ object StreamQueries {
           sum(col("user_units")).as("enriched_units"))
         .select(col("event_type"), col("n_events"), col("value_units"),
           col("enriched_units"))
-      runToTable(spark, enriched, "complete", inspect)
     }
 
   /** q228: streaming dedup under whole-source replay.  The watch dir
@@ -337,17 +235,15 @@ object StreamQueries {
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(watch.resolve("copy_a.parquet"))
           .toMillis + 1000L))
-    withWatchDir(watch) { w =>
-      val deduped = EventStream.dedupEvents(
-        EventStream.readEvents(spark, w,
+    StreamRunner.toTable("append", inspect, watch)(
+      EventStream.dedupEvents(
+        EventStream.readEvents(spark, watch.toString,
           Map("maxFilesPerTrigger" -> "1")),
-        watermark = "3650 days")
-      runToTable(spark, deduped, "append", inspect)
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("event_id")).as("id_sum"),
-          sum(floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")).as("value_units"))
-        .select(col("n_events"), col("id_sum"), col("value_units"))
-    }
+        watermark = "3650 days"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("event_id")).as("id_sum"),
+        sum(floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")).as("value_units"))
+      .select(col("n_events"), col("id_sum"), col("value_units"))
   }
 
   /** q239: arbitrary keyed state (mapGroupsWithState), gated.  The
@@ -374,17 +270,17 @@ object StreamQueries {
     val e = graft.Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long").as("units"))
-    val (watch, stage) = stageBatches(e,
-      Seq(col("us") < cutUs, col("us") >= cutUs), "state")
-    try {
-      val schema = StructType(Seq(
-        StructField("user_id", org.apache.spark.sql.types.LongType),
-        StructField("us", org.apache.spark.sql.types.LongType),
-        StructField("units", org.apache.spark.sql.types.LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-      import spark.implicits._
-      val updated = stream.select(col("user_id").as[Long], col("units").as[Long])
+    val staged = StreamRunner.stageSlices(
+      Seq(col("us") < cutUs, col("us") >= cutUs).map(e.filter(_)), "state")
+    import spark.implicits._
+    // collapse update-mode emissions to the FINAL state by the row
+    // with the largest n_events — the event count is strictly
+    // monotone across a user's updates (each touched batch adds ≥1),
+    // where max(value_units) alone would silently pick an
+    // intermediate state if values could ever be negative
+    StreamRunner.toTable("update", inspect, staged.dirs: _*)(
+      staged.read(spark)
+        .select(col("user_id").as[Long], col("units").as[Long])
         .groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
           (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
@@ -395,17 +291,10 @@ object StreamQueries {
             state.update((n, u))
             (user, n, u)
         }
-        .toDF("user_id", "n_events", "value_units")
-      // collapse update-mode emissions to the FINAL state by the row
-      // with the largest n_events — the event count is strictly
-      // monotone across a user's updates (each touched batch adds ≥1),
-      // where max(value_units) alone would silently pick an
-      // intermediate state if values could ever be negative
-      runToTable(spark, updated, "update", inspect)
-        .groupBy("user_id")
-        .agg(max(col("n_events")).as("n_events"),
-          max_by(col("value_units"), col("n_events")).as("value_units"))
-    } finally Seq(watch, stage).foreach(deleteRecursively)
+        .toDF("user_id", "n_events", "value_units"))
+      .groupBy("user_id")
+      .agg(max(col("n_events")).as("n_events"),
+        max_by(col("value_units"), col("n_events")).as("value_units"))
   }
 
   /** q343: watermark late-data accounting, gated — the correctness
@@ -443,23 +332,15 @@ object StreamQueries {
                     inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val e = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"))
-    val (watch, stage) = stageBatches(e,
-      Seq(pmod(col("event_id"), lit(3L)) === 0L,
-          pmod(col("event_id"), lit(3L)) === 1L,
-          pmod(col("event_id"), lit(3L)) === 2L), "late")
-    try {
-      val schema = StructType(Seq(
-        StructField("event_id", org.apache.spark.sql.types.LongType),
-        StructField("ts", org.apache.spark.sql.types.TimestampType)))
-      val agg = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch.toString)
+    val staged = StreamRunner.stageSlices(
+      (0L to 2L).map(r => e.filter(pmod(col("event_id"), lit(3L)) === r)), "late")
+    StreamRunner.toTable("append", inspect, staged.dirs: _*)(
+      staged.read(spark)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("win_us"),
-          col("n_events"))
-      runToTable(spark, agg, "append", inspect)
-    } finally Seq(watch, stage).foreach(deleteRecursively)
+          col("n_events")))
   }
 
   /** q355: watermark-bounded streaming dedup — the TTL variant the
@@ -521,21 +402,15 @@ object StreamQueries {
     val b3 = e.filter(pmod(col("event_id"), lit(6L)) === 3L)
       .select(col("event_id"), fresh.as("ts"))
       .unionByName(e.filter(pmod(col("event_id"), lit(6L)) === 1L))
-    val (watch, stage) = stageFrames(Seq(b1, b2, b3), "ttl")
-    try {
-      val schema = StructType(Seq(
-        StructField("event_id", org.apache.spark.sql.types.LongType),
-        StructField("ts", org.apache.spark.sql.types.TimestampType)))
-      val deduped = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch.toString)
+    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "ttl")
+    StreamRunner.toTable("append", inspect, staged.dirs: _*)(
+      staged.read(spark)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), unix_micros(col("ts")).as("us"))
-      runToTable(spark, deduped, "append", inspect)
-        .groupBy("event_id")
-        .agg(count(lit(1)).as("n_emits"), sum(col("us")).as("us_sum"))
-        .orderBy("event_id")
-    } finally Seq(watch, stage).foreach(deleteRecursively)
+        .select(col("event_id"), unix_micros(col("ts")).as("us")))
+      .groupBy("event_id")
+      .agg(count(lit(1)).as("n_emits"), sum(col("us")).as("us_sum"))
+      .orderBy("event_id")
   }
 
   /** q361: the TTL dedup COMPOSED with the ingest sink — q355 proved
@@ -591,49 +466,27 @@ object StreamQueries {
     val origTs = timestamp_micros(lit(t0us) + col("doc_id") * lit(1000000L))
     val freshTs = timestamp_micros(lit(t0us) +
       (lit(maxId + 1L) + pmod(col("doc_id"), lit(60L))) * lit(1000000L))
-    def staged(f: org.apache.spark.sql.Column, ts: org.apache.spark.sql.Column) =
+    def slice(f: org.apache.spark.sql.Column, ts: org.apache.spark.sql.Column) =
       docs.filter(f).select(
         format_string("%08d", col("doc_id")).as("id"),
         col("source").as("owner"), ts.as("ts"))
-    val b1 = staged(col("doc_id") < cut1, origTs)
-    val b2 = staged(col("doc_id") >= cut0, origTs)
-    val b3 = staged(pmod(col("doc_id"), lit(7L)) === 0L &&
+    val b1 = slice(col("doc_id") < cut1, origTs)
+    val b2 = slice(col("doc_id") >= cut0, origTs)
+    val b3 = slice(pmod(col("doc_id"), lit(7L)) === 0L &&
       col("doc_id") < cut1, freshTs)
-    val (watch, stage) = stageFrames(Seq(b1, b2, b3), "ttlingest")
-    val schema = StructType(Seq(
-      StructField("id", StringType),
-      StructField("owner", StringType),
-      StructField("ts", org.apache.spark.sql.types.TimestampType)))
+    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "ttlingest")
     val outDir = Files.createTempDirectory("graft-ttlingest-out")
     val ckptDir = Files.createTempDirectory("graft-ttlingest-ckpt")
     val sink = new graft.sinks.NdjsonDirSink(outDir.toString, chunkSize = 100)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val q =
-      try {
-        spark.conf.set(key, "8")
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-          .withWatermark("ts", "60 seconds")
-          .dropDuplicatesWithinWatermark("id")
-          .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit"))
-          .writeStream
-          .option("checkpointLocation", ckptDir.toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val pinned = batch.persist()
-            try { if (!pinned.isEmpty) { sink.writeBatch(pinned, batchId); () } }
-            finally { pinned.unpersist(); () }
-          }
-          .start()
-      } finally spark.conf.set(key, prev)
-    try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    Seq(watch, stage, ckptDir).foreach(deleteRecursively)
+    val admitted = staged.read(spark)
+      .withWatermark("ts", "60 seconds")
+      .dropDuplicatesWithinWatermark("id")
+      .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit"))
+    StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
+      StreamRunner.foreachBatch(admitted, ckptDir.toString)(
+        StreamRunner.eachNonEmpty { (batch, batchId) => sink.writeBatch(batch, batchId); () }))
     graft.util.Fs.deleteOnExit(outDir)
-    val outSchema = StructType(Seq(
-      StructField("id", StringType),
-      StructField("owner", StringType),
-      StructField("us_admit", org.apache.spark.sql.types.LongType)))
-    spark.read.schema(outSchema).json(s"$outDir/batch=*")
+    spark.read.schema(admitted.schema).json(s"$outDir/batch=*")
       .groupBy(col("id").cast("long").as("doc_id"))
       .agg(count(lit(1)).as("n_writes"), sum(col("us_admit")).as("us_sum"))
       .orderBy("doc_id")
@@ -683,48 +536,21 @@ object StreamQueries {
     val maxK = li.agg(max(col("l_orderkey"))).head().getLong(0)
     val c1 = (maxK + 1) / 3
     val c2 = 2 * (maxK + 1) / 3
-    val (watch, stage) = stageBatches(li, Seq(
+    val staged = StreamRunner.stageSlices(Seq(
         col("l_orderkey") < c1,
         col("l_orderkey") >= c1 && col("l_orderkey") < c2,
-        col("l_orderkey") >= c2), "mv",
-      dropAfterFilter = Seq("l_orderkey"))
-    val schema = StructType(Seq(
-      StructField("day", org.apache.spark.sql.types.TimestampType),
-      StructField("flag", StringType),
-      StructField("price", org.apache.spark.sql.types.DoubleType),
-      StructField("disc", org.apache.spark.sql.types.DoubleType)))
+        col("l_orderkey") >= c2).map(li.filter(_).drop("l_orderkey")), "mv")
     val storeDir = Files.createTempDirectory("graft-mvingest-store")
     val ckptDir = Files.createTempDirectory("graft-mvingest-ckpt")
     // a mid-run failure must not leak the store: callers only learn
-    // the path from the successful return (ADVICE r20 — the old
-    // deleteOnExit backstop is gone), so clean ALL four dirs before
-    // rethrowing; the success path keeps returning the store
-    try {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q =
-        try {
-          spark.conf.set(key, "8")
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-            .writeStream
-            .option("checkpointLocation", ckptDir.toString)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              graft.plans.MvStore.publishEpoch(
-                graft.plans.MvStore.epochPartials(batch),
-                storeDir.toString, batchId)
-            }
-            .start()
-        } finally spark.conf.set(key, prev)
-      try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    } catch {
-      case e: Throwable =>
-        Seq(watch, stage, ckptDir, storeDir).foreach { p =>
-          try deleteRecursively(p) catch { case _: Throwable => () }
-        }
-        throw e
-    }
-    Seq(watch, stage, ckptDir).foreach(deleteRecursively)
+    // the path from the successful return, so it is deleted before
+    // rethrowing; the success path keeps returning it
+    try StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
+      StreamRunner.foreachBatch(staged.read(spark), ckptDir.toString) { (batch, batchId) =>
+        graft.plans.MvStore.publishEpoch(
+          graft.plans.MvStore.epochPartials(batch), storeDir.toString, batchId)
+      })
+    catch { case e: Throwable => graft.util.Fs.deleteRecursively(storeDir); throw e }
     storeDir
   }
 
@@ -762,7 +588,7 @@ object StreamQueries {
           .orderBy("ship_month", "l_returnflag"))
     } finally {
       graft.util.Fs.syncRecursively(storeDir)
-      deleteRecursively(storeDir)
+      graft.util.Fs.deleteRecursively(storeDir)
     }
   }
 
@@ -825,9 +651,9 @@ object StreamQueries {
       finally graft.plans.MvRegistry.unregister(marker)
     } finally {
       graft.util.Fs.syncRecursively(store)
-      deleteRecursively(store)
+      graft.util.Fs.deleteRecursively(store)
       graft.util.Fs.syncRecursively(epochs)
-      deleteRecursively(epochs)
+      graft.util.Fs.deleteRecursively(epochs)
     }
   }
 
@@ -877,48 +703,32 @@ object StreamQueries {
         when(pmod(col("doc_id"), lit(7L)) === 0L, "delete").otherwise("upsert")
           .as("op"),
         concat(col("text"), lit(" v3")).as("new_text"), lit(3L).as("new_version"))
-    val (watch, stage) = stageFrames(Seq(b1, b2, b3), "cdc")
-    val schema = StructType(Seq(
-      StructField("doc_id", org.apache.spark.sql.types.LongType),
-      StructField("op", StringType),
-      StructField("new_text", StringType),
-      StructField("new_version", org.apache.spark.sql.types.LongType)))
+    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "cdc")
     val storeDir = Files.createTempDirectory("graft-cdc-store")
     val ckptDir = Files.createTempDirectory("graft-cdc-ckpt")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val q =
-      try {
-        spark.conf.set(key, "8")
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-          .writeStream
-          .option("checkpointLocation", ckptDir.toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val s = batch.sparkSession
-            val prevState =
-              if (batchId == 0L) {
-                import s.implicits._
-                Seq.empty[(Long, String, Long)]
-                  .toDF("doc_id", "text", "version")
-              } else s.read.parquet(
-                graft.plans.StatsStore.artifactPath(s, storeDir.toString,
-                    f"state-${batchId - 1}%03d")
-                  .getOrElse(throw new IllegalStateException(
-                    s"cdc store missing state-${batchId - 1}")))
-            graft.plans.StatsStore.publishNamed(
-              applyCdcOps(prevState, batch), storeDir.toString,
-              f"state-$batchId%03d")
-          }
-          .start()
-      } finally spark.conf.set(key, prev)
-    try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    Seq(watch, stage, ckptDir).foreach(deleteRecursively)
     // final state = the MAX-numbered `state-N` artifact actually in
     // the store — not a literal batch id, so a change to staging
     // granularity (more/fewer micro-batches) can never read a stale
-    // epoch.  Bounded result: localize, then delete the store eagerly.
+    // epoch.  Bounded result: localize, then delete the store eagerly
+    // (on a failed stream too).
     try {
+      StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
+        StreamRunner.foreachBatch(staged.read(spark), ckptDir.toString) { (batch, batchId) =>
+          val s = batch.sparkSession
+          val prevState =
+            if (batchId == 0L) {
+              import s.implicits._
+              Seq.empty[(Long, String, Long)]
+                .toDF("doc_id", "text", "version")
+            } else s.read.parquet(
+              graft.plans.StatsStore.artifactPath(s, storeDir.toString,
+                  f"state-${batchId - 1}%03d")
+                .getOrElse(throw new IllegalStateException(
+                  s"cdc store missing state-${batchId - 1}")))
+          graft.plans.StatsStore.publishNamed(
+            applyCdcOps(prevState, batch), storeDir.toString,
+            f"state-$batchId%03d")
+        })
       // NUMERIC max over the RESOLVED serving dirs — "state-1000"
       // sorts before "state-999" as a string, which would hand back a
       // stale epoch once batch ids outgrow the %03d padding
@@ -935,7 +745,7 @@ object StreamQueries {
           .orderBy("doc_id"))
     } finally {
       graft.util.Fs.syncRecursively(storeDir)
-      deleteRecursively(storeDir)
+      graft.util.Fs.deleteRecursively(storeDir)
     }
   }
 
@@ -981,28 +791,17 @@ object StreamQueries {
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val cut1 = (maxId + 1) * 3 / 5
     val cut0 = cut1 / 2
-    val (watch, stage) = stageBatches(docs,
-      Seq(col("doc_id") < cut1, col("doc_id") >= cut0), "hll",
-      dropAfterFilter = Seq("doc_id"))
-    val schema = StructType(Seq(StructField("text", StringType)))
+    val staged = StreamRunner.stageSlices(
+      Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
+        .map(docs.filter(_).drop("doc_id")), "hll")
     val storeDir = Files.createTempDirectory("graft-hll-store")
     val ckptDir = Files.createTempDirectory("graft-hll-ckpt")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val q =
-      try {
-        spark.conf.set(key, "8")
-        DocStream.hllMaintain(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(watch.toString),
-          storeDir.toString, ckptDir.toString)
-      } finally spark.conf.set(key, prev)
-    try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    Seq(watch, stage, ckptDir).foreach(deleteRecursively)
     // bounded result (64 registers): localize and delete the store
     // eagerly — the mvRewrite rule — instead of deferring a
     // per-invocation directory to JVM exit
     try {
+      StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
+        DocStream.hllMaintain(staged.read(spark), storeDir.toString, ckptDir.toString))
       val streamRegs = DocStream.readHllRegisters(spark, storeDir.toString)
         .withColumnRenamed("m", "m_stream")
       val direct = graft.operators.PipelineAudits.hllRegisterTable(
@@ -1020,7 +819,7 @@ object StreamQueries {
           .orderBy("register"))
     } finally {
       graft.util.Fs.syncRecursively(storeDir)
-      deleteRecursively(storeDir)
+      graft.util.Fs.deleteRecursively(storeDir)
     }
   }
 }

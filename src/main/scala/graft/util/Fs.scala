@@ -72,7 +72,7 @@ object Fs {
     * local relation, so temp inputs can be deleted eagerly — returning
     * a lazy plan over files about to be unlinked would read after
     * delete on re-execution.  Same rationale as the streaming memory
-    * sink (StreamQueries.runToTable); callers document why their
+    * sink (StreamRunner.toTable); callers document why their
     * result is bounded.
     */
   def localize(spark: SparkSession, df: DataFrame): DataFrame = {

@@ -81,13 +81,14 @@ object Pins {
     */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    // per-call CBO registrations (q356/q357/q360: ~16 KB bloom
-    // bitmaps + reorder decisions under UUID names) are spent once
+    // per-call optimizer registrations (q356/q357/q360: ~16 KB bloom
+    // bitmaps, reorder decisions and MV rewrites under UUID names) are spent once
     // their query has materialized — the same between-queries point
     // this runs at; dropping them keeps suite runs (Verify: whole
     // registry, Bench: queries × reps) from accumulating entries the
     // bounded-LRU backstop would otherwise carry for 64 generations
     graft.plans.BloomRegistry.clear()
     graft.plans.JoinOrderRegistry.clear()
+    graft.plans.MvRegistry.clear()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamQueries
+import graft.streaming.{StreamQueries, StreamRunner}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
   * staging), that each staged file rides exactly one micro-batch
   * (maxFilesPerTrigger=1 actually honored under AvailableNow), and
   * that the state-partition sizing documented at
-  * StreamQueries.runToTable is the partition count the state store
+  * StreamRunner.statePartitions is the partition count the state store
   * actually applied.  A regression that, e.g., collapsed the staged
   * files into one batch (making the cross-batch dedup vacuous) or
   * silently planned 32 near-empty state stores would pass the value
@@ -31,6 +31,15 @@ class StreamProgressSpec extends SparkSuite {
     var progs: Seq[StreamingQueryProgress] = Nil
     val df = run(q => progs = q.recentProgress.toSeq)
     (df.count(), progs)
+  }
+
+  /** Drain a query started through StreamRunner (state partitions
+    * pinned, run to completion) and return its recent progress.
+    */
+  private def drained(q: => StreamingQuery): Seq[StreamingQueryProgress] = {
+    var progs: Seq[StreamingQueryProgress] = Nil
+    StreamRunner.drain(done => progs = done.recentProgress.toSeq)(q)
+    progs
   }
 
   /** Micro-batches that actually consumed input, in batch order. */
@@ -56,7 +65,7 @@ class StreamProgressSpec extends SparkSuite {
     assert(ops.length == 1, s"exactly one stateful operator, got ${ops.map(_.operatorName)}")
     assert(ops.head.operatorName.contains("stateStoreSave"), ops.head.operatorName)
     assert(ops.head.numShufflePartitions == 8,
-      s"state-partition sizing (runToTable statePartitions=8) must reach the store, got ${ops.head.numShufflePartitions}")
+      s"state-partition sizing (StreamRunner.statePartitions=8) must reach the store, got ${ops.head.numShufflePartitions}")
     assert(ops.head.numRowsTotal == rows,
       s"state holds exactly the emitted (window,type) groups: state=${ops.head.numRowsTotal} rows=$rows")
   }
@@ -122,6 +131,17 @@ class StreamProgressSpec extends SparkSuite {
       "ingest keeps its dedup in the fp store, not the streaming state store")
   }
 
+  test("q230 ingest pipeline: a call leaves no sink output dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def outDirs(): Set[String] =
+      Option(tmp.list()).map(_.toSet).getOrElse(Set.empty)
+        .filter(_.startsWith("graft-ingest-out"))
+    val before = outDirs()
+    assert(StreamQueries.ingestAudit(spark, sf).collect().nonEmpty)
+    val leaked = outDirs() -- before
+    assert(leaked.isEmpty, s"ingestAudit left its sink output behind: $leaked")
+  }
+
   test("q278 stream-static join: ZERO join state — only the aggregate's state operator exists") {
     val (rows, progs) = capture(StreamQueries.staticEnriched(spark, sf, _))
     assert(rows > 0)
@@ -181,6 +201,7 @@ class StreamProgressSpec extends SparkSuite {
     val (_, progs) = capture(StreamQueries.lateDataAudit(spark, sf, _))
     val db = dataBatches(progs)
     assert(db.length == 3, "each mod-3 file rides its own micro-batch")
+    assert(finalState(progs).head.numShufflePartitions == 8)
     def dropped(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
       p.stateOperators.map(_.numRowsDroppedByWatermark).sum
     // batches 1-2 run with late-event watermarks 0 (eviction lags by
@@ -286,6 +307,7 @@ class StreamProgressSpec extends SparkSuite {
     val ops = finalState(progs)
     assert(ops.length == 1 && ops.head.operatorName.toLowerCase.contains("dedupe"),
       s"the TTL dedup is the only stateful operator, got ${ops.map(_.operatorName)}")
+    assert(ops.head.numShufflePartitions == 8)
     val st = batches.map(_.stateOperators.head)
     assert(st(0).numRowsUpdated == nB1, "b1 admits everything")
     assert(st(1).numRowsUpdated == nB2New,
@@ -319,6 +341,7 @@ class StreamProgressSpec extends SparkSuite {
     assert(ops.length == 1 &&
       ops.head.operatorName.toLowerCase.contains("join"),
       s"exactly the symmetric-hash-join operator, got ${ops.map(_.operatorName)}")
+    assert(ops.head.numShufflePartitions == 8)
     val rows = StreamQueries.leftJoinedPairs(spark, sf).collect()
     val nulls = rows.filter(_.isNullAt(2))
     val inner = rows.filter(!_.isNullAt(2))
@@ -364,23 +387,16 @@ class StreamProgressSpec extends SparkSuite {
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t))
     }
-    def run(): Seq[StreamingQueryProgress] = {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q = try {
-        spark.conf.set(key, "8")
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .select(col("event_id"), unix_micros(col("ts")).as("us"))
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-      } finally spark.conf.set(key, prev)
-      try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
-    }
+    def run(): Seq[StreamingQueryProgress] = drained(StreamRunner.start(
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(watch.toString)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+        .select(col("event_id"), unix_micros(col("ts")).as("us")))(
+      _.format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append")))
     try {
       drop(b1, "a", 1700000000000L)
       drop(b2, "b", 1700000001000L)
@@ -460,28 +476,19 @@ class StreamProgressSpec extends SparkSuite {
     // batches 2 and 3" means; the extra idle eviction is just the TTL
     // horizon advancing, not a recovery defect.
     def run(): Seq[StreamingQueryProgress] = {
-      val key = "spark.sql.shuffle.partitions"
       val nd = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = spark.conf.get(key)
       val prevNd = spark.conf.get(nd)
       try {
-        spark.conf.set(key, "8")
         spark.conf.set(nd, "false")
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-          .withWatermark("ts", "60 seconds")
-          .dropDuplicatesWithinWatermark("id")
-          .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit"))
-          .writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val pinned = batch.persist()
-            try { if (!pinned.isEmpty) { sink.writeBatch(pinned, batchId); () } }
-            finally { pinned.unpersist(); () }
-          }
-          .start()
-        try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
-      } finally { spark.conf.set(key, prev); spark.conf.set(nd, prevNd) }
+        drained(StreamRunner.foreachBatch(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(watch.toString)
+            .withWatermark("ts", "60 seconds")
+            .dropDuplicatesWithinWatermark("id")
+            .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit")),
+          ckpt.toString)(
+          StreamRunner.eachNonEmpty { (batch, batchId) => sink.writeBatch(batch, batchId); () }))
+      } finally spark.conf.set(nd, prevNd)
     }
     try {
       drop(staged(col("doc_id") < cut1, origTs), "a", 1700000000000L)
@@ -542,18 +549,11 @@ class StreamProgressSpec extends SparkSuite {
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t))
     }
-    def run(): Seq[StreamingQueryProgress] = {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q = try {
-        spark.conf.set(key, "8")
-        graft.streaming.DocStream.hllMaintain(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(watch.toString),
-          storeDir.toString, ckpt.toString)
-      } finally spark.conf.set(key, prev)
-      try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
-    }
+    def run(): Seq[StreamingQueryProgress] = drained(
+      graft.streaming.DocStream.hllMaintain(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(watch.toString),
+        storeDir.toString, ckpt.toString))
     try {
       drop(col("doc_id") < cut1, "a", 1700000000000L)
       val p1 = run()
@@ -604,20 +604,13 @@ class StreamProgressSpec extends SparkSuite {
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t))
     }
-    def run(): Seq[StreamingQueryProgress] = {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q = try {
-        spark.conf.set(key, "8")
-        graft.streaming.DocStream.dedupIngest(
-          spark.readStream.schema(docSchema)
-            .option("maxFilesPerTrigger", "1").parquet(watch.toString),
-          storeDir.toString,
-          new graft.sinks.NdjsonDirSink(out.toString, chunkSize = 100),
-          ckpt.toString)
-      } finally spark.conf.set(key, prev)
-      try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
-    }
+    def run(): Seq[StreamingQueryProgress] = drained(
+      graft.streaming.DocStream.dedupIngest(
+        spark.readStream.schema(docSchema)
+          .option("maxFilesPerTrigger", "1").parquet(watch.toString),
+        storeDir.toString,
+        new graft.sinks.NdjsonDirSink(out.toString, chunkSize = 100),
+        ckpt.toString))
     try {
       val nA = docs.filter(col("doc_id") < cut1).count()
       val nB = docs.filter(col("doc_id") >= cut0).count()
@@ -685,19 +678,14 @@ class StreamProgressSpec extends SparkSuite {
             (user, n, u)
         }
         .toDF("user_id", "n_events", "value_units")
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q = try {
-        spark.conf.set(key, "8")
-        updated.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.collect().foreach(r =>
-              emitted(r.getLong(0)) = (r.getLong(1), r.getLong(2)))
-            ()
-          }.start()
-      } finally spark.conf.set(key, prev)
-      try q.processAllAvailable() finally q.stop()
+      drained(StreamRunner.start(updated)(_.outputMode("update")
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(r =>
+            emitted(r.getLong(0)) = (r.getLong(1), r.getLong(2)))
+          ()
+        }))
+      ()
     }
     try {
       drop(col("us") < cutUs, "a", 1700000000000L)
@@ -748,22 +736,13 @@ class StreamProgressSpec extends SparkSuite {
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t))
     }
-    def run(): Int = {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val q = try {
-        spark.conf.set(key, "8")
+    def run(): Int = dataBatches(drained(StreamRunner.foreachBatch(
         spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-          .writeStream.option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            graft.plans.MvStore.publishEpoch(
-              graft.plans.MvStore.epochPartials(batch), store.toString, id)
-          }.start()
-      } finally spark.conf.set(key, prev)
-      try { q.processAllAvailable(); dataBatches(q.recentProgress.toSeq).length }
-      finally q.stop()
-    }
+          .option("maxFilesPerTrigger", "1").parquet(watch.toString),
+        ckpt.toString) { (batch, id) =>
+      graft.plans.MvStore.publishEpoch(
+        graft.plans.MvStore.epochPartials(batch), store.toString, id)
+    })).length
     // keys are BASE epoch names — the versioned publish (r22) serves
     // epoch-NNN-v{K}; an un-re-published epoch keeps its v1 dir and
     // mtime, so the untouched-on-restart assertion is unchanged

@@ -177,33 +177,14 @@ class StreamingSpec extends SparkSuite {
     // simulate a crash mid-commit of batch 1: fps landed in the hidden
     // tmp dir but the publish rename never ran
     val b1 = df(Seq(("3", "3", "own", "epsilon zeta"), ("4", "4", "own", "eta theta")))
-    Seq("deadbeef").toDF("fp").write.parquet(store + "/.tmp-batch-1")
+    Seq("deadbeef").toDF("fp").write.parquet(store + "/.tmp-batch=1")
     // replay: the store shows NONE of batch 1's fps (hidden dir is
     // ignored), so the whole batch is recomputed and republished —
     // no silent partial drop
     assert(graft.streaming.DocStream.processBatch(b1, store, sink, 1) == 2)
     val committed = new java.io.File(store).listFiles().map(_.getName)
       .filterNot(_.startsWith(".")).filterNot(_.startsWith("_")).toSeq
-    assert(committed.sorted == Seq("batch=0", "batch=1"), committed)
-  }
-
-  test("dedup-ingest: a legacy flat-file fp store is read alongside batch= commits") {
-    import java.nio.file.Files
-    val out = Files.createTempDirectory("graft-ingest-legacy")
-    val sink = new graft.sinks.NdjsonDirSink(out.toString + "/docs", chunkSize = 10)
-    val store = out.toString + "/fps"
-    def df(rows: Seq[(String, String, String, String)]) =
-      rows.toDF("id", "txn_id", "owner", "content")
-    // a pre-rename-publish store: fingerprints appended as flat parquet
-    val legacyFp = graft.functions.TextFunctions.fingerprint(lit("alpha beta"))
-    spark.range(1).select(legacyFp.as("fp")).write.parquet(store)
-    // batch 0 repeats the legacy content + adds one new doc: the flat
-    // files must count as corpus, so only the new doc is fresh
-    val b0 = df(Seq(("1", "1", "own", "alpha beta"), ("2", "2", "own", "gamma delta")))
-    assert(graft.streaming.DocStream.processBatch(b0, store, sink, 0) == 1)
-    // and the mixed flat + batch=0 layout reads back fine on the next batch
-    val b1 = df(Seq(("3", "3", "own", "gamma delta"), ("4", "4", "own", "epsilon zeta")))
-    assert(graft.streaming.DocStream.processBatch(b1, store, sink, 1) == 1)
+    assert(committed.sorted == Seq("batch=0-v1", "batch=1-v1"), committed)
   }
 
   test("foreachBatch bridges the stream into the batch DocSink across batches") {
@@ -233,6 +214,10 @@ class StreamingSpec extends SparkSuite {
       assert(files.forall(f => scala.io.Source.fromFile(f).getLines().size <= 10))
       // checkpoint advanced monotonically across batches (max id "9")
       assert(sink.checkpoint().contains("9"))
+      // each micro-batch is read from the source once: the empty probe,
+      // the sink's range-sampling pass and the write share one pin
+      val read = q.recentProgress.map(_.numInputRows).sum
+      assert(read == 40L, s"the source must be read once per batch: $read rows read for 40 added")
     } finally q.stop()
   }
 }

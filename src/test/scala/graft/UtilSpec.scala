@@ -201,6 +201,29 @@ class UtilSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"raw localCheckpoint(true) outside Pins.eager: $offenders")
   }
+
+  test("streaming source gate: the state-partition pin and the micro-batch pin are written once") {
+    // StreamRunner.start pins spark.sql.shuffle.partitions (the state
+    // store's partition count) and StreamRunner.nonEmpty pins each
+    // multi-read batch; a driver that sets either by hand can forget
+    // the pin, so each may appear in one place only
+    import scala.jdk.CollectionConverters._
+    val srcs = scala.util.Using.resource(
+        Files.list(java.nio.file.Paths.get("src/main/scala/graft/streaming"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    def sites(needle: String): List[String] = srcs.flatMap { case (f, src) =>
+      src.split("\n").toList.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => s"$f:${i + 1}"
+      }
+    }
+    val confSites = sites("\"spark.sql.shuffle.partitions\"")
+    assert(confSites.length == 1 && confSites.head.startsWith("StreamRunner.scala"),
+      s"the state-partition conf is set in StreamRunner.start only: $confSites")
+    val pinSites = sites(".persist(")
+    assert(pinSites.length == 1 && pinSites.head.startsWith("StreamRunner.scala"),
+      s"micro-batch frames are pinned by StreamRunner.nonEmpty only: $pinSites")
+  }
 }
 
 /** Pins.eager must materialize BEFORE returning — the whole point of
