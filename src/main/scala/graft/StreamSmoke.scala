@@ -32,16 +32,17 @@ object StreamSmoke {
     q.stop()
 
     // dedup-on-ingest path: two batches with overlapping content
-    val out = java.nio.file.Files.createTempDirectory("graft-smoke-ingest")
-    val sink = new graft.sinks.NdjsonDirSink(s"$out/docs", chunkSize = 10)
     def doc(id: Int, content: String) = (id.toString, id.toString, "own", content)
     val b0 = Seq(doc(1, "alpha beta"), doc(2, "alpha beta"), doc(3, "gamma"))
       .toDF("id", "txn_id", "owner", "content")
     val b1 = Seq(doc(4, "gamma"), doc(5, "delta"))
       .toDF("id", "txn_id", "owner", "content")
-    val w0 = graft.streaming.DocStream.processBatch(b0, s"$out/fps", sink, 0)
-    val w1 = graft.streaming.DocStream.processBatch(b1, s"$out/fps", sink, 1)
-    println(s"STREAM_INGEST batch0=$w0 batch1=$w1") // expect 2 and 1
+    graft.util.Fs.withTempDir("smoke-ingest") { out =>
+      val sink = new graft.sinks.NdjsonDirSink(s"$out/docs", chunkSize = 10)
+      val w0 = graft.streaming.DocStream.processBatch(b0, s"$out/fps", sink, 0)
+      val w1 = graft.streaming.DocStream.processBatch(b1, s"$out/fps", sink, 1)
+      println(s"STREAM_INGEST batch0=$w0 batch1=$w1") // expect 2 and 1
+    }
 
     spark.stop()
   }

@@ -84,8 +84,8 @@ object Bucketing {
   def colocatedRevenue(spark: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
     // per-invocation table names: fixed globals would let a concurrent
     // caller's finally-block drop the tables mid-join
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val (liT, ordT) = (s"graft_li_q237_$suffix", s"graft_ord_q237_$suffix")
+    val (liT, ordT) = (graft.util.UniqueName("graft_li_q237_"),
+      graft.util.UniqueName("graft_ord_q237_"))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {

@@ -1841,15 +1841,12 @@ object PipelineAudits {
     * join.  The read-back scan prunes to the three written columns.
     */
   def shardWrite(spark: SparkSession, dir: String,
-      shardTokens: Long = 20000L): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shard-write")
-    val out = shardWriteTo(spark, dir, tmp.toString, shardTokens)
-    // the rollup is |shards|-row bounded; localize so the temp dir
-    // can be deleted NOW instead of leaking past the lazy read
-    val local = graft.util.Fs.localize(spark, out)
-    graft.util.Fs.deleteRecursively(tmp)
-    local
-  }
+      shardTokens: Long = 20000L): DataFrame =
+    // the rollup is |shards|-row bounded; localize so the bracket can
+    // delete the written shards instead of leaking them past the lazy read
+    graft.util.Fs.withTempDir("shard") { tmp =>
+      graft.util.Fs.localize(spark, shardWriteTo(spark, dir, tmp.toString, shardTokens))
+    }
 
   /** The write → read-back → gate body, split out so the spec can
     * inspect the on-disk layout (one data file per shard directory)

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.MvRegistry
+import graft.util.{Fs, UniqueName}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -2113,8 +2115,7 @@ object Relational {
     */
   def bloomPrefilteredJoin(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.RegisterFunctions(spark) // graft_bloom_agg on pre-built sessions
-    val probeName = "gbp_custkey_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val probeName = UniqueName("gbp_custkey_")
     val build = Tables.customer(spark, dir)
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
@@ -2374,8 +2375,7 @@ object Relational {
     * lifecycle as q356's bloom.
     */
   def joinOrderEnforced(spark: SparkSession, dir: String): DataFrame = {
-    val marker = "gjo_custkey_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val marker = UniqueName("gjo_custkey_")
     val cB = Tables.customer(spark, dir)
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
     val o = Tables.orders(spark, dir).select(
@@ -2433,32 +2433,29 @@ object Relational {
     * same way the reference's `startId` resume does (README.md:80-88).
     */
   def cboPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files.createTempDirectory("graft-stats-store")
-    try {
+    val probeName = UniqueName("gbp_store_custkey_")
+    // the artifacts are consumed EAGERLY (driver-side head) during
+    // registration — nothing lazy references the store, so the
+    // bracket can delete it when registration is done
+    Fs.withTempDir("stats") { store =>
       graft.plans.StatsStore.publish(spark, dir, store.toString)
-      val probeName = "gbp_store_custkey_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       // the consumer path: registration material comes from the
       // artifact alone (driver-side 1-row read)
       require(graft.plans.StatsStore.registerBloomFromStore(
         spark, store.toString, probeName), "bloom artifact present")
-      val build = Tables.customer(spark, dir)
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val o = Tables.orders(spark, dir).select(
-        col("o_custkey").as(probeName), col("o_orderpriority"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long")
-          .as("price_cents"))
-      o.join(build, col(probeName) === col("c_custkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"),
-          max(col("price_cents")).as("max_cents"))
-        .orderBy("o_orderpriority")
-    } finally
-      // the artifacts were consumed EAGERLY (driver-side head) during
-      // registration — nothing lazy references the store, so the temp
-      // dir can go now; a crash before this leaves only a temp dir
-      graft.util.Fs.deleteRecursively(store)
+    }
+    val build = Tables.customer(spark, dir)
+      .filter(col("c_mktsegment") === "BUILDING")
+      .select(col("c_custkey"))
+    val o = Tables.orders(spark, dir).select(
+      col("o_custkey").as(probeName), col("o_orderpriority"),
+      floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long")
+        .as("price_cents"))
+    o.join(build, col(probeName) === col("c_custkey"))
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n_orders"),
+        max(col("price_cents")).as("max_cents"))
+      .orderBy("o_orderpriority")
   }
 
   /** Histogram-from-store estimator (q364): the persisted-lifecycle
@@ -2484,25 +2481,23 @@ object Relational {
     */
   def histPersisted(spark: SparkSession, dir: String,
       k: Int = 16): DataFrame = {
-    val store = java.nio.file.Files.createTempDirectory("graft-hist-store")
-    try {
+    // the artifact is 16 rows — pull it off disk inside the bracket
+    // (bounded-frame materialization) so the store deletes eagerly
+    val local = Fs.withTempDir("hist") { store =>
       graft.plans.StatsStore.publishHistogram(spark, dir, store.toString, k)
-      val hist = graft.plans.StatsStore.readHistogram(spark, store.toString)
-        .getOrElse(sys.error("histogram artifact present"))
-      // the artifact is 16 rows — pull it off disk NOW (bounded-frame
-      // materialization) so the temp store can be deleted eagerly
-      val local = graft.util.Fs.localize(spark, hist)
-      val est = histEstimates(local, pinnedPreds(spark))
-      val cents = Tables.lineitem(spark, dir)
-        .select(floor(col("l_extendedprice") * lit(100.0) + lit(0.5))
-          .cast("long").as("v"))
-      est.join(predActuals(cents, pinnedPreds(spark)), Seq("pred_id"), "left")
-        .na.fill(0L, Seq("actual_rows"))
-        .select(col("pred_id"), col("p_lo").as("lo_cents"),
-          col("p_hi").as("hi_cents"), col("est_rows"), col("actual_rows"),
-          abs(col("est_rows") - col("actual_rows").cast("double")).as("abs_err"))
-        .orderBy("pred_id")
-    } finally graft.util.Fs.deleteRecursively(store)
+      Fs.localize(spark, graft.plans.StatsStore.readHistogram(spark, store.toString)
+        .getOrElse(sys.error("histogram artifact present")))
+    }
+    val est = histEstimates(local, pinnedPreds(spark))
+    val cents = Tables.lineitem(spark, dir)
+      .select(floor(col("l_extendedprice") * lit(100.0) + lit(0.5))
+        .cast("long").as("v"))
+    est.join(predActuals(cents, pinnedPreds(spark)), Seq("pred_id"), "left")
+      .na.fill(0L, Seq("actual_rows"))
+      .select(col("pred_id"), col("p_lo").as("lo_cents"),
+        col("p_hi").as("hi_cents"), col("est_rows"), col("actual_rows"),
+        abs(col("est_rows") - col("actual_rows").cast("double")).as("abs_err"))
+      .orderBy("pred_id")
   }
 
   def equiDepthHist(spark: SparkSession, dir: String, k: Int = 16): DataFrame =
@@ -2572,21 +2567,14 @@ object Relational {
     * frame — so it is localized before the temp store deletes
     * (Fs.localize; the store is gone by the time this returns).
     */
-  def mvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files.createTempDirectory("graft-mv-store")
-    try {
+  def mvRewrite(spark: SparkSession, dir: String): DataFrame =
+    Fs.withTempDir("mv") { store =>
       graft.plans.MvStore.publish(spark, dir, store.toString)
-      val marker = "gmv_rev_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      graft.plans.MvStore.registerRollup(spark, dir, store.toString, marker)
-      try graft.util.Fs.localize(spark,
-        graft.plans.MvStore.baseConsumer(spark, dir, marker))
-      finally graft.plans.MvRegistry.unregister(marker)
-    } finally {
-      graft.util.Fs.syncRecursively(store)
-      graft.util.Fs.deleteRecursively(store)
+      val marker = UniqueName("gmv_rev_")
+      MvRegistry.registered(marker)(
+        graft.plans.MvStore.registerRollup(spark, dir, store.toString, marker))(
+        Fs.localize(spark, graft.plans.MvStore.baseConsumer(spark, dir, marker)))
     }
-  }
 
   /** Filter-COMPENSATED MV rewrite (q378): the q368 consumer with a
     * compound predicate over BOTH grouping columns composed on top — a
@@ -2617,23 +2605,16 @@ object Relational {
     * artifact; predicates that touch measures fall back to the base
     * table rather than returning wrong rows.
     */
-  def mvRewriteFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files.createTempDirectory("graft-mvf-store")
-    try {
+  def mvRewriteFiltered(spark: SparkSession, dir: String): DataFrame =
+    Fs.withTempDir("mvf") { store =>
       graft.plans.MvStore.publish(spark, dir, store.toString)
-      val marker = "gmv_cf_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      graft.plans.MvStore.registerRollup(spark, dir, store.toString, marker)
-      try graft.util.Fs.localize(spark,
-        graft.plans.MvStore.baseConsumer(spark, dir, marker)
+      val marker = UniqueName("gmv_cf_")
+      MvRegistry.registered(marker)(
+        graft.plans.MvStore.registerRollup(spark, dir, store.toString, marker))(
+        Fs.localize(spark, graft.plans.MvStore.baseConsumer(spark, dir, marker)
           .filter(col("ship_month").between("1994-01", "1996-12") &&
-            col("l_returnflag") =!= "N"))
-      finally graft.plans.MvRegistry.unregister(marker)
-    } finally {
-      graft.util.Fs.syncRecursively(store)
-      graft.util.Fs.deleteRecursively(store)
+            col("l_returnflag") =!= "N")))
     }
-  }
 
   /** Dimension-DROPPING MV derivability (q379): a flag-only total —
     * the month dimension eliminated entirely — answered from the SAME
@@ -2658,28 +2639,18 @@ object Relational {
     * the KB-sized artifact; the fact table is opened exactly once, at
     * publish time.
     */
-  def mvRewriteDimDrop(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files.createTempDirectory("graft-mvd-store")
-    try {
+  def mvRewriteDimDrop(spark: SparkSession, dir: String): DataFrame =
+    Fs.withTempDir("mvd") { store =>
       graft.plans.MvStore.publish(spark, dir, store.toString)
-      val mMonth = "gmv_dd_m_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val mFlag = "gmv_dd_f_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      graft.plans.MvStore.registerRollup(spark, dir, store.toString, mMonth)
-      try {
-        graft.plans.MvStore.registerFlagRollup(spark, dir, store.toString,
-          mFlag)
-        try graft.util.Fs.localize(spark,
-          graft.plans.MvStore.flagConsumer(spark, dir, mFlag)
-            .filter(col("l_returnflag") =!= "N"))
-        finally graft.plans.MvRegistry.unregister(mFlag)
-      } finally graft.plans.MvRegistry.unregister(mMonth)
-    } finally {
-      graft.util.Fs.syncRecursively(store)
-      graft.util.Fs.deleteRecursively(store)
+      val (mMonth, mFlag) = (UniqueName("gmv_dd_m_"), UniqueName("gmv_dd_f_"))
+      MvRegistry.registered(mMonth)(
+        graft.plans.MvStore.registerRollup(spark, dir, store.toString, mMonth)) {
+        MvRegistry.registered(mFlag)(
+          graft.plans.MvStore.registerFlagRollup(spark, dir, store.toString, mFlag))(
+          Fs.localize(spark, graft.plans.MvStore.flagConsumer(spark, dir, mFlag)
+            .filter(col("l_returnflag") =!= "N")))
+      }
     }
-  }
 
   /** Join-consistent (coordinated) sampling audit (q373): sample two
     * fact tables INDEPENDENTLY by the same deterministic hash of the

@@ -25,6 +25,14 @@ class BoundedRegistry[V](maxEntries: Int) {
     entries.remove(attrName); ()
   }
 
+  /** The registration bracket: run `register` (which registers
+    * `attrName`), then `body`, then unregister `attrName` whether either
+    * returned or threw.  For a `body` that runs its consumer plan before
+    * returning; a lazily returned frame needs its entry after the call.
+    */
+  def registered[T](attrName: String)(register: => Unit)(body: => T): T =
+    try { register; body } finally unregister(attrName)
+
   def lookup(attrName: String): Option[V] = Option(entries.get(attrName))
 
   def isEmpty: Boolean = entries.isEmpty

@@ -61,7 +61,7 @@ private[sinks] object IdOrder {
     */
   def apply(df: DataFrame)(deliver: DataFrame => Unit): (Long, Option[String]) = {
     require(df.columns.contains("id"), "DocSink frames carry an id column")
-    val obs = Observation("graft-sink-" + java.util.UUID.randomUUID)
+    val obs = Observation(graft.util.UniqueName("graft-sink-"))
     deliver(df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, col("id"))
       .sortWithinPartitions("id")
       .observe(obs, count(lit(1)).as("n"), max(col("id")).as("m")))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.util.Fs.{localize, syncRecursively, tempDirUntilExit, withTempDir}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,13 +21,15 @@ import org.apache.spark.sql.types._
   * result — so the DuckDB oracle on the original parquet certifies the
   * WHOLE write→read→scan path value-exact, not just "a file appeared".
   *
-  * Materialization: each query collects its final aggregate (≤ a few
-  * dozen rows by construction — group-by on low-cardinality keys) into
-  * a local relation before deleting the temp dir.  Returning a lazy
-  * plan over files we are about to delete would read after unlink on
+  * Materialization: each round-trip runs inside one
+  * [[graft.util.Fs.withTempDir]] bracket and localizes its final
+  * aggregate (≤ a few dozen rows by construction — group-by on
+  * low-cardinality keys) inside it, so the bracket can fsync and
+  * delete the written files when the call returns.  Returning a lazy
+  * plan over files about to be deleted would read after unlink on
   * re-execution; the bounded collect is the same pattern as the memory
   * sink in the streaming tier (StreamRunner.toTable).  Bench reps
-  * therefore pay the full write+read each rep and leak nothing.
+  * therefore pay the full write+read+flush each rep and leak nothing.
   *
   * 100 TB notes per operator sit on the methods; plan shapes (ORC
   * pushdown, CSV schema projection, partition-directory pruning) are
@@ -42,31 +45,6 @@ object FormatOps {
     */
   private def valueUnits(c: org.apache.spark.sql.Column) =
     sum(floor(c * lit(1.0e6) + lit(0.5)).cast(LongType)).cast(LongType)
-
-  private def tempDir(tag: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(s"graft-fmt-$tag")
-
-  /** Bounded-aggregate materialization (graft.util.Fs.localize — see
-    * object doc for why the temp dir must delete eagerly).
-    */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame =
-    graft.util.Fs.localize(spark, df)
-
-  /** Temp-dir bracket for the round-trip reps.  The `finally` runs
-    * INSIDE the caller's timed region and does two things in order:
-    * fsync every written file, then delete.  The flush is the r15
-    * bench-hygiene fix — without it each rep's dirty pages are written
-    * back during the NEXT rep (rep arrays that slow down, 1.93→4.42 s
-    * for q231), so min-of-reps tracked disk state instead of plan
-    * cost.  Flushing inside the rep makes every rep self-contained.
-    */
-  private def withTempDir(tag: String)(body: java.nio.file.Path => DataFrame): DataFrame = {
-    val tmp = tempDir(tag)
-    try body(tmp) finally {
-      graft.util.Fs.syncRecursively(tmp)
-      graft.util.Fs.deleteRecursively(tmp)
-    }
-  }
 
   // ---------------------------------------------------------------- ORC
 
@@ -104,9 +82,9 @@ object FormatOps {
     * involved (string, double, timestamp).
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    withTempDir("orc") { tmp =>
+    withTempDir("fmt-orc") { tmp =>
       writeOrcLineitem(spark, dir, tmp.toString)
-      materialize(spark, orcReadAgg(spark, tmp.toString))
+      localize(spark, orcReadAgg(spark, tmp.toString))
     }
 
   // ---------------------------------------------------------------- CSV
@@ -160,9 +138,9 @@ object FormatOps {
     * round-trip (long, string, decimal, date) exact.
     */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    withTempDir("csv") { tmp =>
+    withTempDir("fmt-csv") { tmp =>
       writeCsvOrders(spark, dir, tmp.toString)
-      materialize(spark, csvReadAgg(spark, tmp.toString))
+      localize(spark, csvReadAgg(spark, tmp.toString))
     }
 
   // ------------------------------------------------- partitioned layout
@@ -205,9 +183,9 @@ object FormatOps {
     * across the day boundaries) and the pruned read.
     */
   def partitionPrune(spark: SparkSession, dir: String): DataFrame =
-    withTempDir("part") { tmp =>
+    withTempDir("fmt-part") { tmp =>
       writePartitionedEvents(spark, dir, tmp.toString)
-      materialize(spark, partitionedReadAgg(spark, tmp.toString))
+      localize(spark, partitionedReadAgg(spark, tmp.toString))
     }
 
   /** The day-selecting dim side for q366: per-day quantized value
@@ -285,12 +263,9 @@ object FormatOps {
     val cell = dppFixtures.synchronized {
       dppFixtures.getOrElseUpdate(dir, {
         lazy val built: String = {
-          val tmp = tempDir("dppfix")
+          val tmp = tempDirUntilExit("fmt-dppfix")
           writePartitionedEvents(spark, dir, tmp.toString)
-          graft.util.Fs.syncRecursively(tmp)
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            try graft.util.Fs.deleteRecursively(tmp)
-            catch { case _: Throwable => () }))
+          syncRecursively(tmp)
           tmp.toString
         }
         () => built
@@ -300,7 +275,7 @@ object FormatOps {
   }
 
   def dppPrune(spark: SparkSession, dir: String): DataFrame =
-    materialize(spark, dppReadAgg(spark, dppFixtureDir(spark, dir), dir))
+    localize(spark, dppReadAgg(spark, dppFixtureDir(spark, dir), dir))
 
   /** q256: schema-evolution merge audit — the lake's ADD COLUMN path
     * exercised for real: the fixture is written as two parquet
@@ -346,8 +321,8 @@ object FormatOps {
       .orderBy("event_type")
 
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
-    withTempDir("evo") { tmp =>
+    withTempDir("fmt-evo") { tmp =>
       writeEvolvedEvents(spark, dir, tmp.toString)
-      materialize(spark, evolvedReadAgg(spark, tmp.toString))
+      localize(spark, evolvedReadAgg(spark, tmp.toString))
     }
 }

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import graft.plans.MvRegistry
+import graft.util.{Fs, UniqueName}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -9,7 +12,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * through [[StreamRunner]] (`Trigger.AvailableNow`, state partitions
   * pinned) and returns the materialized result, so the
   * streaming tier sits in the SAME DuckDB hash gate as every batch
-  * operator instead of a weaker spec-only check.
+  * operator instead of a weaker spec-only check.  Each call's watch,
+  * stage, checkpoint, store and sink dirs are subdirs of one
+  * [[graft.util.Fs.withTempDir]] root, deleted when the call returns
+  * (q361's sink output, which its returned frame reads, excepted).
   *
   * Cross-engine determinism: every output column is an exact integer or
   * a string.  Value sums follow the house quantize-then-exact-sum rule
@@ -41,21 +47,20 @@ object StreamQueries {
   val q343LateLagResidue: Int = 0
 
   /** FileStreamSource wants a DIRECTORY to watch; the fixture is one
-    * file among the other tables' parquet.  A temp watch dir holding a
-    * symlink to events.parquet gives the stream its own source root
+    * file among the other tables' parquet.  A scratch watch dir holding
+    * a symlink to events.parquet gives the stream its own source root
     * without copying data.  `build` shapes the event stream; the result
-    * is drained to a memory table and the watch dir deleted.
+    * is drained to a memory table before the watch dir is deleted.
     */
   private def eventsToTable(spark: SparkSession, dir: String, mode: String,
                             inspect: StreamingQuery => Unit)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val watch = java.nio.file.Files.createTempDirectory("graft-stream-events")
-    StreamRunner.toTable(mode, inspect, watch) {
-      java.nio.file.Files.createSymbolicLink(watch.resolve("events.parquet"),
+      build: DataFrame => DataFrame): DataFrame =
+    Fs.withTempDir("stream-events") { watch =>
+      Files.createSymbolicLink(watch.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      build(EventStream.readEvents(spark, watch.toString))
+      StreamRunner.toTable(mode, inspect)(
+        build(EventStream.readEvents(spark, watch.toString)))
     }
-  }
 
   /** q226: hourly event-time windows, streamed.  Equivalent batch/SQL:
     * group by date_trunc-hour — epoch-aligned exactly like Spark's
@@ -152,7 +157,6 @@ object StreamQueries {
     */
   def ingestAudit(spark: SparkSession, dir: String,
                   inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.Files
     val docs = graft.Tables.documents(spark, dir)
       .select(format_string("%08d", col("doc_id")).as("id"),
         col("doc_id").cast("string").as("txn_id"),
@@ -160,26 +164,21 @@ object StreamQueries {
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val cut1 = (maxId + 1) * 3 / 5   // batch 1: ids [0, cut1)
     val cut0 = cut1 / 2              // batch 2: ids [cut0, max] — [cut0, cut1) replays
-    val staged = StreamRunner.stageSlices(
-      Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
-        .map(docs.filter(_).drop("doc_id")), "ingest")
-    val storeDir = Files.createTempDirectory("graft-ingest-store")
-    val ckptDir = Files.createTempDirectory("graft-ingest-ckpt")
-    val outDir = Files.createTempDirectory("graft-ingest-out")
-    try {
-      StreamRunner.drain(inspect, staged.dirs ++ Seq(storeDir, ckptDir): _*)(
-        DocStream.dedupIngest(staged.read(spark), storeDir.toString,
+    Fs.withTempDir("ingest") { root =>
+      val staged = StreamRunner.stageSlices(root,
+        Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
+          .map(docs.filter(_).drop("doc_id")))
+      val outDir = root.resolve("out")
+      StreamRunner.drain(inspect)(
+        DocStream.dedupIngest(staged.read(spark), root.resolve("store").toString,
           new graft.sinks.NdjsonDirSink(outDir.toString, chunkSize = 100),
-          ckptDir.toString))
-      graft.util.Fs.localize(spark,
+          root.resolve("ckpt").toString))
+      Fs.localize(spark,
         spark.read.schema(graft.sources.DocSource.schema).json(s"$outDir/batch=*")
           .groupBy(col("owner").as("source"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("id").cast("long")).as("id_sum"))
           .select(col("source"), col("n_docs"), col("id_sum")))
-    } finally {
-      graft.util.Fs.syncRecursively(outDir)
-      graft.util.Fs.deleteRecursively(outDir)
     }
   }
 
@@ -226,21 +225,20 @@ object StreamQueries {
     */
   def dedupReplayAudit(spark: SparkSession, dir: String,
                        inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val watch = java.nio.file.Files.createTempDirectory("graft-dedup-replay")
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    java.nio.file.Files.copy(src, watch.resolve("copy_a.parquet"))
-    java.nio.file.Files.copy(src, watch.resolve("copy_b.parquet"))
-    // distinct mod-times pin the two-batch pickup order
-    java.nio.file.Files.setLastModifiedTime(watch.resolve("copy_b.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        java.nio.file.Files.getLastModifiedTime(watch.resolve("copy_a.parquet"))
-          .toMillis + 1000L))
-    StreamRunner.toTable("append", inspect, watch)(
-      EventStream.dedupEvents(
-        EventStream.readEvents(spark, watch.toString,
-          Map("maxFilesPerTrigger" -> "1")),
-        watermark = "3650 days"))
-      .agg(count(lit(1)).as("n_events"),
+    Fs.withTempDir("dedup-replay") { watch =>
+      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+      Files.copy(src, watch.resolve("copy_a.parquet"))
+      Files.copy(src, watch.resolve("copy_b.parquet"))
+      // distinct mod-times pin the two-batch pickup order
+      Files.setLastModifiedTime(watch.resolve("copy_b.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(
+          Files.getLastModifiedTime(watch.resolve("copy_a.parquet")).toMillis + 1000L))
+      StreamRunner.toTable("append", inspect)(
+        EventStream.dedupEvents(
+          EventStream.readEvents(spark, watch.toString,
+            Map("maxFilesPerTrigger" -> "1")),
+          watermark = "3650 days"))
+    }.agg(count(lit(1)).as("n_events"),
         sum(col("event_id")).as("id_sum"),
         sum(floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long")).as("value_units"))
       .select(col("n_events"), col("id_sum"), col("value_units"))
@@ -270,29 +268,30 @@ object StreamQueries {
     val e = graft.Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         floor(col("value") * lit(1.0e6) + lit(0.5)).cast("long").as("units"))
-    val staged = StreamRunner.stageSlices(
-      Seq(col("us") < cutUs, col("us") >= cutUs).map(e.filter(_)), "state")
     import spark.implicits._
     // collapse update-mode emissions to the FINAL state by the row
     // with the largest n_events — the event count is strictly
     // monotone across a user's updates (each touched batch adds ≥1),
     // where max(value_units) alone would silently pick an
     // intermediate state if values could ever be negative
-    StreamRunner.toTable("update", inspect, staged.dirs: _*)(
-      staged.read(spark)
-        .select(col("user_id").as[Long], col("units").as[Long])
-        .groupByKey(_._1)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
-            val (pn, pu) = state.getOption.getOrElse((0L, 0L))
-            val (n, u) = rows.foldLeft((pn, pu)) {
-              case ((c, t), (_, v)) => (c + 1L, t + v)
-            }
-            state.update((n, u))
-            (user, n, u)
-        }
-        .toDF("user_id", "n_events", "value_units"))
-      .groupBy("user_id")
+    Fs.withTempDir("state") { root =>
+      val staged = StreamRunner.stageSlices(root,
+        Seq(col("us") < cutUs, col("us") >= cutUs).map(e.filter(_)))
+      StreamRunner.toTable("update", inspect)(
+        staged.read(spark)
+          .select(col("user_id").as[Long], col("units").as[Long])
+          .groupByKey(_._1)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
+              val (pn, pu) = state.getOption.getOrElse((0L, 0L))
+              val (n, u) = rows.foldLeft((pn, pu)) {
+                case ((c, t), (_, v)) => (c + 1L, t + v)
+              }
+              state.update((n, u))
+              (user, n, u)
+          }
+          .toDF("user_id", "n_events", "value_units"))
+    }.groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("value_units"), col("n_events")).as("value_units"))
   }
@@ -332,15 +331,17 @@ object StreamQueries {
                     inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val e = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"))
-    val staged = StreamRunner.stageSlices(
-      (0L to 2L).map(r => e.filter(pmod(col("event_id"), lit(3L)) === r)), "late")
-    StreamRunner.toTable("append", inspect, staged.dirs: _*)(
-      staged.read(spark)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("win_us"),
-          col("n_events")))
+    Fs.withTempDir("late") { root =>
+      val staged = StreamRunner.stageSlices(root,
+        (0L to 2L).map(r => e.filter(pmod(col("event_id"), lit(3L)) === r)))
+      StreamRunner.toTable("append", inspect)(
+        staged.read(spark)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(unix_micros(col("window.start")).as("win_us"),
+            col("n_events")))
+    }
   }
 
   /** q355: watermark-bounded streaming dedup — the TTL variant the
@@ -402,13 +403,13 @@ object StreamQueries {
     val b3 = e.filter(pmod(col("event_id"), lit(6L)) === 3L)
       .select(col("event_id"), fresh.as("ts"))
       .unionByName(e.filter(pmod(col("event_id"), lit(6L)) === 1L))
-    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "ttl")
-    StreamRunner.toTable("append", inspect, staged.dirs: _*)(
-      staged.read(spark)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), unix_micros(col("ts")).as("us")))
-      .groupBy("event_id")
+    Fs.withTempDir("ttl") { root =>
+      StreamRunner.toTable("append", inspect)(
+        StreamRunner.stageSlices(root, Seq(b1, b2, b3)).read(spark)
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id")
+          .select(col("event_id"), unix_micros(col("ts")).as("us")))
+    }.groupBy("event_id")
       .agg(count(lit(1)).as("n_emits"), sum(col("us")).as("us_sum"))
       .orderBy("event_id")
   }
@@ -446,7 +447,9 @@ object StreamQueries {
     * land in their own `batch=N` subdirectory (replay-idempotent);
     * the gate reads the sink output back and folds per document —
     * a duplicate leaking past live state, a re-admission missing, or
-    * a batch lost by the sink all break the hash.
+    * a batch lost by the sink all break the hash.  The returned frame
+    * reads the sink output lazily, so that one dir outlives the call
+    * ([[graft.util.Fs.tempDirUntilExit]]); the rest are the bracket's.
     *
     * 100 TB shape: dedup state is bounded by the watermark horizon
     * (numRowsRemoved > 0 and decreasing numRowsTotal pinned in
@@ -456,7 +459,6 @@ object StreamQueries {
     */
   def dedupTtlIngest(spark: SparkSession, dir: String,
                      inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.Files
     val t0us = 1700000000000000L
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
@@ -474,19 +476,19 @@ object StreamQueries {
     val b2 = slice(col("doc_id") >= cut0, origTs)
     val b3 = slice(pmod(col("doc_id"), lit(7L)) === 0L &&
       col("doc_id") < cut1, freshTs)
-    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "ttlingest")
-    val outDir = Files.createTempDirectory("graft-ttlingest-out")
-    val ckptDir = Files.createTempDirectory("graft-ttlingest-ckpt")
+    val outDir = Fs.tempDirUntilExit("ttlingest-out")
     val sink = new graft.sinks.NdjsonDirSink(outDir.toString, chunkSize = 100)
-    val admitted = staged.read(spark)
-      .withWatermark("ts", "60 seconds")
-      .dropDuplicatesWithinWatermark("id")
-      .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit"))
-    StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
-      StreamRunner.foreachBatch(admitted, ckptDir.toString)(
-        StreamRunner.eachNonEmpty { (batch, batchId) => sink.writeBatch(batch, batchId); () }))
-    graft.util.Fs.deleteOnExit(outDir)
-    spark.read.schema(admitted.schema).json(s"$outDir/batch=*")
+    val admittedSchema = Fs.withTempDir("ttlingest") { root =>
+      val admitted = StreamRunner.stageSlices(root, Seq(b1, b2, b3)).read(spark)
+        .withWatermark("ts", "60 seconds")
+        .dropDuplicatesWithinWatermark("id")
+        .select(col("id"), col("owner"), unix_micros(col("ts")).as("us_admit"))
+      StreamRunner.drain(inspect)(
+        StreamRunner.foreachBatch(admitted, root.resolve("ckpt").toString)(
+          StreamRunner.eachNonEmpty { (batch, batchId) => sink.writeBatch(batch, batchId); () }))
+      admitted.schema
+    }
+    spark.read.schema(admittedSchema).json(s"$outDir/batch=*")
       .groupBy(col("id").cast("long").as("doc_id"))
       .agg(count(lit(1)).as("n_writes"), sum(col("us_admit")).as("us_sum"))
       .orderBy("doc_id")
@@ -519,16 +521,17 @@ object StreamQueries {
     * the published partials ARE the recovery state, the same
     * philosophy as q336.
     */
-  /** Run the three-epoch lineitem MV-maintenance stream and return the
-    * store directory holding the rename-published `epoch-NNN` partial
-    * artifacts (watch/stage/checkpoint dirs already cleaned; the
-    * CALLER deletes the returned store).  Shared by q372 (which gates
-    * the merged partials against the batch MV) and q380 (which merges
-    * them INTO the artifact the rewrite serves).
+  /** Run the three-epoch lineitem MV-maintenance stream in the
+    * caller's scratch `root` (watch, stage and checkpoint subdirs) and
+    * return `root/epochs`, the store holding the rename-published
+    * `epoch-NNN` partial artifacts; the caller's bracket deletes it
+    * all.  Shared by q372 (which gates the merged partials against the
+    * batch MV) and q380 (which merges them INTO the artifact the
+    * rewrite serves).
     */
   private[graft] def mvEpochStore(spark: SparkSession, dir: String,
+      root: java.nio.file.Path,
       inspect: StreamingQuery => Unit = _ => ()): java.nio.file.Path = {
-    import java.nio.file.Files
     val li = graft.Tables.lineitem(spark, dir).select(
       col("l_orderkey"), col("l_shipdate").as("day"),
       col("l_returnflag").as("flag"),
@@ -536,31 +539,26 @@ object StreamQueries {
     val maxK = li.agg(max(col("l_orderkey"))).head().getLong(0)
     val c1 = (maxK + 1) / 3
     val c2 = 2 * (maxK + 1) / 3
-    val staged = StreamRunner.stageSlices(Seq(
+    val staged = StreamRunner.stageSlices(root, Seq(
         col("l_orderkey") < c1,
         col("l_orderkey") >= c1 && col("l_orderkey") < c2,
-        col("l_orderkey") >= c2).map(li.filter(_).drop("l_orderkey")), "mv")
-    val storeDir = Files.createTempDirectory("graft-mvingest-store")
-    val ckptDir = Files.createTempDirectory("graft-mvingest-ckpt")
-    // a mid-run failure must not leak the store: callers only learn
-    // the path from the successful return, so it is deleted before
-    // rethrowing; the success path keeps returning it
-    try StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
-      StreamRunner.foreachBatch(staged.read(spark), ckptDir.toString) { (batch, batchId) =>
-        graft.plans.MvStore.publishEpoch(
-          graft.plans.MvStore.epochPartials(batch), storeDir.toString, batchId)
+        col("l_orderkey") >= c2).map(li.filter(_).drop("l_orderkey")))
+    val storeDir = root.resolve("epochs")
+    StreamRunner.drain(inspect)(
+      StreamRunner.foreachBatch(staged.read(spark), root.resolve("ckpt").toString) {
+        (batch, batchId) =>
+          graft.plans.MvStore.publishEpoch(
+            graft.plans.MvStore.epochPartials(batch), storeDir.toString, batchId)
       })
-    catch { case e: Throwable => graft.util.Fs.deleteRecursively(storeDir); throw e }
     storeDir
   }
 
   def mvIngest(spark: SparkSession, dir: String,
-               inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val storeDir = mvEpochStore(spark, dir, inspect)
-    // the result is bounded (month×flag): localize it and delete the
-    // store EAGERLY — the mvRewrite rule — rather than deferring a
-    // per-invocation directory to JVM exit
-    try {
+               inspect: StreamingQuery => Unit = _ => ()): DataFrame =
+    // the result is bounded (month×flag): localize it inside the
+    // bracket, which deletes the store EAGERLY — the mvRewrite rule
+    Fs.withTempDir("mvingest") { root =>
+      val storeDir = mvEpochStore(spark, dir, root, inspect)
       def monthly(partials: DataFrame, revName: String, nName: String) =
         partials.groupBy(
             substring(col("day").cast("string"), 1, 7).as("ship_month"),
@@ -577,7 +575,7 @@ object StreamQueries {
         "rev_s", "n_s")
       val batchMv = monthly(graft.plans.MvStore.mvFrame(spark, dir),
         "rev_b", "n_b")
-      graft.util.Fs.localize(spark,
+      Fs.localize(spark,
         stream.join(batchMv, Seq("ship_month", "flag"), "full_outer")
           .select(col("ship_month"), col("flag").as("l_returnflag"),
             col("rev_s").cast("double").as("stream_rev"),
@@ -586,11 +584,7 @@ object StreamQueries {
             col("n_s").as("stream_lines"), col("n_b").as("batch_lines"),
             when(col("n_s") === col("n_b"), 1).otherwise(0).as("lines_match"))
           .orderBy("ship_month", "l_returnflag"))
-    } finally {
-      graft.util.Fs.syncRecursively(storeDir)
-      graft.util.Fs.deleteRecursively(storeDir)
     }
-  }
 
   /** The MV lifecycle CLOSED (q380): the stream maintains the
     * artifact, the artifact answers the dashboards.  q372 proved the
@@ -637,25 +631,15 @@ object StreamQueries {
       storeDir, "mv_daily_rev")
 
   def mvServe(spark: SparkSession, dir: String,
-              inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.Files
-    val epochs = mvEpochStore(spark, dir, inspect)
-    val store = Files.createTempDirectory("graft-mvserve-store")
-    try {
-      mergeEpochs(spark, epochs, store.toString)
-      val marker = "gmv_sv_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      graft.plans.MvStore.registerRollup(spark, dir, store.toString, marker)
-      try graft.util.Fs.localize(spark,
-        graft.plans.MvStore.baseConsumer(spark, dir, marker))
-      finally graft.plans.MvRegistry.unregister(marker)
-    } finally {
-      graft.util.Fs.syncRecursively(store)
-      graft.util.Fs.deleteRecursively(store)
-      graft.util.Fs.syncRecursively(epochs)
-      graft.util.Fs.deleteRecursively(epochs)
+              inspect: StreamingQuery => Unit = _ => ()): DataFrame =
+    Fs.withTempDir("mvserve") { root =>
+      val store = root.resolve("store").toString
+      mergeEpochs(spark, mvEpochStore(spark, dir, root, inspect), store)
+      val marker = UniqueName("gmv_sv_")
+      MvRegistry.registered(marker)(
+        graft.plans.MvStore.registerRollup(spark, dir, store, marker))(
+        Fs.localize(spark, graft.plans.MvStore.baseConsumer(spark, dir, marker)))
     }
-  }
 
   /** Streaming CDC apply (q377): q86's batch upsert/delete merge run
     * AS A STREAM — the change-log consumer every lakehouse upsert sink
@@ -687,7 +671,6 @@ object StreamQueries {
     */
   def cdcApply(spark: SparkSession, dir: String,
                inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.Files
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val b1 = docs.filter(col("doc_id") < 300)
@@ -703,17 +686,15 @@ object StreamQueries {
         when(pmod(col("doc_id"), lit(7L)) === 0L, "delete").otherwise("upsert")
           .as("op"),
         concat(col("text"), lit(" v3")).as("new_text"), lit(3L).as("new_version"))
-    val staged = StreamRunner.stageSlices(Seq(b1, b2, b3), "cdc")
-    val storeDir = Files.createTempDirectory("graft-cdc-store")
-    val ckptDir = Files.createTempDirectory("graft-cdc-ckpt")
     // final state = the MAX-numbered `state-N` artifact actually in
     // the store — not a literal batch id, so a change to staging
     // granularity (more/fewer micro-batches) can never read a stale
-    // epoch.  Bounded result: localize, then delete the store eagerly
-    // (on a failed stream too).
-    try {
-      StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
-        StreamRunner.foreachBatch(staged.read(spark), ckptDir.toString) { (batch, batchId) =>
+    // epoch.  Bounded result: localize inside the bracket.
+    Fs.withTempDir("cdc") { root =>
+      val staged = StreamRunner.stageSlices(root, Seq(b1, b2, b3))
+      val storeDir = root.resolve("store").toString
+      StreamRunner.drain(inspect)(
+        StreamRunner.foreachBatch(staged.read(spark), root.resolve("ckpt").toString) { (batch, batchId) =>
           val s = batch.sparkSession
           val prevState =
             if (batchId == 0L) {
@@ -721,31 +702,28 @@ object StreamQueries {
               Seq.empty[(Long, String, Long)]
                 .toDF("doc_id", "text", "version")
             } else s.read.parquet(
-              graft.plans.StatsStore.artifactPath(s, storeDir.toString,
+              graft.plans.StatsStore.artifactPath(s, storeDir,
                   f"state-${batchId - 1}%03d")
                 .getOrElse(throw new IllegalStateException(
                   s"cdc store missing state-${batchId - 1}")))
           graft.plans.StatsStore.publishNamed(
-            applyCdcOps(prevState, batch), storeDir.toString,
+            applyCdcOps(prevState, batch), storeDir,
             f"state-$batchId%03d")
         })
       // NUMERIC max over the RESOLVED serving dirs — "state-1000"
       // sorts before "state-999" as a string, which would hand back a
       // stale epoch once batch ids outgrow the %03d padding
       val lastState = graft.plans.StatsStore
-        .artifactDirs(spark, storeDir.toString, "state-\\d+")
+        .artifactDirs(spark, storeDir, "state-\\d+")
         .toSeq.sortBy(_._1.stripPrefix("state-").toInt).lastOption
         .map(_._2)
         .getOrElse(throw new IllegalStateException(
           "cdc store published no state artifact"))
-      graft.util.Fs.localize(spark,
+      Fs.localize(spark,
         spark.read.parquet(lastState)
           .select(col("doc_id"), col("version"),
             length(col("text")).cast("long").as("n_chars"))
           .orderBy("doc_id"))
-    } finally {
-      graft.util.Fs.syncRecursively(storeDir)
-      graft.util.Fs.deleteRecursively(storeDir)
     }
   }
 
@@ -786,30 +764,27 @@ object StreamQueries {
     */
   def hllIngest(spark: SparkSession, dir: String,
                 inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
-    import java.nio.file.Files
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val cut1 = (maxId + 1) * 3 / 5
     val cut0 = cut1 / 2
-    val staged = StreamRunner.stageSlices(
-      Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
-        .map(docs.filter(_).drop("doc_id")), "hll")
-    val storeDir = Files.createTempDirectory("graft-hll-store")
-    val ckptDir = Files.createTempDirectory("graft-hll-ckpt")
-    // bounded result (64 registers): localize and delete the store
-    // eagerly — the mvRewrite rule — instead of deferring a
-    // per-invocation directory to JVM exit
-    try {
-      StreamRunner.drain(inspect, staged.dirs :+ ckptDir: _*)(
-        DocStream.hllMaintain(staged.read(spark), storeDir.toString, ckptDir.toString))
-      val streamRegs = DocStream.readHllRegisters(spark, storeDir.toString)
+    // bounded result (64 registers): localize inside the bracket,
+    // which deletes the store eagerly — the mvRewrite rule
+    Fs.withTempDir("hll") { root =>
+      val staged = StreamRunner.stageSlices(root,
+        Seq(col("doc_id") < cut1, col("doc_id") >= cut0)
+          .map(docs.filter(_).drop("doc_id")))
+      val storeDir = root.resolve("store").toString
+      StreamRunner.drain(inspect)(
+        DocStream.hllMaintain(staged.read(spark), storeDir, root.resolve("ckpt").toString))
+      val streamRegs = DocStream.readHllRegisters(spark, storeDir)
         .withColumnRenamed("m", "m_stream")
       val direct = graft.operators.PipelineAudits.hllRegisterTable(
           graft.Tables.documents(spark, dir)
             .select(explode(graft.functions.TextFunctions.tokens(col("text")))
               .as("token")))
         .withColumnRenamed("m", "m_direct")
-      graft.util.Fs.localize(spark,
+      Fs.localize(spark,
         spark.range(0, 64).select(col("id").as("register"))
           .join(streamRegs, Seq("register"), "left").na.fill(0L, Seq("m_stream"))
           .join(direct, Seq("register"), "left").na.fill(0L, Seq("m_direct"))
@@ -817,9 +792,6 @@ object StreamQueries {
             when(col("m_stream") === col("m_direct"), 1).otherwise(0)
               .as("stream_matches"))
           .orderBy("register"))
-    } finally {
-      graft.util.Fs.syncRecursively(storeDir)
-      graft.util.Fs.deleteRecursively(storeDir)
     }
   }
 }

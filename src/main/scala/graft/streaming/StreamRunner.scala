@@ -23,47 +23,42 @@ private[graft] object StreamRunner {
     */
   val statePartitions: Int = 8
 
-  /** Staged micro-batch files: the watch dir a stream reads, the stage
-    * dir the slices were written through, and the slices' own schema.
+  /** Staged micro-batch files: the watch dir a stream reads and the
+    * slices' own schema.
     */
-  final case class Staged(watch: java.nio.file.Path, stage: java.nio.file.Path,
-                          schema: StructType) {
+  final case class Staged(watch: java.nio.file.Path, schema: StructType) {
     /** One micro-batch per staged file (maxFilesPerTrigger=1). */
     def read(spark: SparkSession): DataFrame =
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(watch.toString)
-
-    def dirs: Seq[java.nio.file.Path] = Seq(watch, stage)
   }
 
-  /** Stage each slice (all of one schema) as one parquet file in a fresh
-    * watch dir, mod-times pinned 1 s apart so FileStreamSource picks the
-    * slices up in order — with maxFilesPerTrigger=1 each slice rides its
-    * own micro-batch (the cross-batch-state harness).  Each slice is its
-    * own coalesce(1) write; the N independent write jobs overlap via
+  /** Stage each slice (all of one schema) as one parquet file in the
+    * watch dir `root/src`, mod-times pinned 1 s apart so
+    * FileStreamSource picks the slices up in order — with
+    * maxFilesPerTrigger=1 each slice rides its own micro-batch (the
+    * cross-batch-state harness).  Each slice is its own coalesce(1)
+    * write into `root/stage`; the N independent write jobs overlap via
     * [[graft.util.Par]] (guide §2.6).  File copies and mod-time pinning
     * stay sequential — the mod-times, not copy order, pin micro-batch
-    * order.  The caller deletes `dirs` (or hands them to [[drain]]).
+    * order.  `root` is the caller's [[graft.util.Fs.withTempDir]]
+    * root, which deletes both dirs, a failed staging included.
     */
-  def stageSlices(slices: Seq[DataFrame], tag: String): Staged = {
+  def stageSlices(root: java.nio.file.Path, slices: Seq[DataFrame]): Staged = {
     import java.nio.file.Files
-    val watch = Files.createTempDirectory(s"graft-$tag-src")
-    val stage = Files.createTempDirectory(s"graft-$tag-stage")
-    try {
-      graft.util.Par.run(slices.zipWithIndex.map { case (df, i) =>
-        () => df.coalesce(1).write.parquet(s"$stage/c$i")
-      })
-      for (i <- slices.indices) {
-        val dst = watch.resolve(f"$tag$i%02d.parquet")
-        Files.copy(graft.util.Fs.onlyPartFile(s"$stage/c$i"), dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
-      }
-    } catch {
-      case e: Throwable => Seq(watch, stage).foreach(graft.util.Fs.deleteRecursively); throw e
+    val watch = Files.createDirectory(root.resolve("src"))
+    val stage = root.resolve("stage")
+    graft.util.Par.run(slices.zipWithIndex.map { case (df, i) =>
+      () => df.coalesce(1).write.parquet(s"$stage/c$i")
+    })
+    for (i <- slices.indices) {
+      val dst = watch.resolve(f"slice$i%02d.parquet")
+      Files.copy(graft.util.Fs.onlyPartFile(s"$stage/c$i"), dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
     }
     // read back as file sources surface columns: nullable
-    Staged(watch, stage, StructType(slices.head.schema.map(_.copy(nullable = true))))
+    Staged(watch, StructType(slices.head.schema.map(_.copy(nullable = true))))
   }
 
   /** Start `stream` into the sink `sink` configures, run to completion
@@ -87,29 +82,26 @@ private[graft] object StreamRunner {
       body: (DataFrame, Long) => Unit): StreamingQuery =
     start(stream)(_.option("checkpointLocation", checkpointDir).foreachBatch(body))
 
-  /** Start a query (`q`, typically through [[start]]), wait for it to
-    * finish, hand it to `inspect` (progress assertions in tests), stop
-    * it, and delete `dirs` whatever happened — a failed start included.
+  /** Wait for a started query `q` (typically from [[start]]) to
+    * finish, hand it to `inspect` (progress assertions in tests), and
+    * stop it only if it is still active (an interrupted wait).  A
+    * query that terminated is not stopped again: its
+    * execution thread can outlive `awaitTermination` for a moment, and
+    * `stop` then cancels a job group that has no jobs left (a
+    * meaningless "Failed to cancel job group" warning).  The caller's
+    * [[graft.util.Fs.withTempDir]] bracket deletes the query's dirs.
     */
-  def drain(inspect: StreamingQuery => Unit, dirs: java.nio.file.Path*)(
-      q: => StreamingQuery): Unit =
-    try {
-      val started = q
-      try { started.awaitTermination(); inspect(started) } finally started.stop()
-    } finally dirs.foreach(graft.util.Fs.deleteRecursively)
+  def drain(inspect: StreamingQuery => Unit)(q: StreamingQuery): Unit =
+    try { q.awaitTermination(); inspect(q) } finally if (q.isActive) q.stop()
 
-  /** Build `stream`, run it into a uniquely-named memory sink, drain
-    * it, delete `dirs` (a failed build included), and return the sink
-    * table.  The memory sink holds the drained result, so the stream's
-    * inputs are disposable the moment the query stops.
+  /** Run `stream` into a uniquely-named memory sink, drain it, and
+    * return the sink table.  The memory sink holds the drained result,
+    * so the stream's inputs are disposable the moment the query stops.
     */
-  def toTable(mode: String, inspect: StreamingQuery => Unit,
-              dirs: java.nio.file.Path*)(stream: => DataFrame): DataFrame = {
-    val name = "graft_sq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    lazy val built = stream
-    drain(inspect, dirs: _*)(
-      start(built)(_.format("memory").queryName(name).outputMode(mode)))
-    built.sparkSession.table(name)
+  def toTable(mode: String, inspect: StreamingQuery => Unit)(stream: DataFrame): DataFrame = {
+    val name = graft.util.UniqueName("graft_sq_")
+    drain(inspect)(start(stream)(_.format("memory").queryName(name).outputMode(mode)))
+    stream.sparkSession.table(name)
   }
 
   /** The non-empty bracket: pin `df`, probe it, run `body` on the pinned

@@ -2,8 +2,10 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Small filesystem/materialization helpers shared by the round-trip
-  * operators (FormatOps, Bucketing, StreamQueries) and their specs.
+/** Small filesystem/materialization helpers: the one scratch-dir
+  * bracket every per-call temp dir goes through, and the helpers the
+  * round-trip operators (FormatOps, StreamQueries, the stats stores)
+  * and their specs share.
   */
 object Fs {
 
@@ -21,21 +23,23 @@ object Fs {
     }
   }
 
-  /** fsync every regular file under `p` (fsync works on an O_RDONLY fd
-    * on Linux; FileChannel.force is exactly that syscall).  The
-    * round-trip operators call this INSIDE each timed rep, before the
-    * temp dir is deleted: without it the write's dirty pages linger in
-    * the page cache and the NEXT rep pays their writeback — the r15
-    * "inverted warming" artifact (q231 reps 1.93→2.55→4.42 s, each rep
-    * slower because it inherits the previous rep's flush).  With the
-    * flush inside the rep, every rep is self-contained and the rep
-    * array reflects plan cost, not accumulated disk state.
+  /** fsync every regular file under `p`, symlinks not followed (fsync
+    * works on an O_RDONLY fd on Linux; FileChannel.force is exactly that
+    * syscall).  [[withTempDir]] calls this INSIDE each call, so inside
+    * each timed rep, before the root is deleted: without it the write's
+    * dirty pages linger in the page cache and the NEXT rep pays their
+    * writeback — the r15 "inverted warming" artifact (q231 reps
+    * 1.93→2.55→4.42 s, each rep slower because it inherits the previous
+    * rep's flush).  With the flush inside the rep, every rep is
+    * self-contained and the rep array reflects plan cost, not
+    * accumulated disk state.
     */
   def syncRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
       val files = scala.util.Using.resource(java.nio.file.Files.walk(p)) {
-        _.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
+        _.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_,
+          java.nio.file.LinkOption.NOFOLLOW_LINKS)).toSeq
       }
       files.foreach { f =>
         scala.util.Using.resource(java.nio.channels.FileChannel.open(
@@ -52,28 +56,47 @@ object Fs {
       _.filter(p => p.toString.endsWith(ext)).findFirst().get()
     }
 
-  /** Register a temp dir for JVM-exit deletion — for store dirs that
-    * must OUTLIVE their creating call (a returned frame reads them
-    * lazily, the q230/q336 sink rule) but must not accumulate across
-    * repeated bench/correctness invocations in one JVM.  One shutdown
-    * hook, registered lazily; File.deleteOnExit would leak an entry
-    * per FILE and misses files created after registration.
+  /** The per-call scratch bracket: make one `graft-<tag>*` root, run
+    * `body` on it, then fsync and delete the root whether `body`
+    * returned or threw.  A call that needs several dirs (watch, stage,
+    * checkpoint, store, output) uses subdirs of its one root.  The
+    * fsync is [[syncRecursively]]'s bench-hygiene rule: the write's
+    * dirty pages are flushed inside the call that made them.  A result
+    * read from the root must be localized ([[localize]]) inside
+    * `body`.
     */
-  def deleteOnExit(p: java.nio.file.Path): Unit = exitDirs.synchronized {
+  def withTempDir[T](tag: String)(body: java.nio.file.Path => T): T = {
+    val root = newRoot(tag)
+    try body(root)
+    finally try syncRecursively(root) finally deleteRecursively(root)
+  }
+
+  /** A scratch dir that must OUTLIVE its call — a returned lazy frame
+    * reads it (q361's sink output) or a per-JVM memo serves it (the
+    * q366 partitioned fixture) — deleted at JVM exit instead.  One
+    * shutdown hook, registered lazily; File.deleteOnExit would leak an
+    * entry per FILE and misses files created after registration.
+    */
+  def tempDirUntilExit(tag: String): java.nio.file.Path = exitDirs.synchronized {
     if (exitDirs.isEmpty)
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         exitDirs.synchronized(exitDirs.foreach(d =>
           try deleteRecursively(d) catch { case _: Exception => () }))))
-    exitDirs += p
+    val root = newRoot(tag)
+    exitDirs += root
+    root
   }
   private val exitDirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
 
+  private def newRoot(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(s"graft-$tag")
+
   /** Collect a BOUNDED frame (O(groups) rows by construction) into a
-    * local relation, so temp inputs can be deleted eagerly — returning
-    * a lazy plan over files about to be unlinked would read after
-    * delete on re-execution.  Same rationale as the streaming memory
-    * sink (StreamRunner.toTable); callers document why their
-    * result is bounded.
+    * local relation, so a [[withTempDir]] root can be deleted when the
+    * bracket closes — returning a lazy plan over files about to be
+    * unlinked would read after delete on re-execution.  Same rationale
+    * as the streaming memory sink (StreamRunner.toTable); callers
+    * document why their result is bounded.
     */
   def localize(spark: SparkSession, df: DataFrame): DataFrame = {
     val rows: java.util.List[Row] = java.util.Arrays.asList(df.collect(): _*)

@@ -135,9 +135,9 @@ class Batch31Spec extends SparkSuite {
   }
 
   test("q380: the stream-built artifact serves the rewrite — consumer plan reads only the merged MV, values equal the base recompute") {
-    val epochs = streaming.StreamQueries.mvEpochStore(spark, sf)
-    val store = java.nio.file.Files.createTempDirectory("b31-mv-serve")
-    try {
+    graft.util.Fs.withTempDir("b31-mv-serve") { root =>
+      val epochs = streaming.StreamQueries.mvEpochStore(spark, sf, root)
+      val store = root.resolve("store")
       // three epochs were published (one per staged micro-batch)
       val names = scala.util.Using.resource(
           java.nio.file.Files.list(epochs)) { s =>
@@ -166,9 +166,6 @@ class Batch31Spec extends SparkSuite {
       assert(rows.toSeq == control.toSeq,
         "stream-served and base paths are value-identical")
       assert(rows.nonEmpty)
-    } finally {
-      graft.util.Fs.deleteRecursively(store)
-      graft.util.Fs.deleteRecursively(epochs)
     }
   }
 

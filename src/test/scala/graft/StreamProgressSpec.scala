@@ -131,15 +131,33 @@ class StreamProgressSpec extends SparkSuite {
       "ingest keeps its dedup in the fp store, not the streaming state store")
   }
 
-  test("q230 ingest pipeline: a call leaves no sink output dir behind") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def outDirs(): Set[String] =
-      Option(tmp.list()).map(_.toSet).getOrElse(Set.empty)
-        .filter(_.startsWith("graft-ingest-out"))
-    val before = outDirs()
-    assert(StreamQueries.ingestAudit(spark, sf).collect().nonEmpty)
-    val leaked = outDirs() -- before
-    assert(leaked.isEmpty, s"ingestAudit left its sink output behind: $leaked")
+  /** The `graft-*` entries in java.io.tmpdir: every scratch root
+    * [[graft.util.Fs]] makes is named so.
+    */
+  private def scratchRoots(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .map(_.toSet).getOrElse(Set.empty).filter(_.startsWith("graft-"))
+
+  // every query whose per-call dirs go through Fs.withTempDir: a call
+  // (sink output, stores and checkpoints included) leaves nothing behind
+  for (q <- Seq("q228_stream_dedup", "q230_stream_ingest", "q231_orc_roundtrip",
+      "q256_schema_evolution", "q336_stream_hll", "q360_cbo_persisted",
+      "q362_shard_write", "q364_hist_persisted", "q368_mv_rewrite",
+      "q372_stream_mv", "q377_stream_cdc", "q380_mv_serve"))
+    test(s"scratch dirs: $q leaves no graft-* dir") {
+      val before = scratchRoots()
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty)
+      val leaked = scratchRoots() -- before
+      assert(leaked.isEmpty, s"$q left scratch dirs behind: $leaked")
+    }
+
+  test("scratch dirs: a failed q362 call deletes its shard dir") {
+    def shardRoots() = scratchRoots().filter(_.startsWith("graft-shard"))
+    val before = shardRoots()
+    intercept[Exception](
+      graft.operators.PipelineAudits.shardWrite(spark, "/nonexistent").collect())
+    val leaked = shardRoots() -- before
+    assert(leaked.isEmpty, s"a failed shardWrite left its dir behind: $leaked")
   }
 
   test("q278 stream-static join: ZERO join state — only the aggregate's state operator exists") {

@@ -224,6 +224,50 @@ class UtilSpec extends AnyFunSuite {
     assert(pinSites.length == 1 && pinSites.head.startsWith("StreamRunner.scala"),
       s"micro-batch frames are pinned by StreamRunner.nonEmpty only: $pinSites")
   }
+
+  test("scratch-dir source gate: temp roots and the exit hook are made in Fs only, random names in UniqueName only") {
+    // a temp dir made outside Fs.withTempDir / Fs.tempDirUntilExit can
+    // skip the fsync-then-delete or leak on failure, so each primitive
+    // has one home
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val srcs = scala.util.Using.resource(Files.walk(root)) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    for ((needle, home) <- Seq("createTempDirectory" -> "graft/util/Fs.scala",
+        "addShutdownHook" -> "graft/util/Fs.scala",
+        "randomUUID" -> "graft/util/UniqueName.scala")) {
+      val sites = srcs.flatMap { case (f, src) =>
+        src.split("\n").toList.zipWithIndex.collect {
+          case (line, i) if line.contains(needle) => s"$f:${i + 1}"
+        }
+      }
+      assert(sites.length == 1 && sites.head.startsWith(home + ":"),
+        s"$needle appears once, in $home: $sites")
+    }
+  }
+
+  test("Fs.withTempDir: the root is gone after body returns and after body throws; the exception propagates") {
+    import graft.util.Fs
+    var seen: java.nio.file.Path = null
+    val out = Fs.withTempDir("spec-bracket") { root =>
+      seen = root
+      assert(root.getFileName.toString.startsWith("graft-spec-bracket"))
+      Files.write(Files.createDirectories(root.resolve("a/b")).resolve("f"), Array[Byte](1, 2))
+      42
+    }
+    assert(out == 42)
+    assert(!Files.exists(seen), s"$seen survived a returning body")
+    val boom = intercept[IllegalStateException] {
+      Fs.withTempDir("spec-bracket") { root =>
+        seen = root
+        Files.write(root.resolve("f"), Array[Byte](1))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(boom.getMessage == "boom")
+    assert(!Files.exists(seen), s"$seen survived a throwing body")
+  }
 }
 
 /** Pins.eager must materialize BEFORE returning — the whole point of
@@ -258,6 +302,32 @@ class PinsSpec extends SparkSuite {
     }
     assert(msgs.contains("an unrelated warning"), msgs)
     assert(!msgs.exists(_.contains("was locally checkpointed")), msgs)
+  }
+}
+
+/** [[graft.streaming.StreamRunner.drain]] on queries that run to
+  * completion.
+  */
+class StreamDrainSpec extends SparkSuite {
+  test("drain stops no finished query: several AvailableNow drains log no job-group cancel warning") {
+    import graft.streaming.StreamRunner
+    import spark.implicits._
+    // built before the capture: the first use of the session sets its
+    // log level, which would silence the capture
+    val slices = Seq(Seq(1L, 2L).toDF("x"), Seq(3L).toDF("x"))
+    val msgs = warnings {
+      // the query thread outlives awaitTermination in a good share of
+      // drains, so ten of them would all but surely hit a stop race
+      for (i <- 1 to 10) graft.util.Fs.withTempDir("spec-drain") { root =>
+        val stream = StreamRunner.stageSlices(root, slices).read(spark)
+        val (mode, df) = if (i % 2 == 0) ("append", stream) else ("complete", stream.groupBy("x").count())
+        assert(StreamRunner.toTable(mode, _ => ())(df).count() == 3L)
+      }
+      // the scheduler logs a failed cancel from its event loop: a job
+      // submitted after it runs only once that event is handled
+      spark.range(1).count()
+    }
+    assert(!msgs.exists(_.contains("Failed to cancel job group")), msgs)
   }
 }
 
