@@ -14,6 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - doubles that reach the output are produced by the *same*
   *    operation sequence in both engines, so they are bit-identical
   *    and need no rounding;
+  *  - double sums that reach the output are `graft.functions.Folds`
+  *    folds: 0.0-seeded left folds in a pinned order, replayed by the
+  *    oracle's ordered `list_reduce`;
   *  - content hashes are md5 hex (identical everywhere); the minhash /
   *    winnowing families are integer polynomial hashes mod 2^32 whose
   *    exact fold the oracle reproduces; every top-k ORDER BY carries a

@@ -15,10 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Sequential left fold sum of a double array. */
-  private def asum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, x) => acc + x)
-
   /** dot(a, b) — Σ aᵢ·bᵢ, left to right, as a native codegen'd
     * expression (graft.plans.DotProduct).  Numerically identical to
     * the builtin `dotBuiltin`; ~10× faster on the all-pairs path
@@ -38,10 +34,10 @@ object VectorFunctions {
     * against (identical IEEE op sequence).
     */
   def dotBuiltin(a: Column, b: Column): Column =
-    asum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
+    Folds.sum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
 
   def normBuiltin(a: Column): Column =
-    sqrt(asum(transform(a, x => x.cast("double") * x.cast("double"))))
+    sqrt(Folds.sum(transform(a, x => x.cast("double") * x.cast("double"))))
 
   /** Cosine similarity dot/(|a|·|b|), written as
     * `dot / (sqrt(na) * sqrt(nb))` — keep this exact operation order in

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{Folds, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -936,8 +936,7 @@ object Dedup {
         lit(1.0) / graft.functions.MathFunctions.ln(col("deg").cast("double")))
       .groupBy("x", "y")
       .agg(count(lit(1)).as("n_common"),
-        aggregate(sort_array(collect_list(struct(col("z"), col("contrib")))),
-          lit(0.0), (acc, s) => acc + s.getField("contrib")).as("aa_score"))
+        Folds.orderedSum(col("contrib"), col("z")).as("aa_score"))
     scored
       .join(pairs.select(col("doc_a").as("x"), col("doc_b").as("y"),
           lit(1).as("is_edge")),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.ArgotFlatten
+import graft.functions.{ArgotFlatten, Folds}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -436,8 +436,7 @@ object EventOps {
       .agg(
         max(col("tt")).as("n_transitions"),
         count(lit(1)).as("n_patterns"),
-        aggregate(sort_array(collect_list(struct(col("prev"), col("next"), col("contrib")))),
-          lit(0.0), (acc, x) => acc + x.getField("contrib")).as("entropy_nats"))
+        Folds.orderedSum(col("contrib"), col("prev"), col("next")).as("entropy_nats"))
   }
 
   def retentionCohorts(spark: SparkSession, dir: String): DataFrame = {
@@ -1004,9 +1003,7 @@ object EventOps {
     for (_ <- 1 to iters) {
       v = v.join(p, col("state") === col("prev"))
         .groupBy(col("next"))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("prev"), (col("prob") * col("p")).as("m")))),
-          lit(0.0), (acc, x) => acc + x.getField("m")).as("prob"))
+        .agg(Folds.orderedSum(col("prob") * col("p"), col("prev")).as("prob"))
         .select(col("next").as("state"), col("prob"))
     }
     v.select(col("state").as("event_type"), col("prob").as("stationary_prob"))
@@ -1797,9 +1794,6 @@ object EventOps {
     */
   def markovAttribution(spark: SparkSession, dir: String,
                         iters: Int = 8): DataFrame = {
-    def fold(src: Column, term: Column): Column =
-      aggregate(sort_array(collect_list(struct(src.as("s"), term.as("t")))),
-        lit(0.0), (a, x) => a + x.getField("t"))
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -1854,7 +1848,7 @@ object EventOps {
         .select(col("vv.chain").as("chain"), col("tt.dst").as("dst"),
           col("vv.state").as("s"), (col("vv.v") * col("tt.p")).as("term"))
         .groupBy("chain", "dst")
-        .agg(fold(col("s"), col("term")).as("v"))
+        .agg(Folds.orderedSum(col("term"), col("s")).as("v"))
         .collect()
       v = spark.createDataFrame(
         java.util.Arrays.asList(nkRows.filter(r =>
@@ -1881,7 +1875,7 @@ object EventOps {
         when(col("p_full") === 0.0, lit(null).cast("double"))
           .otherwise(lit(1.0) - col("removal_conv_prob") / col("p_full"))
           .as("removal_effect"))
-    val tot = eff.agg(fold(col("channel"), col("removal_effect")).as("tot"))
+    val tot = eff.agg(Folds.orderedSum(col("removal_effect"), col("channel")).as("tot"))
     eff.crossJoin(broadcast(tot))
       .select(col("channel"), col("full_conv_prob"), col("removal_conv_prob"),
         col("removal_effect"),
@@ -2358,12 +2352,9 @@ object EventOps {
     resid.groupBy("event_type")
       .agg(max(col("n")).as("n_days"), max(col("slope")).as("slope"),
         max(col("icept")).as("intercept"),
-        aggregate(sort_array(collect_list(struct(col("x"), (col("e") * col("e")).as("t")))),
-          lit(0.0), (a, s) => a + s.getField("t")).as("sse"),
-        aggregate(sort_array(collect_list(struct(col("x"),
-            when(col("ep").isNull, lit(0.0))
-              .otherwise((col("e") - col("ep")) * (col("e") - col("ep"))).as("t")))),
-          lit(0.0), (a, s) => a + s.getField("t")).as("ssd"))
+        Folds.orderedSum(col("e") * col("e"), col("x")).as("sse"),
+        Folds.orderedSum(when(col("ep").isNull, lit(0.0))
+          .otherwise((col("e") - col("ep")) * (col("e") - col("ep"))), col("x")).as("ssd"))
       .select(col("event_type"), col("n_days"), col("slope"), col("intercept"),
         col("sse"),
         when(col("sse") === 0.0, lit(null).cast("double"))
@@ -2414,9 +2405,7 @@ object EventOps {
         col("sd48").cast("double") / (lit(48L) * col("m_slots")).cast("double"))
     val grand = byHour.groupBy("event_type")
       .agg(count(lit(1)).as("nh"),
-        aggregate(
-          sort_array(collect_list(struct(col("hour_of_day"), col("seasonal_raw").as("r")))),
-          lit(0.0), (a, s) => a + s.getField("r")).as("srs"))
+        Folds.orderedSum(col("seasonal_raw"), col("hour_of_day")).as("srs"))
       .select(col("event_type"), (col("srs") / col("nh").cast("double")).as("gmean"))
     byHour.join(broadcast(grand), Seq("event_type"))
       .select(col("event_type"), col("hour_of_day"), col("m_slots"),

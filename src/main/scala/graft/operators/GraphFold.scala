@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Folds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,9 +10,9 @@ import org.apache.spark.sql.functions._
   * Why not a plain `sum`: IEEE double addition is not associative, so
   * a shuffle-order-dependent sum cannot be replayed by the DuckDB
   * oracle; the graph family therefore folds each node's neighbor
-  * contributions in a PINNED order.  The original form —
-  * `aggregate(sort_array(collect_list(struct(id, v))), …)` per node —
-  * is bit-replayable but carries a HUB HAZARD: one 10M-degree node
+  * contributions in a PINNED order.  The flat form — one
+  * `graft.functions.Folds.orderedSum(v, id)` per node — is
+  * bit-replayable but carries a HUB HAZARD: one 10M-degree node
   * materializes one 10M-element array in a single row, so per-key
   * memory (not the shuffle) becomes the bound at 100 TB (VERDICT r16).
   *
@@ -47,25 +48,10 @@ object GraphFold {
     * after distinct); the result column is named `out`.
     */
   def segmentedSum(df: DataFrame, key: String, id: Column, v: Column,
-                   out: String, width: Int = 4096): DataFrame = {
-    val foldSum = (arr: Column) =>
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("v"))
+                   out: String, width: Int = 4096): DataFrame =
     df.withColumn("_seg", pmod(id.cast("long"), lit(width.toLong)))
       .groupBy(col(key), col("_seg"))
-      .agg(foldSum(sort_array(collect_list(struct(id.as("id"), v.as("v")))))
-        .as("_part"))
+      .agg(Folds.orderedSum(v, id).as("_part"))
       .groupBy(col(key))
-      .agg(foldSum(sort_array(collect_list(struct(col("_seg").as("id"),
-        col("_part").as("v"))))).as(out))
-  }
-
-  /** The single-level ordered fold the segmented form replaces — kept
-    * for the equivalence spec only (never called from an operator).
-    */
-  private[graft] def flatSum(df: DataFrame, key: String, id: Column,
-                             v: Column, out: String): DataFrame =
-    df.groupBy(col(key))
-      .agg(aggregate(
-        sort_array(collect_list(struct(id.as("id"), v.as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as(out))
+      .agg(Folds.orderedSum(col("_part"), col("_seg")).as(out))
 }

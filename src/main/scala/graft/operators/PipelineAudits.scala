@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Folds
 import graft.functions.TextFunctions._
 import graft.util.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -873,9 +874,7 @@ object PipelineAudits {
     terms.groupBy("source")
       .agg(max(col("n_s")).as("n_docs"),
         count(lit(1)).as("n_bands_used"),
-        aggregate(
-          sort_array(collect_list(struct(col("band"), col("term")))),
-          lit(0.0), (a, x) => a + x.getField("term")).as("psi"))
+        Folds.orderedSum(col("term"), col("band")).as("psi"))
       .crossJoin(broadcast(nBands))
       .select(col("source"), col("n_docs"), col("n_bands_used"),
         (col("n_bands_corpus") - col("n_bands_used")).as("n_empty_bands"),
@@ -1125,9 +1124,6 @@ object PipelineAudits {
         (col("n11") + col("n01")).as("c1"), (col("n10") + col("n00")).as("c0"),
         (col("n11") + col("n10") + col("n01") + col("n00")).as("n"),
         col("n10"), col("n01"), col("n00"))
-    def fold(v: Column): Column =
-      aggregate(sort_array(collect_list(struct(col("stratum").as("s"), v.as("v")))),
-        lit(0.0), (a, x) => a + x.getField("v"))
     val e = (col("r1") * col("c1")).cast("double") / col("n").cast("double")
     // n = 1 ⇒ the hypergeometric variance is exactly 0 (and the raw
     // ratio is 0/0): guard BEFORE the divide — ANSI mode throws on it
@@ -1140,8 +1136,10 @@ object PipelineAudits {
     cells.agg(
       count(lit(1)).as("n_strata"), sum(col("n")).as("n_users"),
       sum(col("n11")).as("sum_obs"),
-      fold(e).as("sum_exp"), fold(v).as("sum_var"),
-      fold(orn).as("or_num"), fold(ord).as("or_den"))
+      Folds.orderedSum(e, col("stratum")).as("sum_exp"),
+      Folds.orderedSum(v, col("stratum")).as("sum_var"),
+      Folds.orderedSum(orn, col("stratum")).as("or_num"),
+      Folds.orderedSum(ord, col("stratum")).as("or_den"))
       .select(col("n_strata"), col("n_users"), col("sum_obs"), col("sum_exp"),
         col("sum_var"), {
           val d = abs(col("sum_obs").cast("double") - col("sum_exp")) - lit(0.5)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Folds
 import graft.plans.MvRegistry
 import graft.util.{Fs, UniqueName}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -2227,9 +2228,7 @@ object Relational {
           / (col("hi_cents") - col("lo_cents") + lit(1L)).cast("double")
           * col("n_rows").cast("double"))
       .groupBy("pred_id", "p_lo", "p_hi")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("bucket").as("id"), col("c").as("v")))),
-        lit(0.0), (a, x) => a + x.getField("v")).as("est_rows"))
+      .agg(Folds.orderedSum(col("c"), col("bucket")).as("est_rows"))
 
   /** Exact per-predicate recount: ONE scan of the value frame,
     * broadcast-NL against the pinned ranges (bounded fan-out).

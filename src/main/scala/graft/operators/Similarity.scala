@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Folds
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -352,9 +353,7 @@ object Similarity {
     val cent = Tables.embeddings(spark, dir)
       .select(col("label"), col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy("label", "dim")
-      .agg((aggregate(
-          sort_array(collect_list(struct(col("vec_id"), col("v").cast("double").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v"))
+      .agg((Folds.orderedSum(col("v").cast("double"), col("vec_id"))
         / count(lit(1)).cast("double")).as("m"))
     val a = cent.toDF("label_a", "dim", "ma")
     val b = cent.toDF("label_b", "dim", "mb")
@@ -362,12 +361,9 @@ object Similarity {
       .filter(col("label_a") < col("label_b"))
       .groupBy("label_a", "label_b")
       .agg(
-        aggregate(sort_array(collect_list(struct(col("dim"), (col("ma") * col("mb")).as("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p")).as("dot"),
-        aggregate(sort_array(collect_list(struct(col("dim"), (col("ma") * col("ma")).as("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p")).as("na"),
-        aggregate(sort_array(collect_list(struct(col("dim"), (col("mb") * col("mb")).as("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p")).as("nb"))
+        Folds.orderedSum(col("ma") * col("mb"), col("dim")).as("dot"),
+        Folds.orderedSum(col("ma") * col("ma"), col("dim")).as("na"),
+        Folds.orderedSum(col("mb") * col("mb"), col("dim")).as("nb"))
       .select(col("label_a"), col("label_b"),
         (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("cos_sim"))
   }
@@ -790,21 +786,15 @@ object Similarity {
       .select(col("label"), col("vec_id"), col("dim"), col("v").cast("double").as("v"))
     val cent = graft.util.Pins.eager(
       ex.groupBy(col("label").as("label_c"), col("dim"))
-        .agg((aggregate(
-            sort_array(collect_list(struct(col("vec_id"), col("v")))),
-            lit(0.0), (acc, x) => acc + x.getField("v"))
+        .agg((Folds.orderedSum(col("v"), col("vec_id"))
           / count(lit(1)).cast("double")).as("m")))
     val cnorm = cent.groupBy("label_c")
-      .agg(sqrt(aggregate(
-        sort_array(collect_list(struct(col("dim"), (col("m") * col("m")).as("p")))),
-        lit(0.0), (acc, x) => acc + x.getField("p"))).as("nc"))
+      .agg(sqrt(Folds.orderedSum(col("m") * col("m"), col("dim"))).as("nc"))
     val vnorm = withNorm(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("nrm").as("nv"))
     val dots = ex.join(broadcast(cent), Seq("dim"))
       .groupBy(col("vec_id"), col("label").as("label_true"), col("label_c"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("dim"), (col("v") * col("m")).as("p")))),
-        lit(0.0), (acc, x) => acc + x.getField("p")).as("dot"))
+      .agg(Folds.orderedSum(col("v") * col("m"), col("dim")).as("dot"))
     val assigned = dots
       .join(broadcast(cnorm), Seq("label_c"))
       .join(vnorm, Seq("vec_id"))
@@ -882,9 +872,7 @@ object Similarity {
           .otherwise(lit(0.0)))
       .groupBy(col("probe_label"))
       .agg(count(lit(1)).as("n_probes"),
-        (aggregate(
-          sort_array(collect_list(struct(col("probe_id"), col("rr")))),
-          lit(0.0), (acc, x) => acc + x.getField("rr"))
+        (Folds.orderedSum(col("rr"), col("probe_id"))
           / count(lit(1)).cast("double")).as("mrr"))
   }
 
@@ -1122,8 +1110,8 @@ object Similarity {
       .join(broadcast(probes), Seq("probe_id"))
       .filter(col("n_label") === col("probe_label"))
       .groupBy("probe_id")
-      .agg(aggregate(sort_array(collect_list(col("rank"))),
-        lit(0.0), (acc, r) => acc + ln2 / ln(r.cast("double") + lit(1.0))).as("dcg"))
+      .agg(Folds.orderedSum(ln2 / ln(col("rank").cast("double") + lit(1.0)), col("rank"))
+        .as("dcg"))
     probes
       .join(broadcast(labelSizes), probes("probe_label") === labelSizes("label"))
       .withColumn("m", least(col("n_label") - 1, lit(k)).cast("int"))
@@ -1138,9 +1126,7 @@ object Similarity {
         when(col("idcg") > 0, col("dcg") / col("idcg")).otherwise(lit(0.0)))
       .groupBy(col("probe_label"))
       .agg(count(lit(1)).as("n_probes"),
-        (aggregate(
-          sort_array(collect_list(struct(col("probe_id"), col("ndcg")))),
-          lit(0.0), (acc, x) => acc + x.getField("ndcg"))
+        (Folds.orderedSum(col("ndcg"), col("probe_id"))
           / count(lit(1)).cast("double")).as("mean_ndcg"))
   }
 
@@ -1169,7 +1155,6 @@ object Similarity {
   def principalComponent(spark: SparkSession, dir: String,
                          dim: Int = 64, iters: Int = 3): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    def fold0(arr: Column): Column = aggregate(arr, lit(0.0), (a, x) => a + x)
     var folded: DataFrame = null
     var v: DataFrame = spark.range(1, dim + 1)
       .select(col("id").cast("int").as("d"), lit(1.0 / math.sqrt(dim.toDouble)).as("vd"))
@@ -1179,7 +1164,7 @@ object Similarity {
         e => e.getField("vd")).as("v"))
       val dots = emb.crossJoin(broadcast(vrow))
         .select(col("vec_id"), col("embedding"),
-          fold0(zip_with(col("embedding"), col("v"), (x, y) => x * y)).as("dt"))
+          Folds.sum(zip_with(col("embedding"), col("v"), (x, y) => x * y)).as("dt"))
       // exact-sum trick for arbitrary doubles: a DECIMAL(38,18) cast
       // of a long-binary double rounds DIFFERENTLY in Spark (exact
       // BigDecimal expansion) and DuckDB (scaled multiply) — measured
@@ -1198,7 +1183,7 @@ object Similarity {
       folded = graft.util.Pins.eager(
         w.agg(sort_array(collect_list(struct(col("d"), col("wd")))).as("ws"))
           .select(col("ws"),
-            sqrt(fold0(transform(col("ws"), e =>
+            sqrt(Folds.sum(transform(col("ws"), e =>
               e.getField("wd") * e.getField("wd")))).as("nrm")))
       v = folded
         .select(posexplode(col("ws")), col("nrm"))
@@ -1302,8 +1287,7 @@ object Similarity {
       .join(docs, col("vec_id") === col("doc_id"))
       .crossJoin(broadcast(vrow))
       .select(col("source"),
-        aggregate(zip_with(col("embedding"), col("v"), (x, y) => x * y),
-          lit(0.0), (a, x) => a + x).as("proj"))
+        dotBuiltin(col("embedding"), col("v")).as("proj"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_vecs"),
         (sum(floor(col("proj") * lit(1.0e9) + lit(0.5)).cast(dec0))
@@ -1338,11 +1322,11 @@ object Similarity {
     val xd = (x: Column) => x.cast("double")
     val scale = aggregate(transform(col("embedding"), x => abs(xd(x))),
       lit(0.0), (a, x) => greatest(a, x)) / lit(qmax)
-    val sqerr = aggregate(transform(col("embedding"), { x =>
+    val sqerr = Folds.sum(transform(col("embedding"), { x =>
       val q = least(greatest(floor(xd(x) / col("scale") + lit(0.5)), lit(-qmax)), lit(qmax))
       val dq = q * col("scale")
       (xd(x) - dq) * (xd(x) - dq)
-    }), lit(0.0), (a, x) => a + x)
+    }))
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("scale", scale)
@@ -1388,7 +1372,6 @@ object Similarity {
     */
   def jlDistortion(spark: SparkSession, dir: String,
                    m: Int = 16, maxOff: Int = 5): DataFrame = {
-    val fold0 = (arr: Column) => aggregate(arr, lit(0.0), (a, x) => a + x)
     val sgn = spark.range(0, m)
       .select(col("id").cast("int").as("j"),
         transform(sequence(lit(0), lit(63)), d =>
@@ -1405,7 +1388,7 @@ object Similarity {
       .crossJoin(broadcast(sgnRow))
       .select(col("vec_id"), col("embedding"),
         transform(col("sm"), sj =>
-          fold0(zip_with(col("embedding"), sj, (x, y) => x * y))).as("proj")))
+          Folds.sum(zip_with(col("embedding"), sj, (x, y) => x * y))).as("proj")))
     val a = proj.select(col("vec_id").as("vec_a"),
       col("embedding").as("ea"), col("proj").as("pa"))
       .withColumn("vec_b", explode(sequence(col("vec_a") + 1, col("vec_a") + maxOff)))
@@ -1415,10 +1398,10 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"),
         // cast BEFORE subtracting: a float-width subtract would round
         // differently from the oracle's double arithmetic
-        fold0(zip_with(col("ea"), col("eb"), (x, y) =>
+        Folds.sum(zip_with(col("ea"), col("eb"), (x, y) =>
           (x.cast("double") - y.cast("double"))
             * (x.cast("double") - y.cast("double")))).as("exact_d2"),
-        fold0(zip_with(col("pa"), col("pb"),
+        Folds.sum(zip_with(col("pa"), col("pb"),
           (x, y) => (x - y) * (x - y))).as("proj_d2"))
       .withColumn("ratio",
         when(col("exact_d2") === 0.0, lit(null).cast("double"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Folds
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -431,8 +432,7 @@ object TextAnalysis {
     scored.groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_bigrams"),
-        aggregate(sort_array(collect_list(struct(col("pos"), col("logp")))),
-          lit(0.0), (acc, x) => acc + x.getField("logp")).as("total_logp"))
+        Folds.orderedSum(col("logp"), col("pos")).as("total_logp"))
       .select(col("doc_id"), col("n_bigrams"), col("total_logp"),
         (col("total_logp") / col("n_bigrams").cast("double")).as("avg_logp"))
   }
@@ -469,8 +469,7 @@ object TextAnalysis {
     scored.groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_tokens"),
-        aggregate(sort_array(collect_list(struct(col("pos"), col("logp")))),
-          lit(0.0), (acc, x) => acc + x.getField("logp")).as("total_logp"))
+        Folds.orderedSum(col("logp"), col("pos")).as("total_logp"))
       .select(col("doc_id"), col("n_tokens"), col("total_logp"),
         (-(col("total_logp") / col("n_tokens").cast("double"))).as("surprisal_nats"))
   }
@@ -529,17 +528,15 @@ object TextAnalysis {
     val top = tf.groupByKey(_.source)
       .agg(new TopTokensByFreq(m).toColumn.name("topm"))
       .toDF("source", "topm")
-    def foldSum(values: Column): Column =
-      aggregate(values, lit(0.0), (acc, x) => acc + x)
     top
       .withColumn("n", size(col("topm")).cast("long"))
-      .withColumn("sx", foldSum(transform(col("topm"),
+      .withColumn("sx", Folds.sum(transform(col("topm"),
         (_, i) => ln((i + lit(1)).cast("double")))))
-      .withColumn("sy", foldSum(transform(col("topm"),
+      .withColumn("sy", Folds.sum(transform(col("topm"),
         e => ln(e.getField("_1").cast("double")))))
-      .withColumn("sxy", foldSum(transform(col("topm"),
+      .withColumn("sxy", Folds.sum(transform(col("topm"),
         (e, i) => ln((i + lit(1)).cast("double")) * ln(e.getField("_1").cast("double")))))
-      .withColumn("sxx", foldSum(transform(col("topm"),
+      .withColumn("sxx", Folds.sum(transform(col("topm"),
         (_, i) => ln((i + lit(1)).cast("double")) * ln((i + lit(1)).cast("double")))))
       .withColumn("zipf_slope",
         (col("n").cast("double") * col("sxy") - col("sx") * col("sy"))
@@ -645,8 +642,7 @@ object TextAnalysis {
     cand.groupBy("probe_id", "doc_id")
       .agg(
         count(lit(1)).as("n_hits"),
-        aggregate(sort_array(collect_list(struct(col("token"), col("s")))),
-          lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
+        Folds.orderedSum(col("s"), col("token")).as("score"))
   }
 
   /** Per-source distribution drift (q89): KL(P_source ‖ P_corpus) over
@@ -883,8 +879,7 @@ object TextAnalysis {
     // norms use EVERY token (the vector is the vector); only the pair
     // join is df-capped
     val norms = w.groupBy("doc_id")
-      .agg(sqrt(aggregate(sort_array(collect_list(struct(col("token"), (col("w") * col("w")).as("w2")))),
-        lit(0.0), (acc, x) => acc + x.getField("w2"))).as("nrm"))
+      .agg(sqrt(Folds.orderedSum(col("w") * col("w"), col("token"))).as("nrm"))
     val idx = w.filter(col("df") <= maxDf)
     val pairs = idx.toDF("doc_a", "token", "w_a", "df_a")
       .join(idx.toDF("doc_b", "token_b", "w_b", "df_b"),
@@ -892,8 +887,7 @@ object TextAnalysis {
       .groupBy("doc_a", "doc_b")
       .agg(
         count(lit(1)).as("n_shared"),
-        aggregate(sort_array(collect_list(struct(col("token"), (col("w_a") * col("w_b")).as("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p")).as("dot"))
+        Folds.orderedSum(col("w_a") * col("w_b"), col("token")).as("dot"))
     pairs
       .join(norms.toDF("doc_a", "n_a"), Seq("doc_a"))
       .join(norms.toDF("doc_b", "n_b"), Seq("doc_b"))
@@ -970,8 +964,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_terms"),
         max(col("t_src")).as("n_tokens"),
-        aggregate(sort_array(collect_list(struct(col("token"), col("contrib")))),
-          lit(0.0), (acc, x) => acc + x.getField("contrib")).as("kl_nats"))
+        Folds.orderedSum(col("contrib"), col("token")).as("kl_nats"))
   }
 
   /** Pairwise Hellinger distance between sources (q128): the
@@ -1014,9 +1007,7 @@ object TextAnalysis {
       .groupBy("source_a", "source_b")
       .agg(
         count(lit(1)).as("n_shared_terms"),
-        aggregate(sort_array(collect_list(struct(col("token"),
-          sqrt(col("pa") * col("pb")).as("s")))),
-          lit(0.0), (acc, x) => acc + x.getField("s")).as("bc_affinity"))
+        Folds.orderedSum(sqrt(col("pa") * col("pb")), col("token")).as("bc_affinity"))
       .select(col("source_a"), col("source_b"), col("n_shared_terms"),
         col("bc_affinity"),
         // BC ≤ 1 mathematically, but the rounded sum can sit ulps
@@ -1145,14 +1136,10 @@ object TextAnalysis {
       .groupBy("source")
       .agg(
         count(lit(1)).as("np"),
-        aggregate(sort_array(collect_list(struct(col("decile"), col("x")))),
-          lit(0.0), (acc, e) => acc + e.getField("x")).as("sx"),
-        aggregate(sort_array(collect_list(struct(col("decile"), col("y")))),
-          lit(0.0), (acc, e) => acc + e.getField("y")).as("sy"),
-        aggregate(sort_array(collect_list(struct(col("decile"), (col("x") * col("y")).as("p")))),
-          lit(0.0), (acc, e) => acc + e.getField("p")).as("sxy"),
-        aggregate(sort_array(collect_list(struct(col("decile"), (col("x") * col("x")).as("p")))),
-          lit(0.0), (acc, e) => acc + e.getField("p")).as("sxx"))
+        Folds.orderedSum(col("x"), col("decile")).as("sx"),
+        Folds.orderedSum(col("y"), col("decile")).as("sy"),
+        Folds.orderedSum(col("x") * col("y"), col("decile")).as("sxy"),
+        Folds.orderedSum(col("x") * col("x"), col("decile")).as("sxx"))
       .select(col("source"),
         ((col("np").cast("double") * col("sxy") - col("sx") * col("sy"))
           / (col("np").cast("double") * col("sxx") - col("sx") * col("sx"))).as("heaps_b"))
@@ -1699,10 +1686,7 @@ object TextAnalysis {
       .filter(col("split_a") < col("split_b"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_shared_terms"),
-        aggregate(
-          sort_array(collect_list(struct(col("token"),
-            sqrt(col("pa") * col("pb")).as("s")))),
-          lit(0.0), (acc, x) => acc + x.getField("s")).as("bc_affinity"))
+        Folds.orderedSum(sqrt(col("pa") * col("pb")), col("token")).as("bc_affinity"))
       .select(col("split_a"), col("split_b"), col("n_shared_terms"),
         col("bc_affinity"),
         sqrt(greatest(lit(0.0), lit(1.0) - col("bc_affinity"))).as("hellinger"))
@@ -1785,10 +1769,7 @@ object TextAnalysis {
         (graft.functions.MathFunctions.ln(col("n_chars").cast("double")) -
           graft.functions.MathFunctions.ln(col("x_k1").cast("double"))).as("contrib"))
       .groupBy("x_k1")
-      .agg((aggregate(
-          sort_array(collect_list(struct(col("rn"), col("contrib")))),
-          lit(0.0), (acc, x) => acc + x.getField("contrib"))
-        / lit(k.toDouble)).as("hill"))
+      .agg((Folds.orderedSum(col("contrib"), col("rn")) / lit(k.toDouble)).as("hill"))
     hill.select(lit(k).as("k"), col("x_k1"), col("hill"),
       when(col("hill") > 0, lit(1.0) / col("hill")).otherwise(lit(0.0)).as("alpha"))
   }
@@ -1962,17 +1943,12 @@ object TextAnalysis {
           ((col("ct") - col("cj")).cast("double") /
             (col("tt") - col("tj")).cast("double")).as("theta_j")))
     val bar = thetas.groupBy("j", "ct", "tt")
-      .agg((aggregate(
-          sort_array(collect_list(struct(col("source"), col("theta_j")))),
-          lit(0.0), (acc, x) => acc + x.getField("theta_j"))
+      .agg((Folds.orderedSum(col("theta_j"), col("source"))
         / col("j").cast("double")).as("theta_bar"))
     thetas.crossJoin(broadcast(bar.select("theta_bar")))
       .groupBy("j", "ct", "tt", "theta_bar")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("source"),
-          ((col("theta_j") - col("theta_bar")) *
-            (col("theta_j") - col("theta_bar"))).as("d2")))),
-        lit(0.0), (acc, x) => acc + x.getField("d2")).as("ss"))
+      .agg(Folds.orderedSum((col("theta_j") - col("theta_bar")) *
+        (col("theta_j") - col("theta_bar")), col("source")).as("ss"))
       .select(col("j").as("n_sources"),
         (col("ct") / col("tt")).as("theta"),
         col("theta_bar"),
@@ -2197,11 +2173,8 @@ object TextAnalysis {
     val sst = col("q").cast("double") - (col("s") * col("s")).cast("double") / nD
     cells.crossJoin(broadcast(tot))
       .groupBy("k", "n", "s", "q")
-      .agg(aggregate(
-          sort_array(collect_list(struct(col("source"),
-            ((col("sg") * col("sg")).cast("double") /
-              col("ng").cast("double")).as("term")))),
-          lit(0.0), (acc, x) => acc + x.getField("term")).as("fold"))
+      .agg(Folds.orderedSum((col("sg") * col("sg")).cast("double") /
+        col("ng").cast("double"), col("source")).as("fold"))
       .select(col("k").as("n_sources"), col("n").as("n_docs"),
         sb.as("ss_between"), sw.as("ss_within"),
         ((sb / (col("k") - lit(1L)).cast("double")) /
@@ -2368,8 +2341,7 @@ object TextAnalysis {
       .groupBy("doc_id", "true_lang", "lang")
       .agg(
         count(lit(1)).as("n_tokens"),
-        aggregate(sort_array(collect_list(struct(col("pos"), col("logp")))),
-          lit(0.0), (acc, x) => acc + x.getField("logp")).as("total_logp"),
+        Folds.orderedSum(col("logp"), col("pos")).as("total_logp"),
         first(col("nl")).as("nl"))
       .crossJoin(broadcast(n))
       .withColumn("joint",
@@ -2896,10 +2868,8 @@ object TextAnalysis {
       .withColumn("nv", col("n_docs").cast("double") * col("var_y")))
     val tot = st.agg(
       sum(col("n_docs")).as("n_total"),
-      aggregate(sort_array(collect_list(struct(col("source"), col("ns")))),
-        lit(0.0), (a, x) => a + x.getField("ns")).as("t_ns"),
-      aggregate(sort_array(collect_list(struct(col("source"), col("nv")))),
-        lit(0.0), (a, x) => a + x.getField("nv")).as("t_nv"))
+      Folds.orderedSum(col("ns"), col("source")).as("t_ns"),
+      Folds.orderedSum(col("nv"), col("source")).as("t_nv"))
     st.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"),
         (col("sy").cast("double") / col("n_docs").cast("double")).as("mean_chars"),
@@ -3359,9 +3329,7 @@ object TextAnalysis {
         greatest(col("ra"), col("rb")).as("m"))
     val scored = matches.groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_overlap"),
-        aggregate(sort_array(collect_list(struct(col("token"),
-            element_at(wArr, col("m")).as("w")))),
-          lit(0.0), (a, x) => a + x.getField("w")).as("rbo"))
+        Folds.orderedSum(element_at(wArr, col("m")), col("token")).as("rbo"))
     val srcs = tops.select(col("source")).distinct()
     val grid = srcs.select(col("source").as("source_a"))
       .join(srcs.select(col("source").as("source_b")),
@@ -3401,10 +3369,8 @@ object TextAnalysis {
     r.filter(col("rel") === 1L)
       .groupBy("source")
       .agg(count(lit(1)).as("n_pos"),
-        aggregate(
-          sort_array(collect_list(struct(col("rk"),
-            (col("cum").cast("double") / col("rk").cast("double")).as("p")))),
-          lit(0.0), (a, x) => a + x.getField("p")).as("sum_p"))
+        Folds.orderedSum(col("cum").cast("double") / col("rk").cast("double"), col("rk"))
+          .as("sum_p"))
       .select(col("source"), col("n_pos"),
         (col("sum_p") / col("n_pos").cast("double")).as("avg_precision"))
       .orderBy("source")

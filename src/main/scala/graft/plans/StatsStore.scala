@@ -133,9 +133,8 @@ object StatsStore {
     * re-running ANALYZE.
     */
   def readColumnStats(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(
-      artifactPath(spark, storeDir, "column_stats")
-        .getOrElse(s"$storeDir/column_stats"))
+    readArtifact(spark, storeDir, "column_stats").getOrElse(
+      throw new java.io.FileNotFoundException(s"no column_stats artifact under $storeDir"))
 
   /** The q331 equi-depth histogram as its own artifact (q364).  Kept
     * OUT of [[publish]] deliberately: the histogram is the one
@@ -170,32 +169,32 @@ object StatsStore {
 
   /** Every published artifact under `storeDir` whose BASE name matches
     * `baseRe` (a regex, e.g. `"epoch-\\d+"`), resolved to its SERVING
-    * directory — the max `-v{N}` version; a legacy unversioned dir
-    * counts as version 0 — keyed by base name.  This is the one
-    * reader-side resolution rule of the crash-safe publish below:
-    * whatever mix of versions a crash left behind, the newest complete
-    * one serves.
+    * directory — the max `-v{N}` version — keyed by base name.  This
+    * is the one reader-side resolution rule of the crash-safe publish
+    * below: whatever mix of versions a crash left behind, the newest
+    * complete one serves.
     */
   def artifactDirs(spark: SparkSession, storeDir: String,
-      baseRe: String): Map[String, String] = {
+      baseRe: String): Map[String, String] =
+    versions(spark, storeDir, baseRe).groupBy(_._1).map { case (b, vs) =>
+      b -> new org.apache.hadoop.fs.Path(storeDir, s"$b-v${vs.map(_._2).max}").toString
+    }
+
+  /** Every `base-v{N}` entry under `storeDir` whose base matches
+    * `baseRe`, as (base, N) pairs; none when `storeDir` is absent.
+    */
+  private def versions(spark: SparkSession, storeDir: String,
+      baseRe: String): Seq[(String, Int)] = {
     import org.apache.hadoop.fs.Path
     val base = new Path(storeDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Map.empty
     // the caller's regex may hold groups of its own: the version is
     // the LAST group
     val vRe = s"($baseRe)-v(\\d+)".r
-    val lRe = baseRe.r
-    fs.listStatus(base).iterator.map(_.getPath.getName)
-      .flatMap {
-        case vRe(b, more @ _*) => Some((b, more.last.toInt))
-        case n @ lRe(_*) => Some((n, 0))
-        case _ => None
-      }.toSeq
-      .groupBy(_._1).map { case (b, vs) =>
-        val mx = vs.iterator.map(_._2).max
-        b -> new Path(base, if (mx == 0) b else s"$b-v$mx").toString
-      }
+    if (!fs.exists(base)) Seq.empty
+    else fs.listStatus(base).iterator.map(_.getPath.getName).collect {
+      case vRe(b, more @ _*) => (b, more.last.toInt)
+    }.toSeq
   }
 
   /** The serving directory for one exact artifact name, or None. */
@@ -216,8 +215,8 @@ object StatsStore {
     * (VERDICT r20 #2, three-round carry): write to a hidden temp dir,
     * rename it to the NEXT `name-v{N}` version (one atomic rename),
     * and only THEN drop the versions older than the previous newest
-    * one (a legacy unversioned dir counts as version 0) — the q372
-    * numeric-epoch discipline applied to every artifact.  The old
+    * one — the q372 numeric-epoch discipline applied to every
+    * artifact.  The old
     * delete-then-rename form had a window where a crash left NO
     * artifact at all; here a crash before the rename leaves the
     * previous version serving, and a crash after it leaves both
@@ -231,16 +230,8 @@ object StatsStore {
       name: String): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = df.sparkSession
-    val base = new Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vRe = (java.util.regex.Pattern.quote(name) + "-v(\\d+)").r
-    def versions(): Seq[Int] =
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).iterator.map(_.getPath.getName).flatMap {
-        case vRe(v) => Some(v.toInt)
-        case _ => None
-      }.toSeq
-    val old = versions()
+    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = versions(spark, storeDir, java.util.regex.Pattern.quote(name)).map(_._2)
     val prev = old.maxOption.getOrElse(0)
     val tmpDir = new Path(storeDir, s".tmp-$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
@@ -250,7 +241,5 @@ object StatsStore {
         s"cannot publish stats artifact: $tmpDir -> $finalDir")
     // the new version is visible from here on — cleanup is best-effort
     old.filter(_ < prev).foreach(v => fs.delete(new Path(storeDir, s"$name-v$v"), true))
-    val legacy = new Path(storeDir, name)
-    if (prev > 0 && fs.exists(legacy)) { fs.delete(legacy, true); () }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import graft.functions.TextFunctions
+import graft.functions.Folds
 import graft.util.Harness.planNodes
 import org.apache.spark.sql.functions._
 
@@ -96,7 +96,7 @@ class Batch23Spec extends SparkSuite {
     val df = rows.toDF("key", "id", "v")
     def m(out: org.apache.spark.sql.DataFrame): Map[Long, Double] =
       out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val flat = m(GraphFold.flatSum(df, "key", col("id"), col("v"), "s"))
+    val flat = m(df.groupBy("key").agg(Folds.orderedSum(col("v"), col("id"))))
     // width 7: the hub spreads over all 7 residue segments unevenly
     val seg7 = m(GraphFold.segmentedSum(df, "key", col("id"), col("v"), "s", 7))
     assert(seg7 == flat, "segmented fold replays the flat ordered fold exactly")
@@ -119,6 +119,35 @@ class Batch23Spec extends SparkSuite {
       n.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec] ||
         n.isInstanceOf[org.apache.spark.sql.execution.SortExec]),
       "residue segmentation needs neither a window nor a sort")
+  }
+
+  test("Folds.orderedSum: the same bits at 1 and 4 partitions, equal to a driver fold in (order, v) order") {
+    import spark.implicits._
+    // ties on the order key (o) and 1e16-scale cancellations: each
+    // group's sum depends on the order its rows are added in
+    val rows = Seq((1L, 1L, -1e16), (1L, 0L, 1e16), (1L, 0L, 1.0), (1L, 1L, 1.0),
+      (1L, 2L, 1.0), (2L, 5L, 1.0), (2L, 5L, -1e16), (2L, 3L, 1e16), (2L, 3L, 0.5))
+    def pinned(k: Long): Double =
+      rows.filter(_._1 == k).sortBy(r => (r._2, r._3)).foldLeft(0.0)(_ + _._3)
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    for (k <- Seq(1L, 2L))
+      assert(bits(rows.filter(_._1 == k).foldLeft(0.0)(_ + _._3)) != bits(pinned(k)),
+        s"key $k: input order and pinned order give different sums")
+    val df = rows.toDF("k", "o", "v")
+    for (parts <- Seq(1, 4); input <- Seq(df, df.orderBy(col("v").desc))) {
+      val got = input.repartition(parts).groupBy("k")
+        .agg(Folds.orderedSum(col("v"), col("o")).as("s"))
+        .collect().map(r => r.getLong(0) -> bits(r.getDouble(1))).toMap
+      assert(got == Map(1L -> bits(pinned(1L)), 2L -> bits(pinned(2L))), s"$parts partitions")
+    }
+  }
+
+  test("Folds.sum equals a driver foldLeft(0.0)(_ + _) over the array") {
+    import spark.implicits._
+    val arrs = Seq(Seq(1e16, 1.0, -1e16, 1.0), Seq(0.1, 0.2, 0.3), Seq.empty[Double])
+    val got = arrs.toDF("a").select(Folds.sum(col("a"))).collect().map(_.getDouble(0))
+    assert(got.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+      arrs.map(a => java.lang.Double.doubleToRawLongBits(a.foldLeft(0.0)(_ + _))))
   }
 
   test("q334/q337 plan shape: content equi-joins, never all-pairs; keyed windows; gram exchange reused") {

@@ -413,23 +413,6 @@ class Batch28Spec extends SparkSuite {
       assert(served() == 4L)
       assert(leftovers() == Seq("probe-v3", "probe-v4"),
         s"N-1 gone after the next publish: ${leftovers()}")
-      // migration: a legacy UNVERSIONED dir (pre-r22 store) serves when
-      // no versioned dir exists, and a republish replaces it
-      val legacyStore = java.nio.file.Files.createTempDirectory("graft-spec-legacy")
-      try {
-        spark.range(1).select(lit(9L).as("payload"))
-          .coalesce(1).write.parquet(s"$legacyStore/probe")
-        assert(spark.read.parquet(graft.plans.StatsStore
-          .artifactPath(spark, legacyStore.toString, "probe").get)
-          .head().getLong(0) == 9L, "legacy unversioned artifact serves")
-        def republish(v: Long): Unit = graft.plans.StatsStore.publishNamed(
-          spark.range(1).select(lit(v).as("payload")), legacyStore.toString, "probe")
-        val legacy = new java.io.File(legacyStore.toFile, "probe")
-        republish(10L)
-        assert(legacy.exists(), "the legacy dir is version 0: kept as N-1")
-        republish(11L)
-        assert(!legacy.exists(), "legacy dir swept by the second versioned republish")
-      } finally graft.util.Fs.deleteRecursively(legacyStore)
     } finally graft.util.Fs.deleteRecursively(store)
   }
 
@@ -459,10 +442,9 @@ class Batch28Spec extends SparkSuite {
       for (re <- Seq("(probe)", "(pro)(be)", "(p)(r)obe"))
         assert(dirs(re) == want, s"baseRe $re")
       assert(dirs("probe|other").keySet == Set("probe", "other"))
-      // a legacy unversioned dir alone serves as version 0
-      new java.io.File(store.toFile, "legacy").mkdirs()
-      assert(dirs("(leg)acy") == Map("legacy" ->
-        new org.apache.hadoop.fs.Path(store.toString, "legacy").toString))
+      // a bare unversioned dir is no artifact: publishes write only `-vN`
+      new java.io.File(store.toFile, "bare").mkdirs()
+      assert(dirs("(ba)re").isEmpty)
     } finally graft.util.Fs.deleteRecursively(store)
   }
 

@@ -30,6 +30,9 @@ abstract class SparkSuite extends AnyFunSuite {
     * root logger at WARN for the duration.
     */
   protected def warnings(body: => Unit): Seq[String] = {
+    // the session's first use sets the log level to ERROR: inside the
+    // capture that would silence it
+    locally(spark)
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender

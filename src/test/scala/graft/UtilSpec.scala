@@ -229,11 +229,7 @@ class UtilSpec extends AnyFunSuite {
     // a temp dir made outside Fs.withTempDir / Fs.tempDirUntilExit can
     // skip the fsync-then-delete or leak on failure, so each primitive
     // has one home
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val srcs = scala.util.Using.resource(Files.walk(root)) {
-      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    }.map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    val srcs = mainSources()
     for ((needle, home) <- Seq("createTempDirectory" -> "graft/util/Fs.scala",
         "addShutdownHook" -> "graft/util/Fs.scala",
         "randomUUID" -> "graft/util/UniqueName.scala")) {
@@ -245,6 +241,33 @@ class UtilSpec extends AnyFunSuite {
       assert(sites.length == 1 && sites.head.startsWith(home + ":"),
         s"$needle appears once, in $home: $sites")
     }
+  }
+
+  test("ordered-fold source gate: every pinned-order double sum is built by Folds") {
+    // a hand-written fold can drift from the order the oracle replays,
+    // so the rule has one home; the oracle SQL text is exempt
+    val ordered = """aggregate\(\s*sort_array\(collect_list\(""".r
+    val plain = """lit\(0\.0\),\s*\((\w+),\s*(\w+)\)\s*=>\s*\1\s*\+\s*\2\)""".r
+    val home = "graft/functions/Folds.scala"
+    def sites(f: String, src: String): Seq[String] =
+      (ordered.findAllMatchIn(src) ++ plain.findAllMatchIn(src))
+        .map(m => s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}").toSeq
+    val srcs = mainSources()
+    val offenders = srcs.filter { case (f, _) => f != home && !f.matches("graft/Oracles.*\\.scala") }
+      .flatMap { case (f, src) => sites(f, src) }
+    assert(offenders.isEmpty, s"ordered or plain double folds outside Folds: $offenders")
+    val folds = srcs.collect { case (`home`, src) => src }
+    assert(folds.length == 1 && sites(home, folds.head).length == 2,
+      "both patterns match their one home")
+  }
+
+  /** Every main-source file, keyed by its path under src/main/scala. */
+  private def mainSources(): List[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    scala.util.Using.resource(Files.walk(root)) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
   }
 
   test("Fs.withTempDir: the root is gone after body returns and after body throws; the exception propagates") {
@@ -312,8 +335,6 @@ class StreamDrainSpec extends SparkSuite {
   test("drain stops no finished query: several AvailableNow drains log no job-group cancel warning") {
     import graft.streaming.StreamRunner
     import spark.implicits._
-    // built before the capture: the first use of the session sets its
-    // log level, which would silence the capture
     val slices = Seq(Seq(1L, 2L).toDF("x"), Seq(3L).toDF("x"))
     val msgs = warnings {
       // the query thread outlives awaitTermination in a good share of
@@ -376,4 +397,15 @@ class ErrorCollectorSpec extends SparkSuite {
     assert(ec.report.size == 3, ec.report)
   }
 
+}
+
+/** [[SparkSuite.warnings]] itself. */
+class WarningsSpec extends SparkSuite {
+  test("warnings captures a WARN logged by a body that is the session's first use") {
+    val msgs = warnings {
+      spark.range(1).count()
+      org.apache.logging.log4j.LogManager.getLogger("graft.spec").warn("probe")
+    }
+    assert(msgs.contains("probe"), msgs)
+  }
 }
